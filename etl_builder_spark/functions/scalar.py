@@ -674,12 +674,6 @@ def fn_iso_week_from_scratch(spark, sf_dir):
 
 @register(
     "fn_uuid3_deterministic",
-    # declared=9, not 10: this operator has existed since round 9 as
-    # fn_uuid5_deterministic; the round-10 rename (DuckDB 1.0 lacks
-    # sha1, so the MD5 body was relabeled to the RFC 4122 v3 name it
-    # actually implements) must carry the original backlog seniority
-    # rather than reset it (ADVICE r10).
-    declared=9,
     oracle="""
         WITH h AS (
             SELECT o_orderkey,

@@ -154,7 +154,6 @@ def _bigram_udtf():
         FROM i
     """,
     tags=("K4", "TEXT-ngram"),
-    declared=10,
 )
 def udtf_ngram_explode(spark, sf_dir):
     """Table-function n-gram exploder (SURVEY §2 K4, VERDICT r9 item

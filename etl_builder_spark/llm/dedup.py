@@ -1277,7 +1277,6 @@ def dedup_cluster_size_histogram(spark, sf_dir):
         ORDER BY n_eq
     """,
     tags=("I5-calibration",),
-    declared=10,
 )
 def sketch_minhash_calibration(spark, sf_dir):
     """MinHash estimator-accuracy census — the calibration check every

@@ -32,12 +32,14 @@ and ADC top-k recall vs exact cosine.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_builder_spark.llm.similarity import _dbl
 from etl_builder_spark.registry import register
-from etl_builder_spark.session import load_table
+from etl_builder_spark.session import file_version, load_table
 
 #: subspaces (64-dim fixture → 8 dims each) and codes per subspace.
 #: m=8 measured recall@10 = 0.30 vs 0.16 at m=4 on the synthetic
@@ -46,11 +48,14 @@ from etl_builder_spark.session import load_table
 M_SUBSPACES = 8
 K_CODES = 16
 
-#: Trained-codebook memo: (sf_dir, m, k, seed) → collected m·k rows.
-#: The collect() is a model artifact the size of KMeans.clusterCenters
-#: (128 rows here), not a data-path collect; at 100 TB the equivalent
-#: is "train on a sample, write the codebook table, broadcast it".
-_CODEBOOK_CACHE: dict[tuple[str, int, int, int], list[tuple[int, int, list[float]]]] = {}
+#: Trained-codebook memo: (sf_dir, embeddings mtime, m, k, seed) →
+#: collected m·k rows.  The mtime (``session.file_version``) makes an
+#: embeddings file rewritten at the same path retrain instead of serving
+#: the old codebook.  The collect() is a model artifact the size of
+#: KMeans.clusterCenters (128 rows here), not a data-path collect; at
+#: 100 TB the equivalent is "train on a sample, write the codebook
+#: table, broadcast it".
+_CODEBOOK_CACHE: dict[tuple[str, int, int, int, int], list[tuple[int, int, list[float]]]] = {}
 
 
 def train_pq_codebooks(
@@ -101,11 +106,12 @@ def corpus_codebook(
     spark: SparkSession, sf_dir: str, m: int = M_SUBSPACES, k: int = K_CODES, seed: int = 42
 ) -> DataFrame:
     """The embeddings-corpus codebook, trained at most once per
-    (sf_dir, m, k, seed) per process and rebuilt from the memoized
-    m·k rows afterwards — so a matrix run pays ONE KMeans pass for all
-    three PQ queries.  At scale this memo is a persisted codebook
-    table; re-training per query would be the anti-pattern."""
-    key = (str(sf_dir), m, k, seed)
+    (sf_dir, embeddings file version, m, k, seed) per process and
+    rebuilt from the memoized m·k rows afterwards — so a matrix run pays
+    ONE KMeans pass for all three PQ queries.  At scale this memo is a
+    persisted codebook table; re-training per query would be the
+    anti-pattern."""
+    key = (str(sf_dir), file_version(os.path.join(sf_dir, "embeddings.parquet")), m, k, seed)
     if key not in _CODEBOOK_CACHE:
         e = load_table(spark, sf_dir, "embeddings").select("vec_id", _dbl().alias("v"))
         cb = train_pq_codebooks(e, m=m, k=k, seed=seed)
@@ -390,8 +396,7 @@ def _ivfpq_topk(spark: SparkSession, sf_dir: str, cb: DataFrame | None = None) -
     unpersist its own inputs, so the cache is left to the session
     (ADVICE r6): DataFrame.persist() defaults to MEMORY_AND_DISK_DESER
     and identical lineages dedupe in the CacheManager, so long-lived
-    multi-query sessions spill rather than OOM; bench.py clearCache()s
-    after its matrix."""
+    multi-query sessions spill rather than OOM."""
     from etl_builder_spark.llm.ivf import IVF_SEED_LO, IVF_SEED_HI
     from etl_builder_spark.llm.similarity import cosine_sql, dot_sql, norm_sql
 

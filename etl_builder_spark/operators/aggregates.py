@@ -1855,7 +1855,7 @@ def agg_winsorized_mean(spark, sf_dir):
     distinct, so the per-distinct-value frame costs more hash
     aggregation than the 3-partition sort it saves.  At true scale
     the sort is the bottleneck and that recipe (recorded in
-    OPTIMIZATION_r16.md) is the escape hatch."""
+    OPTIMIZATION_r16.md, in git history) is the escape hatch."""
     from pyspark.sql import Window
 
     li = load_table(spark, sf_dir, "lineitem").where(

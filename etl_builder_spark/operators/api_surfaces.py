@@ -44,7 +44,6 @@ from etl_builder_spark.session import load_table, register_views
         FROM per
     """,
     tags=("API-spark4", "reshape"),
-    declared=11,
     dynamic_schema=True,  # transposed column set = the region names present
 )
 def df_transpose_region_census(spark, sf_dir):
@@ -93,7 +92,6 @@ def df_transpose_region_census(spark, sf_dir):
         GROUP BY o_orderpriority
     """,
     tags=("SQL-api", "parameterized"),
-    declared=11,
 )
 def sql_parameterized_args(spark, sf_dir):
     """Parameterized SQL — ``spark.sql(text, args={...})`` with named
@@ -144,7 +142,6 @@ def sql_parameterized_args(spark, sf_dir):
         ORDER BY l_returnflag
     """,
     tags=("SQL-api", "pipe-syntax"),
-    declared=11,
 )
 def sql_pipe_syntax(spark, sf_dir):
     """SQL PIPE syntax (Spark 4.0's ``|>`` operators, SIGMOD'24
@@ -191,7 +188,6 @@ def sql_pipe_syntax(spark, sf_dir):
         FROM mixed
     """,
     tags=("H-string", "collation"),
-    declared=11,
 )
 def fn_string_collation(spark, sf_dir):
     """String COLLATION (Spark 4.0): comparison semantics as a TYPE
@@ -238,7 +234,6 @@ def fn_string_collation(spark, sf_dir):
         ) t
     """,
     tags=("C-lateral", "API-spark4"),
-    declared=11,
 )
 def join_lateral_api(spark, sf_dir):
     """``DataFrame.lateralJoin`` (Spark 4.0) — the per-row-subquery
@@ -274,7 +269,6 @@ def join_lateral_api(spark, sf_dir):
         GROUP BY 1
     """,
     tags=("SQL-api", "ddl-function"),
-    declared=11,
 )
 def sql_scalar_function_ddl(spark, sf_dir):
     """SQL-BODY scalar functions (``CREATE FUNCTION ... RETURN
@@ -321,7 +315,6 @@ def sql_scalar_function_ddl(spark, sf_dir):
         ORDER BY ALL
     """,
     tags=("SQL-api", "D-sugar"),
-    declared=11,
 )
 def agg_group_by_all(spark, sf_dir):
     """``GROUP BY ALL`` / ``ORDER BY ALL`` — the analyst-ergonomics
@@ -363,7 +356,6 @@ _PARITY_SQL = """
     "sql_text_samesemantics",
     oracle=_PARITY_SQL,
     tags=("SQL-api", "plan-parity"),
-    declared=11,
 )
 def sql_text_samesemantics(spark, sf_dir):
     """SURVEY §3.2's parity promise, asserted UNDER the hash: the same

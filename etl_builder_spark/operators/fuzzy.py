@@ -638,7 +638,7 @@ def er_fellegi_sunter_em(spark, sf_dir):
     # 3-way union of selects: the union form re-planned (and re-ran)
     # the blocked levenshtein pair aggregate once PER BRANCH — three
     # full pair scans for one 8-cell result (r15 optimization; the
-    # before/after numbers live in OPTIMIZATION_r15.md)
+    # before/after numbers are in git history, OPTIMIZATION_r15.md)
     feats = counts.select(
         F.expr(
             "stack(3, 'name_close', am_name, au_name,"

@@ -340,7 +340,6 @@ def sessionize_events_gap(spark, sf_dir):
         GROUP BY user_id, session_seq
     """,
     tags=("TS-sessionize", "SCALE-twin"),
-    declared=15,
 )
 def sessionize_events_gap_rangesplit(spark, sf_dir):
     """``sessionize_events_gap`` with the per-user windows RANGE-SPLIT

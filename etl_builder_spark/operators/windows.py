@@ -536,7 +536,6 @@ RANGESPLIT_BAND_US = 3_600_000_000
         WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
     """,
     tags=("E3", "SCALE-twin"),
-    declared=14,
 )
 def win_lead_lag_rangesplit(spark, sf_dir):
     """``win_lead_lag`` with the per-user window RANGE-SPLIT into

@@ -18,8 +18,9 @@ from __future__ import annotations
 
 import re
 from collections import Counter
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 #: node names that must never appear in a declared plan (the same
 #: contract tests/test_plans.py sweeps registry-wide)
@@ -27,13 +28,10 @@ FORBIDDEN_NODES = ("CartesianProduct", "BatchEvalPython")
 
 
 def _formatted(df: DataFrame) -> str:
-    import contextlib
-    import io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+    """The text ``df.explain("formatted")`` prints, without the print."""
+    return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
+        df._jdf.queryExecution(), "formatted"
+    )
 
 
 def plan_digest(df: DataFrame) -> dict:
@@ -74,10 +72,11 @@ def normalize_plan(text: str) -> str:
     """Canonicalize a formatted physical-plan string for fingerprinting:
     strip run-varying tokens (expression IDs, plan IDs, codegen stage
     IDs, filesystem paths, statistics, cached-RDD numbers) so the hash
-    moves iff the PLAN SHAPE moves.  Shared by ``bench.py
-    --fingerprints`` (the PLAN_FINGERPRINTS.json emitter) and the
-    cross-round shape gate in tests/test_plans.py — one normalization,
-    one definition of "the plan changed"."""
+    moves iff the PLAN SHAPE moves.  ``canonical_plan_hashes`` applies
+    it for both the PLAN_FINGERPRINTS.json emitter
+    (tests/emit_plan_fingerprints.py) and the cross-round shape gate in
+    tests/test_plans.py — one normalization, one definition of "the
+    plan changed"."""
     text = re.sub(r"#\d+[L]?", "#N", text)                 # expr IDs
     text = re.sub(r"plan_id=\d+", "plan_id=N", text)
     text = re.sub(r"\[codegen id : \d+\]", "[codegen id : N]", text)
@@ -154,3 +153,26 @@ def plan_shape_hash(text: str) -> str:
         if op not in skip
     )
     return hashlib.sha256(";".join(ops).encode()).hexdigest()[:16]
+
+
+def canonical_plan_hashes(
+    spark: SparkSession, fn: Callable[[SparkSession, str], DataFrame], sf_dir: str
+) -> tuple[str, str]:
+    """(fine hash, shape hash) of ``fn(spark, sf_dir)``'s formatted
+    physical plan (analysis + optimization only — nothing executes
+    beyond what ``fn`` itself runs while building).
+
+    Canonical cache state (VERDICT r14 item 1): the cache is cleared
+    BEFORE building (fresh construction environment) and AGAIN before
+    explain.  Cache substitution happens at PLANNING time via
+    CacheManager lookup, so a frame built by a memoized construction
+    (e.g. the shared graph state) prints InMemoryTableScan on a
+    memo-miss build but the expanded lineage on a memo-hit build —
+    session history leaking into the hash (ml_dbscan_grid /
+    graph_degree_distribution, round 14).  With the cache cleared at
+    explain time, every build plans the same fully-expanded lineage."""
+    spark.catalog.clearCache()
+    df = fn(spark, sf_dir)
+    spark.catalog.clearCache()
+    plan = _formatted(df)
+    return plan_fine_hash(plan), plan_shape_hash(plan)

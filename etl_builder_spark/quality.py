@@ -1167,7 +1167,6 @@ def dq_cross_field_rules(spark, sf_dir):
         WHERE l_shipdate >= DATE '1995-01-01'
     """,
     tags=("DQ-observe",),
-    declared=10,
 )
 def dq_observe_metrics(spark, sf_dir):
     """The `observe()` / CollectMetrics API as a declared surface —

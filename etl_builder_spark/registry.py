@@ -3,11 +3,13 @@
 Every operator from SURVEY.md §2 registers here as a ``QuerySpec``:
 a PySpark callable ``(spark, sf_dir) -> DataFrame`` plus, where the
 semantics are exactly SQL-expressible, the equivalent DuckDB oracle SQL.
-``__spark_entry__.py`` (the driver contract) re-exports this registry.
+``__spark_entry__.py`` re-exports this registry; ``queries()`` and
+``oracle_sql()`` list keys in sorted order, which is deterministic and
+independent of module import order.
 
-Rule (SURVEY.md §2): never register a query that hasn't been
-hash-verified locally against DuckDB via ``selfcheck.py`` — declaring
-is opting into being graded on it.
+Rule (SURVEY.md §2): never register a query that hasn't been verified
+against its DuckDB oracle via ``selfcheck.py`` — a declared key is a
+parity promise.
 """
 
 from __future__ import annotations
@@ -26,13 +28,6 @@ class QuerySpec:
     fn: SparkQuery
     oracle: str | None  # DuckDB ANSI SQL; None → driver's weaker rows-only check
     tags: tuple[str, ...] = field(default_factory=tuple)
-    # Round the key was first declared.  Never-sampled keys are graded
-    # OLDEST-DECLARED-FIRST (VERDICT r9 item 1): a key that has waited
-    # since round N must outrank a key declared in round N+1, regardless
-    # of name, so new registrations can never crowd the backlog out of
-    # the driver's first-50 sample window.  Default 9 = "declared in or
-    # before round 9" (the rounds that predate this field).
-    declared: int = 9
     # Data-dependent output schema (round-12 degenerate sweep): a
     # discovery-based pivot/transpose emits one column per DISCOVERED
     # value, so on a corpus missing values the Spark schema is a strict
@@ -50,14 +45,10 @@ def register(
     name: str,
     oracle: str | None = None,
     tags: tuple[str, ...] = (),
-    declared: int = 9,
     dynamic_schema: bool = False,
 ) -> Callable[[SparkQuery], SparkQuery]:
     """Decorator: register a declared query under SURVEY §2 key ``name``.
 
-    ``declared`` is the round the key is first registered in (default 9
-    covers every key that predates the field); it only affects grading
-    order among never-driver-sampled keys — oldest declaration first.
     ``dynamic_schema`` marks discovery-based keys whose column set is a
     function of the data (see QuerySpec.dynamic_schema).
     """
@@ -78,7 +69,6 @@ def register(
             fn=fn,
             oracle=pin_nan_casts(oracle) if oracle is not None else None,
             tags=tuple(tags),
-            declared=declared,
             dynamic_schema=dynamic_schema,
         )
         return fn
@@ -86,394 +76,14 @@ def register(
     return deco
 
 
-# The driver's per-round correctness sample (~50 keys) tracks the order of
-# the dict returned by queries().  Round-7 refresh (VERDICT r6 items 1+2):
-# the iteration order is now DERIVED at call time from the committed
-# CORRECTNESS_r*.json files in the repo root, so it can never go stale:
-#
-#   1. exact-oracle keys the driver has NEVER sampled, in registration
-#      order (least-evidenced first — each round's ~50-key front sample
-#      lands on these);
-#   2. exact-oracle keys ordered by OLDEST last-sampled round (re-grade
-#      staleness), then registration order;
-#   3. rows-only (oracle=None) keys last — six rounds of driver evidence
-#      prove the driver has no rows-only check path and records
-#      err:no_oracle for them, so sampling them wastes slots.
-#
-# Ordering is presentation-only — it does not change any query or oracle,
-# and it is DISCLOSED here and in README.md so the grading-driver owner
-# can override it with random/exhaustive sampling at any time (per
-# ADVICE r3).  The legacy hand-maintained tuple below is kept only as a
-# deterministic tiebreak/fallback when no CORRECTNESS files are present
-# (e.g. a fresh clone without driver artifacts).
-_GRADING_PRIORITY: tuple[str, ...] = (
-    # --- (a) round-6 new keys (never graded by construction) ---
-    "embed_pq_codes_exact",
-    "sim_topk_pq_adc_exact",
-    "sim_topk_pq_rerank_exact",
-    "sim_knn_ivfpq_exact",
-    "ml_rfm_segmentation_bucketed",
-    "ml_lift_gain_deciles_bucketed",
-    "stats_mannwhitney_u",
-    "ml_calibration_bins",
-    "ml_ndcg_pq_adc",
-    "sample_bottom_k_global",
-    "multimodal_audio_downsample_2x",
-    "join_asof_forward",
-    "stats_corr_pearson_exact",
-    "vocab_bpe_pair_counts",
-    "etl_erasure_footprint",
-    # --- (b) the 91 keys never driver-sampled in r1-r5, registration order ---
-    "er_survivorship_merge",
-    "stream_merge_upsert_live",
-    "text_keyword_topk",
-    "graph_degree_distribution",
-    "join_latest_dim_snapshot",
-    "agg_higher_moments",
-    "agg_bitmask_flags",
-    "win_cumulative_share",
-    "dq_value_topk",
-    "ts_downsample_lttb",
-    "agg_entropy_profile",
-    "join_asof_nearest",
-    "ts_rolling_corr",
-    "funnel_time_to_convert",
-    "etl_scd2_merge_incremental",
-    "text_bigram_surprisal",
-    "agg_gini_revenue",
-    "pipeline_training_mix",
-    "join_asof_tolerance",
-    "dq_reconcile_order_totals",
-    "text_readability_flesch",
-    "cohort_revenue_ltv",
-    "ts_year_over_year",
-    "sim_sparse_tfidf_pairs",
-    "limit_keyset_page",
-    "seq_pattern_strict",
-    "win_running_reset",
-    "sessions_bounce_by_hour",
-    "etl_small_file_compaction",
-    "ml_feature_hashing",
-    "multimodal_audio_stats",
-    "market_basket_pairs",
-    "agg_weighted_median",
-    "ts_rolling_dau_wau",
-    "dq_freshness_sla",
-    "attribution_last_touch",
-    "path_topk_sessions",
-    "ts_new_vs_returning",
-    "dq_benford_deviation",
-    "geo_grid_radius_join",
-    "ts_seasonal_profile",
-    "ml_confusion_matrix",
-    "ml_auc_one_vs_rest",
-    "stats_poisson_bootstrap_ci",
-    "scan_csv_corrupt_permissive",
-    "udf_map_in_arrow",
-    "ts_twap_hourly",
-    "ts_gap_outages",
-    "text_html_strip",
-    "ts_weekly_churn",
-    "join_temporal_overlap_pairs",
-    "multimodal_bmp_decode",
-    "agg_bucketed_no_shuffle",
-    "sample_negative_pairs",
-    "ml_user_features_asof",
-    "stats_ks_two_sample",
-    "stats_chi_square_independence",
-    "dq_referential_coverage",
-    "dedup_frame_fingerprints",
-    "ml_lift_gain_deciles",
-    "scan_glob_paths",
-    "stats_two_proportion_z",
-    "etl_union_schema_drift",
-    "funnel_within_24h",
-    "vocab_coverage_curve",
-    "etl_rollup_reaggregation",
-    "seq_transition_matrix",
-    "sql_star_join_via_views",
-    "scd2_bitemporal_asof",
-    "stream_freshness_live",
-    "stream_rollup_daily_live",
-    "agg_grouping_id_labels",
-    "agg_share_of_hierarchy",
-    "ts_control_chart_xmr",
-    "text_ngram_novelty",
-    "agg_trimmed_mean",
-    "ml_pca_power_component",
-    "ts_seasonality_strength_dft",
-    "ml_kmeans_lloyd_exact",
-    "funnel_three_stage",
-    "sql_udf_registered",
-    "agg_skyline_frontier",
-    "pivot_dynamic_discovered",
-    "ml_rfm_segmentation",
-    "ts_trend_decompose_ma",
-    "er_weighted_linkage",
-    "ts_fiscal_calendar_445",
-    "stats_survival_km",
-    "ts_autocorr_lag24",
-    "multimodal_resize_halve",
-    "agg_abc_classification",
-    # --- (c) driver-graded keys, oldest last-grading round first ---
-    "win_ntile_quartiles",
-    "agg_mode_deterministic",
-    "dedup_url_canonical",
-    "sample_train_test_split",
-    "sessionize_events_gap",
-    "dedup_text_containment",
-    "join_skew_salted",
-    "ts_resample_ohlc",
-    "dq_schema_contract",
-    "stream_tumbling_ohlc_live",
-    "agg_regression_trend",
-    "etl_dynamic_partition_overwrite",
-    "project_compute",
-    "filter_compound",
-    "join_interval",
-    "join_asof",
-    "text_tfidf_sql",
-    "text_quality_score",
-    "cdc_snapshot_diff",
-    "etl_surrogate_keys",
-    "scd2_intervals",
-    "set_intersect_all",
-    "agg_weighted_avg",
-    "win_percent_rank_cume",
-    "dq_null_profile",
-    "dedup_token_sort",
-    "ts_zscore_anomaly",
-    "subq_lateral_topk",
-    "ts_interpolate_linear",
-    "graph_pagerank_fixed",
-    "text_zipf_fit",
-    "fn_url_parse",
-    "sample_weighted_hash",
-    "stream_topk_types_live",
-    "multimodal_frame_sample",
-    "fn_hash_codec",
-    "agg_boolean_any",
-    "text_pmi_bigrams",
-    "cdc_point_in_time_join",
-    "join_null_safe",
-    "win_gaps_islands",
-    "chunk_sliding_overlap",
-    "win_running_distinct",
-    "dq_quarantine_split",
-    "ts_calendar_dim",
-    "embed_centroid_drift",
-    "agg_collect_sorted",
-    "agg_count_distinct",
-    "agg_cube",
-    "agg_filtered",
-    "agg_grouping_sets",
-    "agg_percentile",
-    "agg_pricing_summary",
-    "agg_rollup",
-    "agg_stats",
-    "chunk_fixed_tokens",
-    "dedup_cluster_components",
-    "dedup_cluster_representative",
-    "dedup_exact_normalized",
-    "dedup_ngram_jaccard",
-    "doc_fingerprint",
-    "embed_normalize_quantize",
-    "filter_length_band",
-    "fn_array",
-    "fn_bitwise",
-    "fn_conditional",
-    "fn_datetime",
-    "fn_json",
-    "fn_json_variant",
-    "fn_map",
-    "fn_math",
-    "fn_string",
-    "multimodal_decode_meta",
-    "pack_context_windows",
-    "pivot_manual",
-    "sample_hash_deterministic",
-    "sim_label_centroids",
-    "sim_topk_cosine_sql",
-    "text_boilerplate_ngrams",
-    "text_contamination_check",
-    "text_corpus_stats",
-    "text_langid_heuristic",
-    "text_repetition_ratio",
-    "text_token_bpeish",
-    "text_tokenize_counts",
-    "udtf_tokenize_pos",
-    "unpivot_melt",
-    "agg_robust_mad",
-    "fn_try_arithmetic",
-    "dedup_minhash_exact",
-    "dedup_minhash_incremental",
-    "dedup_simhash_exact",
-    "dedup_embedding_cosine",
-    "dedup_semantic_centroids",
-    "sim_knn_ivf_exact",
-    "dedup_substring_windows",
-    "vocab_top_tokens",
-    "text_ngrams_trigram",
-    "text_pii_scrub",
-    "text_lang_profile",
-    "text_oov_rate",
-    "text_unigram_surprisal",
-    "pipeline_training_data",
-    "pipeline_dedup_cascade",
-    "join_interval_bucketed",
-    "filter_null_semantics",
-    "project_distinct",
-    "funnel_signup_purchase",
-    "cohort_weekly_retention",
-    "er_blocked_fuzzy_match",
-    "agg_histogram",
-    "win_conditional_rows",
-    "join_inner_equi",
-    "join_broadcast",
-    "join_left_outer",
-    "join_full_outer",
-    "join_semi",
-    "join_anti",
-    "join_cross_small",
-    "join_theta_range",
-    "join_multiway_star",
-    "merge_upsert_orders",
-    "graph_reachability_paths",
-    "scan_parquet_full",
-    "scan_parquet_pruned",
-    "set_union_all",
-    "set_union_distinct",
-    "set_intersect",
-    "set_except_all",
-    "sort_multikey",
-    "topk_global",
-    "limit_offset",
-    "subq_correlated_above_avg",
-    "subq_in_not_in",
-    "subq_scalar_uncorrelated",
-    "ts_hourly_gapfill",
-    "agg_string_concat",
-    "ts_ewma_hourly",
-    "ts_forward_fill",
-    "tpch_q4_priority_exists",
-    "tpch_q6_forecast_revenue",
-    "tpch_q7_volume_shipping",
-    "tpch_q8_market_share",
-    "tpch_q9_profit_by_nation",
-    "tpch_q9_profit_selective",
-    "tpch_q10_returned_items",
-    "tpch_q12_latency_classes",
-    "tpch_q13_order_distribution",
-    "tpch_q14_promo_share",
-    "tpch_q15_top_supplier",
-    "tpch_q17_small_qty_revenue",
-    "tpch_q18_large_orders",
-    "tpch_q19_disjunctive_revenue",
-    "tpch_q21_waiting_supplier",
-    "tpch_q22_dormant_customers",
-    "win_frames_nth",
-    "win_ranking",
-    "win_topk_per_group",
-    "win_lead_lag",
-    "win_running_frame",
-    "win_sliding_range",
-    "win_unpartitioned_caution",
-    "dq_audit_orders",
-    "dq_orphans_lineitem",
-    "dq_distribution_drift",
-    "join_bucketed_colocated",
-    "scan_dpp_partitioned",
-    "roundtrip_csv_json",
-    "roundtrip_schema_evolution",
-    "roundtrip_orc",
-    "stream_tumbling_1h",
-    "stream_sliding_1h_15m",
-    "stream_sliding_1h_15m_live",
-    "stream_session_gap_30m_live",
-    "stream_dedup_watermark_live",
-    "stream_stateful_counters_live",
-    "stream_tumbling_1h_live",
-    "stream_interval_join_live",
-    "stream_session_gap_30m",
-    "stream_foreachbatch_sink",
-    "udf_pandas_scalar",
-    "udaf_grouped_agg",
-    "udf_grouped_map",
-)
-
-
-def _last_sampled_rounds() -> dict[str, int]:
-    """Per-key latest driver-grading round, read from committed
-    ``CORRECTNESS_r*.json`` artifacts in the repo root.
-
-    Returns {} when no artifacts exist (fresh clone) — callers fall back
-    to the legacy static priority tuple.  Malformed files are skipped so a
-    half-written driver artifact can never break ``queries()``.
-    """
-    import json
-    import re
-    from pathlib import Path
-
-    root = Path(__file__).resolve().parent.parent
-    last: dict[str, int] = {}
-    for path in sorted(root.glob("CORRECTNESS_r*.json")):
-        m = re.search(r"_r(\d+)\.json$", path.name)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            data = json.loads(path.read_text())
-        except (OSError, ValueError):
-            continue
-        if not isinstance(data, dict):
-            continue
-        for key in data:
-            last[key] = max(last.get(key, 0), rnd)
-    return last
-
-
-def _ordered_items() -> list[tuple[str, QuerySpec]]:
-    last = _last_sampled_rounds()
-    if not last:
-        head = [(k, REGISTRY[k]) for k in _GRADING_PRIORITY if k in REGISTRY]
-        seen = set(_GRADING_PRIORITY)
-        tail = [(k, spec) for k, spec in REGISTRY.items() if k not in seen]
-        return head + tail
-
-    # Tiebreaks, in order: (1) DECLARATION ROUND (QuerySpec.declared) —
-    # among equally-never-sampled keys, a key that has waited since an
-    # older round outranks one declared this round, so new registrations
-    # can never crowd the longest-unsampled backlog out of the driver's
-    # first-50 window (VERDICT r9 item 1); (2) position in the legacy
-    # static tuple; (3) NAME, not registration position — registration
-    # order shifts with which module happens to import first
-    # (__spark_entry__ pulls in operators.aggregates before
-    # _ensure_loaded runs), and the driver must see the same order
-    # selfcheck/tests saw.
-    legacy_pos = {k: i for i, k in enumerate(_GRADING_PRIORITY)}
-
-    def sort_key(item: tuple[str, QuerySpec]) -> tuple[int, int, int, int, str]:
-        name, spec = item
-        rows_only = 1 if spec.oracle is None else 0
-        return (
-            rows_only,
-            last.get(name, 0),
-            spec.declared,
-            legacy_pos.get(name, len(_GRADING_PRIORITY)),
-            name,
-        )
-
-    return sorted(REGISTRY.items(), key=sort_key)
-
-
 def queries() -> dict[str, SparkQuery]:
     _ensure_loaded()
-    return {name: spec.fn for name, spec in _ordered_items()}
+    return {name: spec.fn for name, spec in sorted(REGISTRY.items())}
 
 
 def oracle_sql() -> dict[str, str]:
     _ensure_loaded()
-    return {name: spec.oracle for name, spec in _ordered_items() if spec.oracle is not None}
+    return {name: spec.oracle for name, spec in sorted(REGISTRY.items()) if spec.oracle is not None}
 
 
 _LOADED = False

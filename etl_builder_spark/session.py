@@ -122,16 +122,21 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
 _TABLE_CACHE: dict = {}
 
 
+def file_version(path: str) -> int:
+    """The file's mtime in ns (-1 if absent): the part of a memo key
+    that makes a file rewritten at the same path miss the memo."""
+    try:
+        return os.stat(path).st_mtime_ns
+    except OSError:
+        return -1
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one corpus table. Parquet scan → vectorized columnar reader;
     filters/pruning push down from whatever the caller composes on top."""
     _pin_runtime_confs(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        mtime = os.stat(path).st_mtime_ns
-    except OSError:
-        mtime = -1
-    key = (spark.sparkContext.applicationId, path, mtime)
+    key = (spark.sparkContext.applicationId, path, file_version(path))
     df = _TABLE_CACHE.get(key)
     if df is None:
         df = spark.read.parquet(path)

@@ -69,7 +69,6 @@ def _staged_blob_dir(spark, sf_dir):
         ORDER BY doc_id
     """,
     tags=("A-binaryfile", "multimodal-ingest"),
-    declared=10,
 )
 def scan_binaryfile_blobs(spark, sf_dir):
     """The `binaryFile` source as a declared, hash-checked surface —

@@ -73,7 +73,6 @@ def _staged_jsonl(sf_dir):
         ORDER BY lang
     """,
     tags=("A-jsonl", "ingest-tolerant"),
-    declared=10,
 )
 def scan_jsonl_permissive(spark, sf_dir):
     """PERMISSIVE JSONL ingestion as a declared, hash-checked surface:

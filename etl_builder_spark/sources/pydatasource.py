@@ -115,7 +115,6 @@ class DocsPyDataSource(DataSource):
         ORDER BY doc_id
     """,
     tags=("A-pyds", "connector"),
-    declared=11,
 )
 def scan_python_datasource(spark, sf_dir):
     """The Spark-4 Python DataSource API as a declared, hash-checked
@@ -165,7 +164,6 @@ PYDS_PUSHDOWN_MAX = 200
         ORDER BY doc_id
     """,
     tags=("A-pyds", "connector", "pushdown"),
-    declared=11,
 )
 def scan_python_datasource_pushdown(spark, sf_dir):
     """Filter PUSHDOWN through the Python DataSource connector

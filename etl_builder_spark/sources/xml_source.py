@@ -68,7 +68,6 @@ def _staged_xml(sf_dir):
         ORDER BY lang
     """,
     tags=("A-xml", "ingest"),
-    declared=11,
 )
 def scan_xml_source(spark, sf_dir):
     """The native XML source as a declared, hash-checked surface: the

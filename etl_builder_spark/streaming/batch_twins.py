@@ -778,7 +778,6 @@ def stream_hourly_unique_users_live(spark, sf_dir):
         FROM events JOIN customer ON user_id = c_custkey
     """,
     tags=("J7", "live-stream"),
-    declared=10,
 )
 def stream_static_join_live(spark, sf_dir):
     """J7 stream ⋈ static dim as an ACTUAL Structured Streaming run
@@ -905,7 +904,6 @@ def _staged_events_timesplit(sf_dir):
         GROUP BY 1
     """,
     tags=("J4", "live-stream"),
-    declared=10,
 )
 def stream_watermark_drop_live(spark, sf_dir):
     """J4 — watermark LATE-DATA DROP as a declared exact key: a 3-file

@@ -16,6 +16,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -56,6 +57,19 @@ def stream_events(spark: SparkSession, path: str, max_files_per_trigger: int | N
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     df = reader.parquet(path)
     return normalize_events_ts(df)
+
+
+def await_or_stop(q: StreamingQuery, timeout_s: float) -> None:
+    """Wait for ``q`` to terminate; if it is still running after
+    ``timeout_s``, stop it and raise ``TimeoutError``.  A replay that
+    runs out of time must fail loudly: returning would hand the caller
+    a sink holding only part of the output, with the query still
+    running behind it."""
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {q.name or q.id} did not finish within {timeout_s}s"
+        )
 
 
 def run_to_memory(sdf: DataFrame, mode: str = "complete", timeout_s: int = 120) -> DataFrame:
@@ -116,7 +130,7 @@ def run_to_memory_with_progress(
             .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
             .start()
         )
-        q.awaitTermination(timeout_s)
+        await_or_stop(q, timeout_s)
         # Listener events are delivered on a separate thread; give it a
         # bounded grace period to drain up to the termination event.
         deadline = time.monotonic() + 10
@@ -232,7 +246,7 @@ def foreach_batch_parquet_sink(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
+    await_or_stop(q, timeout_s)
 
 
 def foreach_batch_merge_sink(
@@ -263,7 +277,7 @@ def foreach_batch_merge_sink(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
+    await_or_stop(q, timeout_s)
     versions = sorted(
         (d for d in os.listdir(target_dir) if d.startswith("v")),
         key=lambda s: int(s[1:]),

@@ -208,7 +208,6 @@ def udf_map_in_arrow(spark, sf_dir):
         GROUP BY user_id
     """,
     tags=("K-arrow", "grouped-map"),
-    declared=11,
 )
 def udf_apply_in_arrow(spark, sf_dir):
     """``groupBy().applyInArrow`` — the Arrow-NATIVE grouped-map seam
@@ -275,7 +274,6 @@ def udf_apply_in_arrow(spark, sf_dir):
         FROM e FULL JOIN o ON e.user_id = o.o_custkey
     """,
     tags=("K-arrow", "cogrouped"),
-    declared=11,
 )
 def udf_cogrouped_apply_in_arrow(spark, sf_dir):
     """``cogroup().applyInArrow`` — the Arrow-native COGROUPED seam

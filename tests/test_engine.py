@@ -58,10 +58,9 @@ def test_unknown_table_fails_loudly(engine):
 
 
 def test_doc_counts_match_registry():
-    """COVERAGE.md's header count is single-sourced from the registry
-    (VERDICT r6 item 4 — SURVEY/COVERAGE drifted to three different
-    numbers by round 6).  SURVEY.md no longer repeats the number; this
-    test keeps COVERAGE.md's one statement true forever."""
+    """The count line in COVERAGE.md, SURVEY.md and README.md is
+    single-sourced from the registry (VERDICT r6 item 4 — the documents
+    drifted to three different numbers by round 6)."""
     import re
     from pathlib import Path
 
@@ -72,10 +71,8 @@ def test_doc_counts_match_registry():
     exact = sum(1 for s in registry.REGISTRY.values() if s.oracle is not None)
     rows_only = total - exact
 
-    # round 14 (VERDICT r13 item 6): SURVEY.md's §8 addendum now carries
-    # the same count line — pin BOTH documents to the registry
     root = Path(__file__).resolve().parent.parent
-    for doc in ("COVERAGE.md", "SURVEY.md"):
+    for doc in ("COVERAGE.md", "SURVEY.md", "README.md"):
         text = (root / doc).read_text()
         m = re.search(
             r"\*\*(\d+) declared queries: (\d+) exact, (\d+)\s+rows-only", text
@@ -88,98 +85,15 @@ def test_doc_counts_match_registry():
         ), f"{doc} says {m.groups()}, registry has {(total, exact, rows_only)}"
 
 
-def test_grading_priority_order():
-    """queries() iteration order is derived from the committed
-    CORRECTNESS_r*.json driver artifacts (round-7, VERDICT r6 items 1+2):
-    never-driver-sampled exact-oracle keys first, then oldest-graded,
-    rows-only keys last.  A regression here silently wastes the driver's
-    ~50-key per-round grading sample on already-green keys.
-    """
+def test_queries_listed_in_sorted_key_order():
+    """queries() and oracle_sql() list the registry in sorted key order:
+    deterministic, and independent of which module registered first."""
     from etl_builder_spark import registry
 
-    registry._ensure_loaded()
-    pri = registry._GRADING_PRIORITY
-    assert len(pri) == len(set(pri)), "duplicate keys in _GRADING_PRIORITY"
-    ordered = list(registry.queries())
-    assert set(ordered) == set(registry.REGISTRY)
-    assert set(registry.oracle_sql()) <= set(ordered)
-
-    last = registry._last_sampled_rounds()
-    if not last:  # fresh clone without driver artifacts: static fallback
-        assert tuple(ordered[: len(pri)]) == tuple(k for k in pri if k in registry.REGISTRY)
-        return
-
-    specs = registry.REGISTRY
-    # rows-only keys must all sit strictly after every exact-oracle key
-    first_rows_only = next(
-        (i for i, k in enumerate(ordered) if specs[k].oracle is None), len(ordered)
-    )
-    assert all(specs[k].oracle is None for k in ordered[first_rows_only:])
-    # among exact keys, never-sampled ones lead
-    exact = [k for k in ordered if specs[k].oracle is not None]
-    never = [k for k in exact if last.get(k, 0) == 0]
-    assert exact[: len(never)] == never, "never-sampled exact keys must lead"
-    # sampled exact keys are ordered by oldest last-grading round
-    sampled_rounds = [last[k] for k in exact if last.get(k, 0) > 0]
-    assert sampled_rounds == sorted(sampled_rounds)
-    # among never-sampled exact keys, OLDEST DECLARATION ROUND leads
-    # (VERDICT r9 item 1): a round-10 registration must never displace a
-    # key that has waited in the backlog since round 9 or earlier.
-    never_declared = [specs[k].declared for k in never]
-    assert never_declared == sorted(never_declared), (
-        "never-sampled keys must be ordered oldest-declared-first"
-    )
-
-
-def test_bench_cohort_r8_frozen_and_benched():
-    """The frozen round-8 comparison cohort (bench.py COHORT_R8,
-    VERDICT r10 item 5) must stay exactly 84 keys, each registered AND
-    present in the benched matrix — otherwise `cohort_r8_sum` silently
-    sums a different workload and cross-round comparisons break."""
-    import bench
-
-    from etl_builder_spark import registry
-
-    registry._ensure_loaded()
-    assert len(bench.COHORT_R8) == 84
-    assert len(set(bench.COHORT_R8)) == 84
-    benched = set(bench.HEADLINE) | set(bench.TPCH)
-    for k in bench.COHORT_R8:
-        assert k in registry.REGISTRY, k
-        assert k in benched, k
-
-
-def test_declared_default_not_inherited_by_new_keys():
-    """ADVICE r10: register()'s `declared` parameter defaults to 9
-    ("predates the field"), so a future key that forgets declared=N
-    would silently inherit round-9 seniority and jump ahead of the
-    genuine never-sampled backlog — the exact crowding-out failure the
-    field exists to prevent.  Pin the EXACT set of keys allowed to
-    carry declared<=9 (the 454 pre-round-10 registrations, including
-    fn_uuid3_deterministic whose round-10 rename intentionally carries
-    its round-9 seniority).  Any new key must pass declared=N
-    explicitly — if this test fails on a key you just added, add
-    `declared=<current round>` to its @register call, do NOT extend
-    the pinned file."""
-    from pathlib import Path
-
-    from etl_builder_spark import registry
-
-    registry._ensure_loaded()
-    pinned = set(
-        (Path(__file__).parent / "data" / "declared9_keys.txt")
-        .read_text()
-        .split()
-    )
-    actual = {k for k, s in registry.REGISTRY.items() if s.declared <= 9}
-    assert actual == pinned, (
-        f"keys with legacy declared<=9 drifted from the pinned set; "
-        f"unexpected={sorted(actual - pinned)} missing={sorted(pinned - actual)}"
-    )
-    # and every non-legacy key must carry an explicit round >= 10
-    for k, s in registry.REGISTRY.items():
-        if k not in pinned:
-            assert s.declared >= 10, (k, s.declared)
+    keys = list(registry.queries())
+    assert keys == sorted(registry.REGISTRY)
+    exact = [k for k in keys if registry.REGISTRY[k].oracle is not None]
+    assert list(registry.oracle_sql()) == exact
 
 
 def test_every_registering_module_is_imported():

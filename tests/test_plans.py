@@ -789,9 +789,10 @@ def test_partsupp_queries_scan_shapes(spark):
 
 #: intentional plan changes: key → one-line justification.  An entry
 #: here silences the cross-round fingerprint gate for that key until
-#: PLAN_FINGERPRINTS.json is regenerated (``python bench.py
-#: --fingerprints``), at which point the entry goes STALE and the gate
-#: demands its removal — drift can be acknowledged, never forgotten.
+#: PLAN_FINGERPRINTS.json is regenerated (``python
+#: tests/emit_plan_fingerprints.py``), at which point the entry goes
+#: STALE and the gate demands its removal — drift can be acknowledged,
+#: never forgotten.
 SHAPE_DRIFT_ALLOWLIST: dict[str, str] = {}
 
 
@@ -833,12 +834,10 @@ def test_plan_shape_fingerprints_cross_round(spark):
     artifact lists them); the shape hash is the load-bearing one.
     Live-streaming keys are skipped (their fn executes a streaming
     query; their batch twins pin the plan surface)."""
-    import contextlib
-    import io
     import json
     from pathlib import Path
 
-    from etl_builder_spark.plans.audit import plan_shape_hash
+    from etl_builder_spark.plans.audit import canonical_plan_hashes
 
     artifact = json.loads(
         (Path(__file__).resolve().parent.parent / "PLAN_FINGERPRINTS.json").read_text()
@@ -861,19 +860,8 @@ def test_plan_shape_fingerprints_cross_round(spark):
         if "live-stream" in spec.tags or name == "stream_foreachbatch_sink":
             skipped.append(name)
             continue
-        # canonical cache state — mirror the emitter exactly: clear
-        # BEFORE building (fresh construction environment) and AGAIN
-        # before explain, so cache substitution (a PLANNING-time
-        # CacheManager lookup) can never leak session history into the
-        # hash (the round-14 ml_dbscan_grid flake: memo-hit vs
-        # memo-miss builds printed different trees)
-        spark.catalog.clearCache()
-        df = spec.fn(spark, fp_sf)
-        spark.catalog.clearCache()
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        h = plan_shape_hash(buf.getvalue())
+        # the emitter's exact build-and-hash path (canonical cache state)
+        _, h = canonical_plan_hashes(spark, spec.fn, fp_sf)
         computed[name] = h
         if committed.get(name) != h and name not in SHAPE_DRIFT_ALLOWLIST:
             drift[name] = {"committed": committed.get(name), "now": h}
@@ -882,7 +870,7 @@ def test_plan_shape_fingerprints_cross_round(spark):
     assert not missing, f"keys absent from PLAN_FINGERPRINTS.json: {missing}"
     assert not drift, (
         f"{len(drift)} plan SHAPES drifted from the committed baseline "
-        f"(intentional? allowlist + regenerate with bench.py --fingerprints): {drift}"
+        f"(intentional? allowlist + regenerate with tests/emit_plan_fingerprints.py): {drift}"
     )
     stale = sorted(
         k for k in SHAPE_DRIFT_ALLOWLIST if committed.get(k) == computed.get(k)

@@ -154,6 +154,49 @@ def test_corpus_codebook_trains_once(spark):
     assert cb1 == cb2
 
 
+def test_corpus_codebook_retrains_after_rewrite(spark, tmp_path):
+    """An embeddings file rewritten at the same path must retrain the
+    memoized codebook, not keep serving the one trained on the old
+    vectors."""
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    from etl_builder_spark.llm import pq
+
+    sf = tmp_path / "sf"
+    shutil.copytree(SF_DIR, sf)
+    sf_dir = str(sf)
+    path = sf / "embeddings.parquet"
+    old = sorted(map(tuple, pq.corpus_codebook(spark, sf_dir).collect()))
+
+    t = papq.read_table(path)
+    flipped = pa.array(
+        [[-x for x in v] for v in t.column("embedding").to_pylist()],
+        type=t.schema.field("embedding").type,
+    )
+    before = os.stat(path).st_mtime_ns
+    papq.write_table(t.set_column(t.schema.get_field_index("embedding"), "embedding", flipped), path)
+    # the rewrite must be visible as a new file version even on
+    # filesystems with coarse timestamps
+    if os.stat(path).st_mtime_ns == before:
+        os.utime(path, ns=(before + 1_000_000_000, before + 1_000_000_000))
+
+    new = sorted(map(tuple, pq.corpus_codebook(spark, sf_dir).collect()))
+    fresh = sorted(
+        map(
+            tuple,
+            train_pq_codebooks(
+                load_table(spark, sf_dir, "embeddings").select("vec_id", _dbl().alias("v"))
+            ).collect(),
+        )
+    )
+    assert new == fresh
+    assert new != old
+
+
 def test_ivfpq_recall_vs_exact(spark):
     """IVF-PQ composition floor: the two-stage approximation (coarse
     lists pruned 4/16, ADC shortlist-50, exact rerank) must keep ≥40%

@@ -45,6 +45,21 @@ def test_tumbling_stream_matches_batch(spark, events_dir):
     assert sorted(map(tuple, out.collect())) == sorted(map(tuple, batch.collect()))
 
 
+def test_replay_timeout_raises_and_stops_query(spark, events_dir, tmp_path):
+    """A replay that cannot finish within its timeout raises instead of
+    returning a partial result, and leaves no streaming query running —
+    for the memory sink and the foreachBatch sink alike."""
+    ev = runtime.stream_events(spark, events_dir)
+    with pytest.raises(TimeoutError, match="mem_"):
+        runtime.run_to_memory(runtime.session_counts(ev), "complete", timeout_s=0.001)
+    assert spark.streams.active == []
+    with pytest.raises(TimeoutError, match="did not finish"):
+        runtime.foreach_batch_parquet_sink(
+            ev, str(tmp_path / "sink"), str(tmp_path / "ckpt"), timeout_s=0.001
+        )
+    assert spark.streams.active == []
+
+
 def test_session_stream_runs(spark, events_dir):
     ev = runtime.stream_events(spark, events_dir)
     out = runtime.run_to_memory(runtime.session_counts(ev), "complete")

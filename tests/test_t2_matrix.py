@@ -24,19 +24,6 @@ def test_query_matches_oracle(spark, oracle, name):
     assert status in ("OK", "ROWS-ONLY"), f"{name}: {status} — {detail}"
 
 
-def test_grading_priority_names_resolve():
-    """_ordered_items silently skips priority entries missing from the
-    registry (`if k in REGISTRY`), so a typo'd key would quietly lose
-    its front-of-sample slot — catch that here. Duplicates would
-    double-sample a key; forbid them too."""
-    from etl_builder_spark.registry import _GRADING_PRIORITY, _ensure_loaded
-
-    _ensure_loaded()
-    missing = [k for k in _GRADING_PRIORITY if k not in REGISTRY]
-    assert not missing, f"priority entries not in registry: {missing}"
-    assert len(set(_GRADING_PRIORITY)) == len(_GRADING_PRIORITY)
-
-
 def test_percentile_approx_within_rank_error(spark):
     """agg_percentile_approx (rows-only, GK sketch) must land within
     the sketch's rank-error bound of the EXACT interpolated percentile
