@@ -13,8 +13,9 @@ against the original vectors at all.
 - the codebook is m·k rows (8×16 = 128 here) and is BROADCAST
   everywhere;
 - codebooks are trained ONCE (on a sample at scale) and PERSISTED —
-  ``corpus_codebook`` memoizes per (sf_dir, m, k, seed) so the three
-  PQ queries share one training pass per process, the in-process
+  ``corpus_codebook`` memoizes per (sf_dir, embeddings file version,
+  m, k, seed) so the three PQ queries share one training pass per
+  process and a rewritten embeddings file retrains, the in-process
   stand-in for a persisted model artifact;
 - encoding is one scan: broadcast-join vectors × codebook, argmin per
   subspace — expression-only distance math (zip_with/aggregate);

@@ -896,90 +896,71 @@ def attribution_time_decay(spark, sf_dir):
     )
 
 
-#: (applicationId, sf_dir) → the persisted seq_markov_stationary state
-#: (cell frame, transition frame, state list, step vectors).  Most-
-#: recent-key eviction with explicit unpersist (the pagerank
-#: _GRAPH_CACHE rule, ADVICE r15): a long-lived session sweeping many
-#: sf_dirs must not accumulate stale persisted frames in executor
-#: memory.  Only lazy persisted frames are memoized — every action
-#: over them still computes from the parquet inputs on first touch.
-_MARKOV_CACHE: dict = {}
-
-
 def _markov_state(spark, sf_dir):
-    """Build (or fetch) the persisted markov iteration state: the
-    |states|² transition-cell frame (the one expensive pass — the
-    LEAD-window event pairing — feeds both p and states, guide §5),
-    the DECIMAL(10,6) transition frame, the state list, and the four
-    step vectors v0..v3 (each persisted: the final report joins all
-    four, and an unpersisted v_i re-derives its whole iteration chain
-    once per downstream reference)."""
+    """Build the persisted markov iteration state and return the four
+    step vectors v0..v3.  The |states|² transition-cell frame (the one
+    expensive pass — the LEAD-window event pairing — feeds both p and
+    states, guide §5), the DECIMAL(10,6) transition frame, the state
+    list and v1..v3 are persisted: the final report joins all four
+    vectors, and an unpersisted v_i re-derives its whole iteration
+    chain once per downstream reference.  Spark's cache reuses the
+    rebuilt, persisted frames across calls."""
     from pyspark.sql import Window
 
-    key = (spark.sparkContext.applicationId, str(sf_dir))
-    if key not in _MARKOV_CACHE:
-        for stale_key in list(_MARKOV_CACHE):
-            for frame in _MARKOV_CACHE.pop(stale_key):
-                try:
-                    frame.unpersist()
-                except Exception:
-                    pass  # frame's session may already be stopped
-        ev = load_table(spark, sf_dir, "events")
-        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        seq = ev.select(
-            F.col("event_type").alias("from_type"),
-            F.lead("event_type").over(w).alias("to_type"),
-        ).where(F.col("to_type").isNotNull())
-        cells = (
-            seq.groupBy("from_type", "to_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .persist()
+    ev = load_table(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    seq = ev.select(
+        F.col("event_type").alias("from_type"),
+        F.lead("event_type").over(w).alias("to_type"),
+    ).where(F.col("to_type").isNotNull())
+    cells = (
+        seq.groupBy("from_type", "to_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .persist()
+    )
+    rowtot = cells.groupBy("from_type").agg(
+        F.sum("n").cast("bigint").alias("row_n")
+    )
+    p = (
+        cells.join(rowtot, "from_type")
+        .select(
+            "from_type",
+            "to_type",
+            F.round(F.col("n").cast("double") / F.col("row_n"), 6)
+            .cast("decimal(10,6)")
+            .alias("p"),
         )
-        rowtot = cells.groupBy("from_type").agg(
-            F.sum("n").cast("bigint").alias("row_n")
-        )
-        p = (
-            cells.join(rowtot, "from_type")
-            .select(
-                "from_type",
-                "to_type",
-                F.round(F.col("n").cast("double") / F.col("row_n"), 6)
-                .cast("decimal(10,6)")
-                .alias("p"),
+        .persist()
+    )
+    states = cells.select(F.col("from_type").alias("s")).distinct().persist()
+    k = states.agg(F.count(F.lit(1)).cast("bigint").alias("k"))
+    v = states.crossJoin(F.broadcast(k)).select(
+        "s", F.round(F.lit(1.0) / F.col("k"), 9).cast("decimal(20,9)").alias("v")
+    )
+    vs = [v]
+    for _ in range(3):
+        prev = vs[-1]
+        nxt = (
+            states.join(p, p["to_type"] == states["s"], "left")
+            .join(
+                prev.withColumnRenamed("s", "ps"),
+                F.col("from_type") == F.col("ps"),
+                "left",
             )
-            .persist()
-        )
-        states = cells.select(F.col("from_type").alias("s")).distinct().persist()
-        k = states.agg(F.count(F.lit(1)).cast("bigint").alias("k"))
-        v = states.crossJoin(F.broadcast(k)).select(
-            "s", F.round(F.lit(1.0) / F.col("k"), 9).cast("decimal(20,9)").alias("v")
-        )
-        vs = [v]
-        for _ in range(3):
-            prev = vs[-1]
-            nxt = (
-                states.join(p, p["to_type"] == states["s"], "left")
-                .join(
-                    prev.withColumnRenamed("s", "ps"),
-                    F.col("from_type") == F.col("ps"),
-                    "left",
+            .groupBy("s")
+            .agg(
+                F.coalesce(
+                    F.sum(
+                        F.round(F.col("v") * F.col("p"), 9).cast("decimal(20,9)")
+                    ),
+                    F.lit(0),
                 )
-                .groupBy("s")
-                .agg(
-                    F.coalesce(
-                        F.sum(
-                            F.round(F.col("v") * F.col("p"), 9).cast("decimal(20,9)")
-                        ),
-                        F.lit(0),
-                    )
-                    .cast("decimal(20,9)")
-                    .alias("v")
-                )
+                .cast("decimal(20,9)")
+                .alias("v")
             )
-            vs.append(nxt.persist())
-        _MARKOV_CACHE[key] = (cells, p, states, *vs)
-    state = _MARKOV_CACHE[key]
-    return state[3:]  # v0..v3
+        )
+        vs.append(nxt.persist())
+    return vs
 
 
 @register(

@@ -118,7 +118,10 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
 #: any data: every action over the handle still scans the parquet
 #: files.  The mtime in the key makes a regenerated corpus at the same
 #: path miss the memo; the size bound keeps multi-corpus test sessions
-#: from accumulating entries.
+#: from accumulating entries.  A miss also refreshes Spark's cache for
+#: the path: Spark matches cached plans by file path, not by file
+#: version, so frames persisted over an older version of the file
+#: would otherwise keep serving its rows.
 _TABLE_CACHE: dict = {}
 
 
@@ -139,6 +142,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     key = (spark.sparkContext.applicationId, path, file_version(path))
     df = _TABLE_CACHE.get(key)
     if df is None:
+        spark.catalog.refreshByPath(path)
         df = spark.read.parquet(path)
         if name == "events":
             df = normalize_events_ts(df)

@@ -11,6 +11,7 @@ and the watermark bounds its size.
 
 from __future__ import annotations
 
+import shutil
 import tempfile
 import uuid
 
@@ -119,6 +120,7 @@ def run_to_memory_with_progress(
         def onQueryTerminated(self, event):
             terminated.append(str(event.id))
 
+    ckpt = tempfile.mkdtemp(prefix="ckpt_")
     listener = _Collect()
     spark.streams.addListener(listener)
     try:
@@ -127,7 +129,7 @@ def run_to_memory_with_progress(
             .queryName(name)
             .outputMode(mode)
             .trigger(availableNow=True)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
+            .option("checkpointLocation", ckpt)
             .start()
         )
         await_or_stop(q, timeout_s)
@@ -142,6 +144,9 @@ def run_to_memory_with_progress(
             seen.setdefault(d["batchId"], d)
     finally:
         spark.streams.removeListener(listener)
+        # the query has stopped (or never started) and the memory sink
+        # keeps its rows in memory, so the checkpoint is dead weight
+        shutil.rmtree(ckpt, ignore_errors=True)
     progress = [seen[b] for b in sorted(seen)]
     return spark.table(name), progress
 

@@ -682,21 +682,31 @@ def test_pagerank_partition_invariant_and_sums_to_n(spark):
     """The determinism claim of graph_pagerank_fixed: the round-then-
     DECIMAL contribution sums make every iteration order-free, so the
     result is bit-identical whether the edge list lives in 1 partition
-    or 32 — the property that makes the op hash-checkable AND stable
+    or many — the property that makes the op hash-checkable AND stable
     across cluster re-runs.  Also: with a symmetric (dangling-free)
     graph, total rank mass stays 1 (rank_rel averages 1.0)."""
-    from etl_builder_spark.operators.pagerank import graph_pagerank_fixed
+    from etl_builder_spark.operators.pagerank import _graph_state, graph_pagerank_fixed
+
+    def edge_partitions():
+        return _graph_state(spark, sf_dir)[0].rdd.getNumPartitions()
 
     sf_dir = "/root/testdata/sf0.001"
     base = graph_pagerank_fixed(spark, sf_dir)
     rows_multi = {r["node"]: r["rank_rel"] for r in base.collect()}
+    assert edge_partitions() > 1
 
     shuffled = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "1")
+        # drop the graph persisted under the multi-partition run, so this
+        # run rebuilds it in one partition instead of reusing the cache
+        spark.catalog.clearCache()
         rows_one = {r["node"]: r["rank_rel"] for r in graph_pagerank_fixed(spark, sf_dir).collect()}
+        assert edge_partitions() == 1
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", shuffled)
+        # later tests must not inherit the one-partition graph
+        spark.catalog.clearCache()
 
     assert rows_multi == rows_one  # bitwise, not approx
     n = len(rows_multi)

@@ -67,6 +67,22 @@ def test_session_stream_runs(spark, events_dir):
     assert n_events == 1000  # every event lands in exactly one session
 
 
+def test_memory_replay_removes_its_checkpoint(spark, events_dir):
+    """A memory-sink replay leaves no ``ckpt_*`` temp dir behind, and
+    its rows stay readable once the checkpoint is gone."""
+    import glob
+    import tempfile
+
+    def ckpts():
+        return set(glob.glob(os.path.join(tempfile.gettempdir(), "ckpt_*")))
+
+    before = ckpts()
+    ev = runtime.stream_events(spark, events_dir)
+    out = runtime.run_to_memory(runtime.session_counts(ev), "complete")
+    assert ckpts() == before
+    assert out.agg(F.sum("n_events")).collect()[0][0] == 1000
+
+
 def test_dedup_within_watermark(spark, tmp_path):
     """J5: a replayed duplicate file is fully deduplicated by event_id."""
     dup_dir = tmp_path / "dup_events"
