@@ -32,7 +32,7 @@ BROADCAST_DIMS = frozenset({"region", "nation", "supplier"})
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def get_spark(app_name: str = "etl_builder_spark", shuffle_partitions: int | None = None) -> SparkSession:
+def get_spark(app_name: str = "etl_builder_spark", shuffle_partitions: int = 32) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
     UTC timezone (corpus timestamps are naive; the DuckDB oracle is
@@ -40,8 +40,6 @@ def get_spark(app_name: str = "etl_builder_spark", shuffle_partitions: int | Non
     AQE for runtime re-planning.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
@@ -55,7 +53,7 @@ def get_spark(app_name: str = "etl_builder_spark", shuffle_partitions: int | Non
         # (toPandas canon); pair-valued keys at x100 return >1 GiB in
         # one task, tripping the 1g default maxResultSize (round-14
         # x100 sweep) — a harness sizing knob, not a plan property
-        .config("spark.driver.maxResultSize", os.environ.get("SPARK_GRAFT_MAX_RESULT", "8g"))
+        .config("spark.driver.maxResultSize", "8g")
         .config("spark.ui.enabled", "false")
     )
     spark = builder.getOrCreate()

@@ -13,74 +13,69 @@ shuffle-free SMJ shape is pinned by the plan test with broadcast
 disabled; values are identical either way.)
 
 The corpus ships single parquet files, so this module stages bucketed
-external tables (8 buckets on the order key) once per session into
-the warehouse-temp dir; bucket metadata lives in the session catalog,
-so staging re-registers (cheaply rewriting if needed) when a fresh
-session arrives.
+external tables (8 buckets on the order key) per corpus under the temp
+dir (sources/staging.py decides where, and when a table's files are
+stale); the bucket spec lives in the session catalog, so a session
+that has not registered a table yet rewrites it.
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
+import re
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from etl_builder_spark.policy import money
 from etl_builder_spark.registry import register
-from etl_builder_spark.session import load_table
+from etl_builder_spark.session import file_version, load_table
+from etl_builder_spark.sources.staging import is_current, mark_built, stage_path
 
 N_BUCKETS = 8
+
+
+def _staged_bucketed(
+    spark: SparkSession, sf_dir: str, name: str, key: str, cols: tuple[str, ...]
+) -> str:
+    """``name`` projected to ``cols`` as an external table bucketed
+    (and bucket-sorted) on ``key``; returns the catalog table name.
+    The table and its files are named after the corpus's stage path,
+    so same-basename corpora never share them.  ``staged()``'s swap
+    cannot move a catalog table's files (``saveAsTable`` pins the
+    path), so this rewrites in place under the same freshness check."""
+    stage = stage_path(f"etl_builder_spark_bucketed_{name}", sf_dir)
+    table = f"{name}_bkt_" + re.sub(r"\W", "_", os.path.basename(stage))
+    version = file_version(os.path.join(sf_dir, f"{name}.parquet"))
+    if not spark.catalog.tableExists(table) or not is_current(stage, version):
+        (
+            load_table(spark, sf_dir, name)
+            .select(*cols)
+            .write.mode("overwrite")
+            .bucketBy(N_BUCKETS, key)
+            .sortBy(key)
+            .option("path", stage)
+            .format("parquet")
+            .saveAsTable(table)
+        )
+        mark_built(stage, version)
+    return table
 
 
 def staged_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """lineitem and orders as external bucketed tables (8 buckets on
     the order key, bucket-sorted), registered in the session catalog.
-    Returns (lineitem_table, orders_table) names."""
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    tl, to = f"lineitem_bkt_{tag}", f"orders_bkt_{tag}"
-    stage = os.path.join(tempfile.gettempdir(), "etl_builder_spark_bucketed", tag)
-
-    def _stale(marker: str, src: str) -> bool:
-        # Freshness mirrors partitioned._staged marker: the corpus is
-        # known to regenerate in place between rounds, and a catalog
-        # tableExists check alone would silently serve stale bucketed
-        # copies while the DuckDB oracle reads the fresh files
-        # (ADVICE r4).
-        return not os.path.exists(marker) or os.path.getmtime(marker) < os.path.getmtime(src)
-
-    ml = os.path.join(stage, "_staged_lineitem")
-    if not spark.catalog.tableExists(tl) or _stale(ml, os.path.join(sf_dir, "lineitem.parquet")):
-        (
-            load_table(spark, sf_dir, "lineitem")
-            .select("l_orderkey", "l_extendedprice", "l_discount")
-            .write.mode("overwrite")
-            .bucketBy(N_BUCKETS, "l_orderkey")
-            .sortBy("l_orderkey")
-            .option("path", os.path.join(stage, "lineitem"))
-            .format("parquet")
-            .saveAsTable(tl)
-        )
-        os.makedirs(stage, exist_ok=True)
-        with open(ml, "w") as f:
-            f.write("ok")
-    mo = os.path.join(stage, "_staged_orders")
-    if not spark.catalog.tableExists(to) or _stale(mo, os.path.join(sf_dir, "orders.parquet")):
-        (
-            load_table(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_orderdate")
-            .write.mode("overwrite")
-            .bucketBy(N_BUCKETS, "o_orderkey")
-            .sortBy("o_orderkey")
-            .option("path", os.path.join(stage, "orders"))
-            .format("parquet")
-            .saveAsTable(to)
-        )
-        os.makedirs(stage, exist_ok=True)
-        with open(mo, "w") as f:
-            f.write("ok")
-    return tl, to
+    Returns (lineitem_table, orders_table) names.  A corpus table
+    rewritten at the same path rewrites its bucketed copy: a catalog
+    ``tableExists`` check alone would serve stale bucketed copies while
+    the DuckDB oracle reads the fresh files (ADVICE r4)."""
+    return (
+        _staged_bucketed(
+            spark, sf_dir, "lineitem", "l_orderkey",
+            ("l_orderkey", "l_extendedprice", "l_discount"),
+        ),
+        _staged_bucketed(spark, sf_dir, "orders", "o_orderkey", ("o_orderkey", "o_orderdate")),
+    )
 
 
 @register(

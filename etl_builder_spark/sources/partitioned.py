@@ -14,37 +14,31 @@ The 100 TB scan discipline has two halves:
   and scanning one quarter.
 
 Single-file corpus parquet can't show either, so this module stages a
-month-partitioned copy of ``orders`` (written once per sf_dir through
-the normal writer path, ``partitionBy("o_month")``) and runs the
-star-schema probe against it.  Values are partitioning-invariant, so
-the DuckDB oracle reads the original single-file table.
+month-partitioned copy of ``orders`` (written through the normal writer
+path, ``partitionBy("o_month")``, and rebuilt when ``orders`` changes —
+see sources/staging.py) and runs the star-schema probe against it.
+Values are partitioning-invariant, so the DuckDB oracle reads the
+original single-file table.
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from etl_builder_spark.policy import money_sum
 from etl_builder_spark.registry import register
 from etl_builder_spark.session import load_table
+from etl_builder_spark.sources.staging import MARKER, empty_stage, staged
 
 
 def staged_orders_by_month(spark: SparkSession, sf_dir: str) -> str:
     """orders as a ``o_month=yyyy-MM``-partitioned parquet layout (~80
-    directories), staged once per sf_dir and reused (marker-file
-    memoized, invalidated when the source file changes)."""
-    stage = os.path.join(
-        tempfile.gettempdir(),
-        "etl_builder_spark_dpp",
-        os.path.basename(sf_dir.rstrip("/")),
-    )
-    src = os.path.join(sf_dir, "orders.parquet")
-    done = os.path.join(stage, "_staged")
-    if not os.path.exists(done) or os.path.getmtime(done) < os.path.getmtime(src):
+    directories), staged per corpus and rebuilt when ``orders`` changes."""
+
+    def _build(stage):
         (
             load_table(spark, sf_dir, "orders")
             .withColumn("o_month", F.date_format("o_orderdate", "yyyy-MM"))
@@ -52,9 +46,8 @@ def staged_orders_by_month(spark: SparkSession, sf_dir: str) -> str:
             .partitionBy("o_month")
             .parquet(stage)
         )
-        with open(done, "w") as f:
-            f.write("ok")
-    return stage
+
+    return staged("etl_builder_spark_dpp", sf_dir, os.path.join(sf_dir, "orders.parquet"), _build)
 
 
 def read_orders_month_stage(spark: SparkSession, sf_dir: str):
@@ -117,13 +110,6 @@ def scan_dpp_partitioned(spark, sf_dir):
     )
 
 
-def write_partitioned(df: DataFrame, path: str, *cols: str) -> None:
-    """General partitioned-layout writer (the A4 write path with a
-    partition spec): one directory per distinct partition tuple, the
-    layout static and dynamic pruning both consume."""
-    df.write.mode("overwrite").partitionBy(*cols).parquet(path)
-
-
 @register(
     "etl_dynamic_partition_overwrite",
     oracle="""
@@ -157,8 +143,6 @@ def etl_dynamic_partition_overwrite(spark, sf_dir):
     transaction; the blast radius of a re-run is exactly the partitions
     in the batch.  (Transactional formats layer snapshots on top; the
     dynamic-overwrite contract is the format-agnostic floor.)"""
-    import tempfile as _tempfile
-
     from etl_builder_spark.policy import money
 
     monthly = (
@@ -169,7 +153,7 @@ def etl_dynamic_partition_overwrite(spark, sf_dir):
             F.sum(money("o_totalprice")).cast("double").alias("month_total"),
         )
     )
-    sink = _tempfile.mkdtemp(prefix="dpo_sink_")
+    sink = empty_stage("etl_builder_spark_dpo", sf_dir)
     old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
@@ -201,23 +185,18 @@ def etl_dynamic_partition_overwrite(spark, sf_dir):
 
 def staged_fragmented_events(spark: SparkSession, sf_dir: str, n_files: int = 64) -> str:
     """events deliberately shattered into ``n_files`` tiny parquet
-    files (round-robin repartition — no semantic layout), staged once
-    per sf_dir, mtime-invalidated.  Models the small-file problem a
-    streaming or per-task-commit ingest leaves behind."""
-    stage = os.path.join(
-        tempfile.gettempdir(),
-        "etl_builder_spark_smallfiles",
-        os.path.basename(sf_dir.rstrip("/")),
-    )
-    src = os.path.join(sf_dir, "events.parquet")
-    done = os.path.join(stage, "_staged")
-    if not os.path.exists(done) or os.path.getmtime(done) < os.path.getmtime(src):
+    files (round-robin repartition — no semantic layout), staged per
+    corpus and rebuilt when ``events`` changes.  Models the small-file
+    problem a streaming or per-task-commit ingest leaves behind."""
+
+    def _build(stage):
         load_table(spark, sf_dir, "events").repartition(n_files).write.mode(
             "overwrite"
         ).parquet(stage)
-        with open(done, "w") as f:
-            f.write("ok")
-    return stage
+
+    return staged(
+        "etl_builder_spark_smallfiles", sf_dir, os.path.join(sf_dir, "events.parquet"), _build
+    )
 
 
 @register(
@@ -247,36 +226,16 @@ def etl_small_file_compaction(spark, sf_dir):
     stragglers).  tests/test_sources.py asserts the file-count drop
     and byte-level parquet validity of the compacted layout."""
     frag_dir = staged_fragmented_events(spark, sf_dir)
-    # Fixed, mtime-invalidated sink (same pattern as the fragmented
-    # stage) — a fresh mkdtemp per invocation leaked a full copy of
-    # events per run (ADVICE r5).
-    sink = os.path.join(
-        tempfile.gettempdir(),
-        "etl_builder_spark_compacted",
-        os.path.basename(sf_dir.rstrip("/")),
-    )
-    done = os.path.join(sink, "_staged")
-    frag_marker = os.path.join(frag_dir, "_staged")
-    # Advisory flock serializes the stale-check + overwrite + marker
-    # across concurrent sessions (ADVICE r6: two sessions hitting a
-    # stale sink could interleave).  A reader in a THIRD process that
-    # skips the lock can still observe a mid-overwrite sink — full
-    # isolation needs versioned dirs + a pointer swap, overkill for the
-    # single-session harness; at real scale this is the table format's
-    # job (Iceberg/Delta snapshot commit).
-    os.makedirs(sink, exist_ok=True)
-    import fcntl
 
-    with open(os.path.join(os.path.dirname(sink), ".compaction_lock"), "w") as lk:
-        fcntl.flock(lk, fcntl.LOCK_EX)
-        if not os.path.exists(done) or os.path.getmtime(done) < os.path.getmtime(
-            frag_marker
-        ):
-            spark.read.parquet(frag_dir).repartition(4).write.mode("overwrite").parquet(
-                sink
-            )
-            with open(done, "w") as f:
-                f.write("ok")
+    # The compacted layout is itself a stage, derived from the
+    # fragmented one: it is rebuilt when that stage's marker changes,
+    # and swapped in whole, so no reader sees a half-written sink.
+    def _build(stage):
+        spark.read.parquet(frag_dir).repartition(4).write.mode("overwrite").parquet(stage)
+
+    sink = staged(
+        "etl_builder_spark_compacted", sf_dir, os.path.join(frag_dir, MARKER), _build
+    )
     return spark.read.parquet(sink).select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
@@ -336,18 +295,11 @@ def scan_glob_paths(spark, sf_dir):
 
 def staged_daily_rollup(spark: SparkSession, sf_dir: str) -> str:
     """Materialized daily summary of events — (day, type, count, exact
-    DECIMAL value sum) — staged once per sf_dir, mtime-invalidated.
-    The summary table an aggregate-navigator routes to."""
+    DECIMAL value sum) — staged per corpus and rebuilt when ``events``
+    changes.  The summary table an aggregate-navigator routes to."""
     from etl_builder_spark.policy import money
 
-    stage = os.path.join(
-        tempfile.gettempdir(),
-        "etl_builder_spark_rollup",
-        os.path.basename(sf_dir.rstrip("/")),
-    )
-    src = os.path.join(sf_dir, "events.parquet")
-    done = os.path.join(stage, "_staged")
-    if not os.path.exists(done) or os.path.getmtime(done) < os.path.getmtime(src):
+    def _build(stage):
         (
             load_table(spark, sf_dir, "events")
             .groupBy(
@@ -361,9 +313,8 @@ def staged_daily_rollup(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(stage)
         )
-        with open(done, "w") as f:
-            f.write("ok")
-    return stage
+
+    return staged("etl_builder_spark_rollup", sf_dir, os.path.join(sf_dir, "events.parquet"), _build)
 
 
 @register(

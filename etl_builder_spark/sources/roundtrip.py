@@ -16,7 +16,6 @@ Double.toString ↔ parse pair.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -31,6 +30,7 @@ from pyspark.sql.types import (
 from etl_builder_spark.registry import register
 from etl_builder_spark.session import load_table
 from etl_builder_spark.sources.readers import read_csv, read_json
+from etl_builder_spark.sources.staging import empty_stage
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
 
@@ -72,9 +72,7 @@ def roundtrip_csv_json(spark, sf_dir):
             F.col("o_orderdate").cast("timestamp").alias("o_orderdate"),
         )
     )
-    root = os.path.join(
-        tempfile.gettempdir(), "etl_builder_spark_roundtrip", os.path.basename(sf_dir.rstrip("/"))
-    )
+    root = empty_stage("etl_builder_spark_roundtrip", sf_dir)
     csv_path, json_path = os.path.join(root, "csv"), os.path.join(root, "json")
     base.write.mode("overwrite").option("header", "true").option(
         "timestampFormat", _TS_FMT
@@ -106,12 +104,7 @@ def roundtrip_schema_evolution(spark, sf_dir):
     explicit NULL — so the merged read's value semantics, not just its
     schema, are checked."""
     orders = load_table(spark, sf_dir, "orders")
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "etl_builder_spark_roundtrip",
-        os.path.basename(sf_dir.rstrip("/")),
-        "evolution",
-    )
+    root = empty_stage("etl_builder_spark_roundtrip_evolution", sf_dir)
     v1 = orders.where(F.col("o_orderkey") < 1000).select("o_orderkey", "o_orderstatus")
     v2 = orders.where((F.col("o_orderkey") >= 1000) & (F.col("o_orderkey") < 2000)).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -149,12 +142,7 @@ def roundtrip_orc(spark, sf_dir):
             "o_orderpriority",
         )
     )
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "etl_builder_spark_roundtrip",
-        os.path.basename(sf_dir.rstrip("/")),
-        "orc",
-    )
+    path = empty_stage("etl_builder_spark_roundtrip_orc", sf_dir)
     base.write.mode("overwrite").orc(path)
     return spark.read.orc(path)
 
@@ -208,11 +196,7 @@ def scan_csv_corrupt_permissive(spark, sf_dir):
             corrupt_price,
         ).alias("value")
     )
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "etl_builder_spark_corruptcsv",
-        os.path.basename(sf_dir.rstrip("/")),
-    )
+    root = empty_stage("etl_builder_spark_corruptcsv", sf_dir)
     lines.write.mode("overwrite").text(root)
     schema = StructType(
         [
@@ -282,11 +266,7 @@ def etl_union_schema_drift(spark, sf_dir):
             F.when(F.col("o_orderkey") % 3 == 0, "web").otherwise("store").alias("o_channel"),
         )
     )
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "etl_builder_spark_schemadrift",
-        os.path.basename(sf_dir.rstrip("/")),
-    )
+    root = empty_stage("etl_builder_spark_schemadrift", sf_dir)
     p1, p2 = os.path.join(root, "v1"), os.path.join(root, "v2")
     v1.write.mode("overwrite").parquet(p1)
     v2.write.mode("overwrite").parquet(p2)

@@ -1,26 +1,29 @@
-"""Shared staging-directory discipline for keys that materialize
-fixture files on local disk (blob dirs, JSONL corpora, stream replay
-slices).
+"""Where a key's on-disk files live, and when they are rebuilt.
 
-Why this exists (ADVICE r10): the round-10 stagers keyed their tempdir
-paths on ``basename(sf_dir)`` only, so two corpora with the same
-basename under different parents (``/a/sf0.01`` vs ``/b/sf0.01``)
-collided — and the mtime marker guard would then happily serve the
-OTHER corpus's staged files.  Worse, restaging wrote over a live
-directory without clearing it, so stale files (e.g. ``doc_*.bin``
-beyond a shrunken ``BLOB_DOC_MAX``) survived and were picked up by
-unfiltered directory scans.
+This module owns every directory a key writes under the temp dir:
 
-The contract here fixes both:
+- **Derived stages** (``staged``): files built from a corpus table —
+  a partitioned or fragmented copy, a rollup, a stream replay slice —
+  and reused until that table changes.  The build goes into a unique
+  scratch dir and is swapped in with ``os.rename``, so a reader sees
+  either the whole old stage or the whole new one.  The stage's
+  marker records the version of the source file it was built from
+  (``session.file_version``), and any other version rebuilds it,
+  whether the file's mtime moved forwards or back.
+- **Per-call outputs** (``empty_stage``): dirs a key writes on every
+  call (round-trip files, stream sinks and their checkpoints).  The
+  dir is emptied first, so disk use stays at one dir per key and
+  corpus however often the key runs, and nothing from the last call
+  survives (a left-over checkpoint would replay nothing).
 
-- ``stage_path`` keys the directory on basename PLUS a sha256 digest of
-  the ABSOLUTE source path, so distinct corpora can never share a stage;
-- ``staged`` clears the directory completely before every rebuild, so a
-  stage only ever contains exactly what the current builder wrote.
+Both are keyed by ``stage_path``: the corpus basename plus a digest of
+its ABSOLUTE path, so two corpora with the same basename under
+different parents (``/a/sf0.01`` and ``/b/sf0.01``) never share files.
 
 100 TB posture: staging is a TEST-FIXTURE concern (local replay dirs
-for the streaming/binary-source keys) — production pipelines read the
-real object store directly; nothing here is on the scaled data path.
+and re-layouts of the single-file corpus) — production pipelines read
+the real object store directly; nothing here is on the scaled data
+path.
 """
 
 from __future__ import annotations
@@ -30,6 +33,11 @@ import os
 import shutil
 import tempfile
 from collections.abc import Callable
+
+from etl_builder_spark.session import file_version
+
+#: file in a finished stage that records the source version it was built from
+MARKER = "_staged"
 
 
 def stage_path(family: str, sf_dir: str) -> str:
@@ -45,10 +53,28 @@ def stage_path(family: str, sf_dir: str) -> str:
     )
 
 
+def is_current(stage: str, version: int) -> bool:
+    """True when ``stage`` holds a finished build of source version
+    ``version`` (a ``session.file_version``)."""
+    try:
+        with open(os.path.join(stage, MARKER)) as f:
+            return f.read() == str(version)
+    except OSError:
+        return False
+
+
+def mark_built(stage: str, version: int) -> None:
+    """Record in ``stage`` that it holds a finished build of source
+    version ``version``.  Spark's readers skip ``_``-prefixed files, so
+    the marker may sit inside a parquet table's dir."""
+    with open(os.path.join(stage, MARKER), "w") as f:
+        f.write(str(version))
+
+
 def staged(family: str, sf_dir: str, src: str, build: Callable[[str], None]) -> str:
     """Marker-guarded idempotent staging, atomic-swap edition.
 
-    If the ``_staged`` marker is missing or older than ``src``, the
+    If the marker does not record the current version of ``src``, the
     stage is rebuilt — but never in place (ADVICE r11: the old
     clear-first ``rmtree`` could delete files out from under a
     concurrent reader, and two processes racing the marker check could
@@ -60,15 +86,14 @@ def staged(family: str, sf_dir: str, src: str, build: Callable[[str], None]) -> 
     tree or the complete new one, never a partially-built state.
     """
     stage = stage_path(family, sf_dir)
-    done = os.path.join(stage, "_staged")
-    if not os.path.exists(done) or os.path.getmtime(done) < os.path.getmtime(src):
+    version = file_version(src)
+    if not is_current(stage, version):
         parent = os.path.dirname(stage)
         os.makedirs(parent, exist_ok=True)
         scratch = tempfile.mkdtemp(prefix=os.path.basename(stage) + ".build-", dir=parent)
         try:
             build(scratch)
-            with open(os.path.join(scratch, "_staged"), "w") as f:
-                f.write("ok")
+            mark_built(scratch, version)
             # swap in: move any existing stage aside first (rename onto a
             # non-empty dir fails on POSIX), then promote the scratch tree.
             trash = None
@@ -91,6 +116,19 @@ def staged(family: str, sf_dir: str, src: str, build: Callable[[str], None]) -> 
     return stage
 
 
+def empty_stage(family: str, sf_dir: str) -> str:
+    """``stage_path(family, sf_dir)``, emptied and ready to write: the
+    output dir of a key that writes on every call.  Emptying matters
+    beyond disk use: a checkpoint left from the last call would make a
+    stream replay nothing, and a dynamic partition overwrite would keep
+    partitions the new data no longer has.  A frame that reads the dir
+    is only good until the key's next call on the same corpus."""
+    stage = stage_path(family, sf_dir)
+    shutil.rmtree(stage, ignore_errors=True)
+    os.makedirs(stage, exist_ok=True)
+    return stage
+
+
 def copy_parquet(src: str, dst: str) -> None:
     """Copy a parquet TABLE to a single file, whether ``src`` is a
     single-file corpus (the shipped sf dirs) or a Spark-written
@@ -107,8 +145,6 @@ def copy_parquet(src: str, dst: str) -> None:
     flow back through this stager.  ``pyarrow.dataset`` scans fragments
     in file order with a single thread, so the consolidated row order
     is deterministic — same guarantee the one-shot read gave."""
-    import shutil
-
     import pyarrow.dataset as pads
     import pyarrow.parquet as pq
 

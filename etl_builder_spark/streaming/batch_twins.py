@@ -437,9 +437,10 @@ def stream_foreachbatch_sink(spark, sf_dir):
     after a batch's sink write but before its offset commit, restarts
     from the checkpoint, and proves the redelivered batch overwrites
     (never appends) — final sink ≡ batch oracle, zero duplicates."""
-    import tempfile as _tempfile
+    import os as _os
 
     from etl_builder_spark.policy import money as _money
+    from etl_builder_spark.sources.staging import empty_stage
     from etl_builder_spark.streaming.runtime import (
         foreach_batch_parquet_sink,
         stream_events,
@@ -449,8 +450,8 @@ def stream_foreachbatch_sink(spark, sf_dir):
     purchases = events.where(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts", _money("value").cast("double").alias("value_2dp")
     )
-    sink = _tempfile.mkdtemp(prefix="fb_sink_")
-    ckpt = _tempfile.mkdtemp(prefix="fb_ckpt_")
+    root = empty_stage("etl_builder_spark_fb_sink", sf_dir)
+    sink, ckpt = _os.path.join(root, "sink"), _os.path.join(root, "ckpt")
     foreach_batch_parquet_sink(purchases, sink, ckpt)
     return spark.read.parquet(sink).select("event_id", "user_id", "ts", "value_2dp")
 
@@ -573,16 +574,17 @@ def stream_merge_upsert_live(spark, sf_dir):
     'latest' column rides the padded (epoch_us, event_id) max-key, so
     the result is batching-invariant and sits under the exact hash.
     last_ts is decoded from the key (its ts component IS max(ts))."""
-    import tempfile as _tempfile
+    import os as _os
 
+    from etl_builder_spark.sources.staging import empty_stage
     from etl_builder_spark.streaming.runtime import (
         foreach_batch_merge_sink,
         stream_events,
     )
 
     events = stream_events(spark, _staged_events_3files(sf_dir), max_files_per_trigger=1)
-    target = _tempfile.mkdtemp(prefix="merge_sink_")
-    ckpt = _tempfile.mkdtemp(prefix="merge_ckpt_")
+    root = empty_stage("etl_builder_spark_merge_sink", sf_dir)
+    target, ckpt = _os.path.join(root, "sink"), _os.path.join(root, "ckpt")
     final = foreach_batch_merge_sink(
         events.select("user_id", "ts", "event_id", "value"), target, ckpt
     )

@@ -18,27 +18,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-#: raw schema of a ns-generation events.parquet (ts is ns-epoch long
-#: under nanosAsLong); kept for reference — stream_events probes the
-#: actual footer schema instead of assuming a corpus generation.
-EVENTS_RAW_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("ts", LongType()),
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-        StructField("props", StringType()),
-    ]
-)
+from pyspark.sql.types import LongType, StructField, StructType
 
 
 def stream_events(spark: SparkSession, path: str, max_files_per_trigger: int | None = None) -> DataFrame:
@@ -48,10 +28,9 @@ def stream_events(spark: SparkSession, path: str, max_files_per_trigger: int | N
     stream working across corpus generations where ts was TIMESTAMP
     (NANOS) (ns-long under nanosAsLong) vs TIMESTAMP(MICROS) (NTZ);
     normalize_events_ts converts either to session-UTC TimestampType."""
-    from etl_builder_spark.session import normalize_events_ts
+    from etl_builder_spark.session import _pin_runtime_confs, normalize_events_ts
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    _pin_runtime_confs(spark)
     schema = spark.read.parquet(path).schema
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:

@@ -38,7 +38,7 @@ def emit_fingerprints() -> int:
         sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", json.load(f)["sf_dir"])
     _ensure_loaded()
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
-    spark = get_spark("fingerprints", shuffle_partitions=int(os.environ.get("SPARK_GRAFT_SHUFFLE", "8")))
+    spark = get_spark("fingerprints", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
     fps: dict[str, str] = {}

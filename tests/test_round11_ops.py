@@ -356,15 +356,18 @@ def test_xml_source_roundtrip_matches_elementtree(spark):
     assert census == {k: tuple(v) for k, v in py.items()}
 
 
-def test_staging_digest_keys_and_clear_first(tmp_path):
+def test_staging_digest_keys_and_clear_first(tmp_path, monkeypatch):
     """ADVICE r10 closure, asserted directly: (1) two corpora with the
     SAME basename under different parents stage to DIFFERENT
     directories; (2) restaging after the source changes CLEARS stale
     files instead of leaving them for unfiltered directory scans."""
     import os
+    import tempfile
     import time
 
     from etl_builder_spark.sources.staging import stage_path, staged
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
 
     a = tmp_path / "parent_a" / "sf0.01"
     b = tmp_path / "parent_b" / "sf0.01"
@@ -404,13 +407,21 @@ def test_staging_digest_keys_and_clear_first(tmp_path):
     assert os.path.exists(os.path.join(s2, "fresh.bin"))
     # atomic-swap hygiene (ADVICE r11): no scratch (.build-) or trash
     # (.old-) siblings left behind after the rebuild, and the marker
-    # landed with the swap.  (Other digest-keyed stages from earlier
-    # runs legitimately share the family dir — only swap debris fails.)
+    # landed with the swap.
     debris = [
         d for d in os.listdir(os.path.dirname(s2)) if ".build-" in d or ".old-" in d
     ]
     assert debris == [], f"stray staging scratch/trash dirs: {debris}"
     assert os.path.exists(os.path.join(s2, "_staged"))
+    # a source rewritten with its mtime set back to BEFORE the marker
+    # (a restored backup, an ``rsync -t`` copy) is still a new version
+    built = os.stat(src).st_mtime_ns
+    (a / "src.bin").write_text("v2")
+    os.utime(src, ns=(built - 10**9, built - 10**9))
+    assert os.path.getmtime(src) < os.path.getmtime(os.path.join(s2, "_staged"))
+    s3 = staged("t_fam", str(a), src, build_one)
+    assert s3 == s1 and len(writes) == 3, "an older-mtime source did not rebuild"
+    assert os.path.exists(os.path.join(s3, "stale_leftover.bin"))
 
 
 def test_samesemantics_key_raises_on_divergent_plan(spark):

@@ -3,11 +3,22 @@ explicit schemas, partitioned/sorted parquet writes, bucketed tables."""
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+
+import duckdb
+import pytest
 from pyspark.sql import functions as F
 
-from etl_builder_spark.session import load_table
+from etl_builder_spark.registry import REGISTRY, _ensure_loaded
+from etl_builder_spark.session import TABLES, load_table
 from etl_builder_spark.sources import readers, writers
+from selfcheck import check_query_parity
 from tests.conftest import SF_DIR
+from tests.test_cache import _halve_in_place
+
+_ensure_loaded()
 
 
 def test_csv_roundtrip(spark, tmp_path):
@@ -228,3 +239,59 @@ def test_zorder_layout_prunes_2d_boxes(spark, tmp_path):
     assert linear_touched == 16, linear_touched
     # the z-layout must actually prune files on the non-sorted dimension
     assert zorder_touched < linear_touched, (zorder_touched, linear_touched)
+
+
+#: (key, the corpus table its on-disk stage is derived from)
+STAGED_KEYS = [
+    ("scan_dpp_partitioned", "orders"),
+    ("scan_glob_paths", "orders"),
+    ("etl_small_file_compaction", "events"),
+    ("etl_rollup_reaggregation", "events"),
+    ("join_bucketed_colocated", "orders"),
+    ("agg_bucketed_no_shuffle", "lineitem"),
+]
+
+
+@pytest.mark.parametrize("key, table", STAGED_KEYS)
+def test_same_basename_corpora_never_share_stages(spark, tmp_path, monkeypatch, key, table):
+    """Two corpora named ``sf`` under different parents, one with the
+    key's input table halved: running the key on the first must not
+    leave a stage that the second then reads — the second run must
+    agree with DuckDB over its own files."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    a, b = tmp_path / "a" / "sf", tmp_path / "b" / "sf"
+    for d in (a, b):
+        shutil.copytree(SF_DIR, d, copy_function=shutil.copyfile)
+    _halve_in_place(b / f"{table}.parquet")
+    spec = REGISTRY[key]
+    spec.fn(spark, str(a)).collect()
+
+    con = duckdb.connect()
+    try:
+        for t in TABLES:
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{b}/{t}.parquet')")
+        status, detail, _ = check_query_parity(spark, con, key, spec, str(b))
+    finally:
+        con.close()
+    assert status == "OK", f"{key} on b after a run on a: {status} — {detail}"
+
+
+def test_sink_keys_leave_temp_dir_bounded(spark, tmp_path, monkeypatch):
+    """Keys that write on every call reuse one emptied dir per key and
+    corpus: a second pass adds nothing under the temp dir."""
+    import glob
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    keys = ("stream_foreachbatch_sink", "stream_merge_upsert_live", "etl_dynamic_partition_overwrite")
+
+    def run_pass():
+        for k in keys:
+            REGISTRY[k].fn(spark, SF_DIR).collect()
+        root = tempfile.gettempdir()
+        return sorted(
+            os.path.relpath(p, root)
+            for p in glob.glob(os.path.join(root, "*")) + glob.glob(os.path.join(root, "*", "*"))
+        )
+
+    first = run_pass()
+    assert run_pass() == first
