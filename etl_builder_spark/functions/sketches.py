@@ -32,12 +32,6 @@ def hll_merge(sketch: Column) -> Column:
     return F.hll_union_agg(sketch)
 
 
-def count_min(col: str | Column, eps: float = 0.001, confidence: float = 0.99, seed: int = 42) -> Column:
-    """Count-Min sketch aggregate — binary, mergeable; point-frequency
-    estimates for heavy-hitter queries."""
-    return F.count_min_sketch(col, F.lit(eps), F.lit(confidence), F.lit(seed))
-
-
 @register(
     "sketch_hll_users",
     oracle=None,  # HLL estimates differ across engines → rows-only
@@ -111,14 +105,14 @@ CM_PERMS: tuple[tuple[int, int], ...] = ((31, 7), (131, 13), (571, 23), (1019, 4
     tags=("D13-exact",),
 )
 def sketch_count_min_exact(spark, sf_dir):
-    """Count-Min sketching made hash-checkable — the exact twin of the
-    engine-specific count_min_sketch helper (the pinned-PQ-codebook
-    move applied to frequency estimation): a depth-4 x width-64 CM
-    table built RELATIONALLY with pinned universal hashes (counters =
-    one (d, bucket) aggregate over token frequencies), then point
-    queries for the 20 most frequent tokens return min-over-depth
-    counters next to the true counts, so the canonical one-sided
-    overestimate is visible and hash-verified.
+    """Count-Min sketching made hash-checkable — the exact counterpart
+    of Spark's engine-specific count_min_sketch aggregate (the
+    pinned-PQ-codebook move applied to frequency estimation): a
+    depth-4 x width-64 CM table built RELATIONALLY with pinned
+    universal hashes (counters = one (d, bucket) aggregate over token
+    frequencies), then point queries for the 20 most frequent tokens
+    return min-over-depth counters next to the true counts, so the
+    canonical one-sided overestimate is visible and hash-verified.
 
     100 TB posture: the sketch build is a fixed 256-cell aggregate
     with map-side combine (this is WHY CM exists at scale); queries

@@ -50,6 +50,35 @@ def _with_planted_dups(d: DataFrame) -> DataFrame:
     return d.unionByName(mangled)
 
 
+def _trimmed_copy(d: DataFrame, n_drop: int) -> DataFrame:
+    """The planted near-duplicate of each (doc_id, text) row: doc_id
+    shifted by PLANT_OFFSET, text without its last ``n_drop`` words
+    (at least one word kept)."""
+    return d.select(
+        (F.col("doc_id") + PLANT_OFFSET).alias("doc_id"),
+        F.array_join(
+            F.slice(
+                F.split("text", " "), 1, F.greatest(F.size(F.split("text", " ")) - n_drop, F.lit(1))
+            ),
+            " ",
+        ).alias("text"),
+    )
+
+
+def _band_collisions(bands: DataFrame) -> DataFrame:
+    """LSH candidate self-join of a (doc_id, band, bh) frame under
+    aliases ``a`` and ``b``: one row per band in which two documents'
+    band keys ``bh`` collide, a.doc_id < b.doc_id — candidates come
+    only from bucket collisions, never all pairs."""
+    a, b = bands.alias("a"), bands.alias("b")
+    return a.join(
+        b,
+        (F.col("a.band") == F.col("b.band"))
+        & (F.col("a.bh") == F.col("b.bh"))
+        & (F.col("a.doc_id") < F.col("b.doc_id")),
+    )
+
+
 @register(
     "dedup_exact_normalized",
     oracle=f"""
@@ -215,7 +244,7 @@ def _minhash_sig_bands(everything):
     3-word shingles → char-poly hash mod P → 16 permuted minima as 16
     map-side-combined aggregates → (doc_id, i, minh) long form → 4×4
     band keys.  Returns (sig, bands)."""
-    # HOF expressions as SQL text (r16, dot_sql rationale): the gram
+    # HOF expressions as SQL text (r16, the similarity.dot rationale): the gram
     # transform, char-code filter and rolling-hash fold cost ~7 lambda
     # constructions of py4j round trips per build; the parsed strings
     # yield the same Catalyst trees (CAST(0 AS BIGINT) is the long
@@ -345,15 +374,7 @@ def dedup_minhash_exact(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 200).select(
         "doc_id", fold_lower("text").alias("text")
     )
-    planted = d.select(
-        (F.col("doc_id") + PLANT_OFFSET).alias("doc_id"),
-        F.array_join(
-            F.slice(
-                F.split("text", " "), 1, F.greatest(F.size(F.split("text", " ")) - 2, F.lit(1))
-            ),
-            " ",
-        ).alias("text"),
-    )
+    planted = _trimmed_copy(d, 2)
     everything = d.unionByName(planted)
     # 16 permuted minima are computed as 16 aggregate expressions over
     # the UN-expanded shingle rows (map-side combine does the heavy
@@ -361,14 +382,8 @@ def dedup_minhash_exact(spark, sf_dir):
     # 16 broadcast perms before aggregating, 16× the shuffle volume
     # for identical values (VERDICT r3 item 3).
     sig, bands = _minhash_sig_bands(everything)
-    a, b = bands.alias("a"), bands.alias("b")
     cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        _band_collisions(bands)
         .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("n_shared_bands"))
     )
@@ -484,15 +499,7 @@ def dedup_minhash_incremental(spark, sf_dir):
         "doc_id", fold_lower("text").alias("text")
     )
     old = d.where(F.col("doc_id") < INC_OLD_MAX)
-    plants = old.select(
-        (F.col("doc_id") + PLANT_OFFSET).alias("doc_id"),
-        F.array_join(
-            F.slice(
-                F.split("text", " "), 1, F.greatest(F.size(F.split("text", " ")) - 2, F.lit(1))
-            ),
-            " ",
-        ).alias("text"),
-    )
+    plants = _trimmed_copy(old, 2)
     everything = d.unionByName(plants)
     sig, bands = _minhash_sig_bands(everything)
     n, o = bands.alias("n"), bands.alias("o")
@@ -543,10 +550,7 @@ def dedup_minhash_lsh(spark, sf_dir):
     from pyspark.ml.feature import HashingTF, MinHashLSH, Tokenizer
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", fold_lower("text").alias("text"))
-    trimmed = d.select(
-        (F.col("doc_id") + PLANT_OFFSET).alias("doc_id"),
-        F.array_join(F.slice(F.split("text", " "), 1, F.greatest(F.size(F.split("text", " ")) - 2, F.lit(1))), " ").alias("text"),
-    )
+    trimmed = _trimmed_copy(d, 2)
     tok = Tokenizer(inputCol="text", outputCol="words")
     tf = HashingTF(inputCol="words", outputCol="features", numFeatures=1 << 14)
     # all-whitespace text tokenizes to an EMPTY words array → an
@@ -580,10 +584,7 @@ def dedup_simhash(spark, sf_dir):
     Near-dups = fingerprints at small Hamming distance; here the planted
     copy drops one word, so distances are small but nonzero."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", fold_lower("text").alias("text"))
-    trimmed = d.select(
-        (F.col("doc_id") + PLANT_OFFSET).alias("doc_id"),
-        F.array_join(F.slice(F.split("text", " "), 1, F.greatest(F.size(F.split("text", " ")) - 1, F.lit(1))), " ").alias("text"),
-    )
+    trimmed = _trimmed_copy(d, 1)
     both = d.unionByName(trimmed)
     toks = both.select("doc_id", F.explode(F.split("text", " ")).alias("token")).where(
         F.col("token") != ""
@@ -709,15 +710,7 @@ def dedup_simhash_exact(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 200).select(
         "doc_id", fold_lower("text").alias("text")
     )
-    planted = d.select(
-        (F.col("doc_id") + PLANT_OFFSET).alias("doc_id"),
-        F.array_join(
-            F.slice(
-                F.split("text", " "), 1, F.greatest(F.size(F.split("text", " ")) - 1, F.lit(1))
-            ),
-            " ",
-        ).alias("text"),
-    )
+    planted = _trimmed_copy(d, 1)
     everything = d.unionByName(planted)
     tok = (
         everything.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
@@ -755,16 +748,10 @@ def dedup_simhash_exact(spark, sf_dir):
     bands = fp.select(
         "doc_id",
         "f",
-        F.posexplode(F.expr(f"array({band_arr})")).alias("band", "bkey"),
+        F.posexplode(F.expr(f"array({band_arr})")).alias("band", "bh"),
     ).persist()
-    a, b = bands.alias("a"), bands.alias("b")
     cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        _band_collisions(bands)
         .select(
             F.col("a.doc_id").alias("id_a"),
             F.col("b.doc_id").alias("id_b"),
@@ -1075,15 +1062,7 @@ def dedup_minhash_estimate_error(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 200).select(
         "doc_id", fold_lower("text").alias("text")
     )
-    planted = d.select(
-        (F.col("doc_id") + PLANT_OFFSET).alias("doc_id"),
-        F.array_join(
-            F.slice(
-                F.split("text", " "), 1, F.greatest(F.size(F.split("text", " ")) - 2, F.lit(1))
-            ),
-            " ",
-        ).alias("text"),
-    )
+    planted = _trimmed_copy(d, 2)
     everything = d.unionByName(planted).persist()
     sig, bands = _minhash_sig_bands(everything)
     toks = everything.select("doc_id", F.split("text", " ").alias("toks"))
@@ -1097,14 +1076,8 @@ def dedup_minhash_estimate_error(spark, sf_dir):
         .distinct()
         .persist()
     )
-    a, b = bands.alias("a"), bands.alias("b")
     cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        _band_collisions(bands)
         .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .distinct()
     )
@@ -1308,15 +1281,7 @@ def sketch_minhash_calibration(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 200).select(
         "doc_id", fold_lower("text").alias("text")
     )
-    planted = d.select(
-        (F.col("doc_id") + PLANT_OFFSET).alias("doc_id"),
-        F.array_join(
-            F.slice(
-                F.split("text", " "), 1, F.greatest(F.size(F.split("text", " ")) - 2, F.lit(1))
-            ),
-            " ",
-        ).alias("text"),
-    )
+    planted = _trimmed_copy(d, 2)
     everything = d.unionByName(planted)
     sig, bands = _minhash_sig_bands(everything)
     # exact-Jaccard side: the same shingling expressions the signature
@@ -1334,14 +1299,8 @@ def sketch_minhash_calibration(spark, sf_dir):
         .persist()
     )
     sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).cast("bigint").alias("n_sh"))
-    a, b = bands.alias("a"), bands.alias("b")
     cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        _band_collisions(bands)
         .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .distinct()
         .persist()

@@ -34,7 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from etl_builder_spark.llm.similarity import _dbl, cosine, dot, dot_sql
+from etl_builder_spark.llm.similarity import _dbl, dot, norm
 from etl_builder_spark.registry import register
 from etl_builder_spark.session import load_table
 
@@ -200,7 +200,7 @@ def sign_lsh_candidates(
     # one wide row (h0..h{n_hyp-1}) — the de-exploded form: the corpus
     # is never multiplied by the hyperplane count.  The wide expression
     # families build as SQL TEXT, one parse per column, instead of
-    # thousands of Column-API py4j round trips (r15; see dot_sql) —
+    # thousands of Column-API py4j round trips (r15; see similarity.dot) —
     # same Catalyst expressions, ~1s less driver time per construction.
     hw = hyp.groupBy().agg(
         *[F.expr(f"max(CASE WHEN j = {i} THEN h END)").alias(f"h{i}") for i in range(n_hyp)]
@@ -208,7 +208,7 @@ def sign_lsh_candidates(
 
     def band_key_sql(b: int) -> str:
         bits = " + ".join(
-            f"(CASE WHEN round({dot_sql('v', f'h{b * bits_per_band + i}')}, 6) >= 0"
+            f"(CASE WHEN round({dot('v', f'h{b * bits_per_band + i}')}, 6) >= 0"
             f" THEN {1 << i} ELSE 0 END)"
             for i in range(bits_per_band)
         )
@@ -277,10 +277,10 @@ def dedup_embedding_cosine(spark, sf_dir):
     # higher-order-function work on the candidate fan-out, the
     # operator's hot loop. At scale norms would be stored with the
     # vectors (the standard layout) and this join disappears.
-    norms = all_vecs.withColumn("nrm", F.sqrt(dot(F.col("v"), F.col("v")))).persist()
+    norms = all_vecs.withColumn("nrm", F.expr(norm("v"))).persist()
     va = norms.select(F.col("vec_id").alias("id_a"), F.col("v").alias("va"), F.col("nrm").alias("na"))
     vb = norms.select(F.col("vec_id").alias("id_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb"))
-    sim = F.round(dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6)
+    sim = F.round(F.expr(f"{dot('va', 'vb')} / (na * nb)"), 6)
     return (
         cand.join(va, "id_a")
         .join(vb, "id_b")
@@ -410,16 +410,13 @@ def dedup_semantic_centroids(spark, sf_dir):
     # (the pq_encode lesson, VERDICT r4 item 4).
     # norms hoisted out of the ×16 crossJoin too (similarity.norm —
     # bit-identical; r15): one dot per (vec, centroid) pair
-    from etl_builder_spark.llm.similarity import dot as _dot
-    from etl_builder_spark.llm.similarity import norm as _norm
-
-    av = all_vecs.select("vec_id", "v", _norm(F.col("v")).alias("nv"))
-    cn = cent.select("cluster_id", "cv", _norm(F.col("cv")).alias("ncv"))
+    av = all_vecs.select("vec_id", "v", F.expr(norm("v")).alias("nv"))
+    cn = cent.select("cluster_id", "cv", F.expr(norm("cv")).alias("ncv"))
     asg = (
         av.crossJoin(F.broadcast(cn))
         .withColumn(
             "negc",
-            -F.round(_dot(F.col("v"), F.col("cv")) / (F.col("nv") * F.col("ncv")), 6),
+            -F.round(F.expr(f"{dot('v', 'cv')} / (nv * ncv)"), 6),
         )
         .groupBy("vec_id")
         .agg(
@@ -433,14 +430,14 @@ def dedup_semantic_centroids(spark, sf_dir):
     # remains a per-pair array aggregate
     # asg is self-joined into the pair fan-out below — persist so the
     # 16-centroid assignment scan runs once, not once per join side
-    asg = asg.withColumn("nrm", F.sqrt(dot(F.col("v"), F.col("v")))).persist()
+    asg = asg.withColumn("nrm", F.expr(norm("v"))).persist()
     x = asg.select(
         "cluster_id", F.col("vec_id").alias("keep_id"), F.col("v").alias("xv"), F.col("nrm").alias("nx")
     )
     y = asg.select(
         "cluster_id", F.col("vec_id").alias("drop_id"), F.col("v").alias("yv"), F.col("nrm").alias("ny")
     )
-    sim = F.round(dot(F.col("xv"), F.col("yv")) / (F.col("nx") * F.col("ny")), 6)
+    sim = F.round(F.expr(f"{dot('xv', 'yv')} / (nx * ny)"), 6)
     return (
         x.join(y, "cluster_id")
         .where(F.col("keep_id") < F.col("drop_id"))

@@ -6,7 +6,7 @@ predictions to the driver.
 Determinism contract (policy §7.2): centroids are ROUND(mean, 6) per
 (label, dimension) — the same construction the declared
 sim_label_centroids key hash-verifies; per-vector squared distances
-are a SEQUENTIAL LEFT FOLD over dimensions (F.aggregate ↔ DuckDB
+are a SEQUENTIAL LEFT FOLD over dimensions (aggregate() ↔ DuckDB
 list_reduce with the same 0.0 seed), so float accumulation order is
 pinned on both engines; distances are rounded to 9 dp and argmin
 ties break on the candidate label (min(struct) — the de-windowed
@@ -17,14 +17,38 @@ from __future__ import annotations
 
 import math as _math
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from etl_builder_spark.folding import nan_to_null
 
-from etl_builder_spark.llm.similarity import _dbl
+from etl_builder_spark.llm.similarity import _dbl, cosine, dot, sq_dist
 from etl_builder_spark.registry import register
 from etl_builder_spark.session import load_table
 
 EMB_DIM = 64
+
+
+def _mean_vectors(cells: DataFrame, *keys: str) -> DataFrame:
+    """(*keys, c): each key's mean vector from its exploded
+    (*keys, pos0, x) rows.  Each dimension sums 9-dp-rounded DECIMALs
+    (order-free) over an exact count and rounds the mean to 6 dp; ``c``
+    lists the dimensions in pos0 order."""
+    return (
+        cells.groupBy(*keys, "pos0")
+        .agg(
+            F.round(
+                F.sum(F.round(F.col("x"), 9).cast("decimal(20,9)")).cast("double")
+                / F.count(F.lit(1)),
+                6,
+            ).alias("cv")
+        )
+        .groupBy(*keys)
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos0", "cv"))), lambda s: s["cv"]
+            ).alias("c")
+        )
+    )
 
 
 @register(
@@ -84,24 +108,13 @@ def ml_confusion_matrix(spark, sf_dir):
     from pyspark.sql import Window
 
     e = load_table(spark, sf_dir, "embeddings")
-    cent_rows = (
-        e.select("label", F.posexplode(_dbl()).alias("pos0", "x"))
-        .groupBy("label", "pos0")
-        .agg(F.round(F.sum(F.round(F.col("x"), 9).cast("decimal(20,9)")).cast("double") / F.count(F.lit(1)), 6).alias("cv"))
-    )
-    cent = cent_rows.groupBy(F.col("label").alias("cand")).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos0", "cv"))), lambda s: s["cv"]
-        ).alias("c")
-    )
+    cent = _mean_vectors(
+        e.select("label", F.posexplode(_dbl()).alias("pos0", "x")), "label"
+    ).withColumnRenamed("label", "cand")
     scored = e.select("vec_id", F.col("label").alias("true_label"), _dbl().alias("v")).crossJoin(
         F.broadcast(cent)
     )
-    d2 = F.aggregate(
-        F.zip_with(F.col("v"), F.col("c"), lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    d2 = F.expr(sq_dist("v", "c"))
     pred = (
         scored.select("vec_id", "true_label", "cand", F.round(d2, 9).alias("d9"))
         .groupBy("vec_id", "true_label")
@@ -177,21 +190,10 @@ def ml_auc_one_vs_rest(spark, sf_dir):
     from pyspark.sql import Window
 
     e = load_table(spark, sf_dir, "embeddings")
-    cent_rows = (
-        e.select("label", F.posexplode(_dbl()).alias("pos0", "x"))
-        .groupBy("label", "pos0")
-        .agg(F.round(F.sum(F.round(F.col("x"), 9).cast("decimal(20,9)")).cast("double") / F.count(F.lit(1)), 6).alias("cv"))
-    )
-    cent = cent_rows.groupBy(F.col("label").alias("cand")).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos0", "cv"))), lambda s: s["cv"]
-        ).alias("c")
-    )
-    d2 = F.aggregate(
-        F.zip_with(F.col("v"), F.col("c"), lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    cent = _mean_vectors(
+        e.select("label", F.posexplode(_dbl()).alias("pos0", "x")), "label"
+    ).withColumnRenamed("label", "cand")
+    d2 = F.expr(sq_dist("v", "c"))
     scored = (
         e.select("vec_id", F.col("label").alias("true_label"), _dbl().alias("v"))
         .crossJoin(F.broadcast(cent))
@@ -359,22 +361,10 @@ def ml_lift_gain_deciles(spark, sf_dir):
     from pyspark.sql import Window
 
     e = load_table(spark, sf_dir, "embeddings")
-    cent = (
-        e.where(F.col("label") == 3)
-        .select(F.posexplode(_dbl()).alias("pos0", "x"))
-        .groupBy("pos0")
-        .agg(F.round(F.sum(F.round(F.col("x"), 9).cast("decimal(20,9)")).cast("double") / F.count(F.lit(1)), 6).alias("cv"))
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos0", "cv"))), lambda s: s["cv"]
-            ).alias("c")
-        )
+    cent = _mean_vectors(
+        e.where(F.col("label") == 3).select(F.posexplode(_dbl()).alias("pos0", "x"))
     )
-    d2 = F.aggregate(
-        F.zip_with(F.col("v"), F.col("c"), lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    d2 = F.expr(sq_dist("v", "c"))
     scored = (
         e.select("vec_id", (F.col("label") == 3).alias("is_pos"), _dbl().alias("v"))
         .crossJoin(F.broadcast(cent))
@@ -503,22 +493,13 @@ def ml_pca_power_component(spark, sf_dir):
     from pyspark.sql import Window  # noqa: F401  (parity with siblings)
 
     e = load_table(spark, sf_dir, "embeddings")
-    mu = (
-        e.select(F.posexplode(_dbl()).alias("pos0", "xx"))
-        .groupBy("pos0")
-        .agg(F.round(F.sum(F.round(F.col("xx"), 9).cast("decimal(20,9)")).cast("double") / F.count(F.lit(1)), 6).alias("m"))
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos0", "m"))), lambda s: s["m"]
-            ).alias("ml")
-        )
-    )
+    mu = _mean_vectors(e.select(F.posexplode(_dbl()).alias("pos0", "x")))
     xc = (
         e.select("vec_id", _dbl().alias("raw"))
         .crossJoin(F.broadcast(mu))
         .select(
             "vec_id",
-            F.zip_with(F.col("raw"), F.col("ml"), lambda a, b: a - b).alias("x"),
+            F.zip_with(F.col("raw"), F.col("c"), lambda a, b: a - b).alias("x"),
         )
         .persist()
     )
@@ -532,11 +513,7 @@ def ml_pca_power_component(spark, sf_dir):
     for _ in range(PCA_ITERS):
         s = xc.crossJoin(F.broadcast(v_frame)).select(
             "x",
-            F.aggregate(
-                F.zip_with(F.col("x"), F.col("v"), lambda a, b: a * b),
-                F.lit(0.0),
-                lambda acc, t: acc + t,
-            ).alias("s"),
+            F.expr(dot("x", "v")).alias("s"),
         )
         u = (
             s.select(F.posexplode("x").alias("pos0", "xij"), "s")
@@ -665,11 +642,7 @@ def ml_kmeans_lloyd_exact(spark, sf_dir):
     cent = x.where(F.col("vec_id") < KMEANS_K).select(
         F.col("vec_id").alias("cid"), F.col("v").alias("c")
     )
-    d2 = F.aggregate(
-        F.zip_with(F.col("v"), F.col("c"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, t: acc + t,
-    )
+    d2 = F.expr(sq_dist("v", "c"))
 
     def assign(centroids, carry_v=False):
         # carry_v threads the vector THROUGH the argmin struct (r15,
@@ -696,18 +669,7 @@ def ml_kmeans_lloyd_exact(spark, sf_dir):
 
     for _ in range(KMEANS_ITERS):
         a = assign(cent, carry_v=True)
-        cent = (
-            a.select("cid", F.posexplode("v").alias("pos0", "xx"))
-            .groupBy("cid", "pos0")
-            .agg(F.round(F.sum(F.round(F.col("xx"), 9).cast("decimal(20,9)")).cast("double") / F.count(F.lit(1)), 6).alias("cv"))
-            .groupBy("cid")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos0", "cv"))),
-                    lambda s: s["cv"],
-                ).alias("c")
-            )
-        )
+        cent = _mean_vectors(a.select("cid", F.posexplode("v").alias("pos0", "x")), "cid")
     final = assign(cent)
     return final.groupBy(F.col("cid").alias("cluster_id")).agg(
         F.count(F.lit(1)).alias("n_points"),
@@ -1045,22 +1007,10 @@ def ml_lift_gain_deciles_bucketed(spark, sf_dir):
     comparison; Spark ``percentile`` ≡ DuckDB ``quantile_cont``
     verified bit-equal on this corpus."""
     e = load_table(spark, sf_dir, "embeddings")
-    cent = (
-        e.where(F.col("label") == 3)
-        .select(F.posexplode(_dbl()).alias("pos0", "x"))
-        .groupBy("pos0")
-        .agg(F.round(F.sum(F.round(F.col("x"), 9).cast("decimal(20,9)")).cast("double") / F.count(F.lit(1)), 6).alias("cv"))
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos0", "cv"))), lambda s: s["cv"]
-            ).alias("c")
-        )
+    cent = _mean_vectors(
+        e.where(F.col("label") == 3).select(F.posexplode(_dbl()).alias("pos0", "x"))
     )
-    d2 = F.aggregate(
-        F.zip_with(F.col("v"), F.col("c"), lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    d2 = F.expr(sq_dist("v", "c"))
     scored = (
         e.select("vec_id", (F.col("label") == 3).alias("is_pos"), _dbl().alias("v"))
         .crossJoin(F.broadcast(cent))
@@ -1169,21 +1119,11 @@ def ml_calibration_bins(spark, sf_dir):
     per-bin mean scores sum 9-dp-rounded DECIMALs so the aggregation
     is order-free (policy §7.2).  Empty bins are absent rows (honest:
     a reliability diagram can't say anything where there's no mass)."""
-    from etl_builder_spark.llm.similarity import cosine
-
     e = load_table(spark, sf_dir, "embeddings")
-    cent = (
-        e.where(F.col("label") == 3)
-        .select(F.posexplode(_dbl()).alias("pos0", "x"))
-        .groupBy("pos0")
-        .agg(F.round(F.sum(F.round(F.col("x"), 9).cast("decimal(20,9)")).cast("double") / F.count(F.lit(1)), 6).alias("cv"))
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos0", "cv"))), lambda s: s["cv"]
-            ).alias("c")
-        )
+    cent = _mean_vectors(
+        e.where(F.col("label") == 3).select(F.posexplode(_dbl()).alias("pos0", "x"))
     )
-    p = F.round((F.round(cosine(F.col("v"), F.col("c")), 6) + 1) / 2, 9)
+    p = F.round((F.round(F.expr(cosine("v", "c")), 6) + 1) / 2, 9)
     binned = (
         e.select((F.col("label") == 3).alias("is_pos"), _dbl().alias("v"))
         .crossJoin(F.broadcast(cent))
@@ -1475,7 +1415,7 @@ def ml_logreg_newton_exact(spark, sf_dir):
     path regardless of row count; p features widen the per-row
     projection and the solve (p x p), not the pass count.
 
-    Constructor builds as SQL text (r16, the dot_sql rationale —
+    Constructor builds as SQL text (r16, the similarity.dot rationale —
     guide §4's boundary lesson applied to the DRIVER): the 3-iteration
     Column-API loop cost ~0.45 s of py4j round trips per build, paid
     on every bench rep; one parsed string per projection keeps the
@@ -1768,28 +1708,10 @@ def ml_pr_threshold_grid(spark, sf_dir):
     centroids); P and R are single divisions of exact counts,
     zero-guarded."""
     e = load_table(spark, sf_dir, "embeddings")
-    cent_vec = (
-        e.where(F.col("label") == 0)
-        .select(F.posexplode(_dbl()).alias("pos0", "x"))
-        .groupBy("pos0")
-        .agg(
-            F.round(
-                F.sum(F.round(F.col("x"), 9).cast("decimal(20,9)")).cast("double")
-                / F.count(F.lit(1)),
-                6,
-            ).alias("cv")
-        )
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos0", "cv"))), lambda s: s["cv"]
-            ).alias("c")
-        )
+    cent_vec = _mean_vectors(
+        e.where(F.col("label") == 0).select(F.posexplode(_dbl()).alias("pos0", "x"))
     )
-    d2 = F.aggregate(
-        F.zip_with(_dbl(), F.col("c"), lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    d2 = F.expr(sq_dist("transform(embedding, x -> CAST(x AS DOUBLE))", "c"))
     scored = e.crossJoin(F.broadcast(cent_vec)).select(
         (F.col("label") == 0).alias("is_pos"), F.round(d2, 9).alias("d9")
     )
@@ -2102,11 +2024,7 @@ def ml_silhouette_labels(spark, sf_dir):
         F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("v"),
     )
     a, b = vecs.alias("a"), vecs.alias("b")
-    d2 = F.aggregate(
-        F.zip_with(F.col("a.v"), F.col("b.v"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    d2 = F.expr(sq_dist("a.v", "b.v"))
     dists = a.join(b, F.col("a.vec_id") != F.col("b.vec_id")).select(
         F.col("a.vec_id").alias("i"),
         F.col("a.label").alias("la"),
@@ -2205,12 +2123,11 @@ def ml_kmeans_pp_seeding(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
 
     def d2(vcol, ccol):
-        return F.aggregate(
-            F.zip_with(
-                _dbl(vcol), _dbl(ccol), lambda x, c: (x - c) * (x - c)
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
+        return F.expr(
+            sq_dist(
+                f"transform({vcol}, x -> CAST(x AS DOUBLE))",
+                f"transform({ccol}, x -> CAST(x AS DOUBLE))",
+            )
         )
 
     c1 = e.orderBy("vec_id").limit(1).select(

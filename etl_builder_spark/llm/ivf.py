@@ -18,24 +18,12 @@ search (no per-row Python).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from etl_builder_spark.llm.similarity import _dbl
+from etl_builder_spark.llm.similarity import _dbl, dot, norm, sq_dist
 from etl_builder_spark.registry import register
 from etl_builder_spark.session import load_table
-
-
-def _sq_dist(a: Column, b: Column) -> Column:
-    diff = F.zip_with(a, b, lambda x, y: x - y)
-    return F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + x * x)
-
-
-def _sq_dist_sql(a: str, b: str) -> str:
-    """SQL-text twin of :func:`_sq_dist` (r16, the dot_sql rationale):
-    one parsed string instead of ~25 py4j crossings per lambda pair;
-    same zip_with/aggregate Catalyst operators."""
-    return f"aggregate(zip_with({a}, {b}, (x, y) -> x - y), 0.0D, (acc, x) -> acc + x * x)"
 
 
 def train_quantizer(vectors: DataFrame, vec_col: str = "v", k: int = 16, seed: int = 42) -> DataFrame:
@@ -83,7 +71,7 @@ def assign_clusters(vectors: DataFrame, centroids: DataFrame, vec_col: str = "v"
     corpus through a row_number window (the pq_encode lesson,
     VERDICT r4 item 4).  ``vec_col`` is group-constant, so ``first``
     is deterministic here."""
-    d2 = F.expr(_sq_dist_sql(vec_col, "cv"))
+    d2 = F.expr(sq_dist(vec_col, "cv"))
     return (
         vectors.crossJoin(F.broadcast(centroids))
         .withColumn("d2r", F.round(d2, 9))
@@ -107,7 +95,7 @@ def ivf_topk(
     lists, brute-force only inside them."""
     pc = probes.crossJoin(F.broadcast(centroids))
     w = Window.partitionBy("probe_id").orderBy(
-        F.expr(f"ROUND({_sq_dist_sql('pv', 'cv')}, 9)").asc(), F.col("cluster_id")
+        F.expr(f"ROUND({sq_dist('pv', 'cv')}, 9)").asc(), F.col("cluster_id")
     )
     probe_lists = (
         pc.withColumn("crn", F.row_number().over(w)).where(F.col("crn") <= n_probe)
@@ -120,12 +108,10 @@ def ivf_topk(
     # identically either way.  Dunder-prefixed internal names so a
     # caller-supplied frame that already carries nv/npv is never
     # silently overwritten (ADVICE r15).
-    from etl_builder_spark.llm.similarity import dot_sql, norm_sql
-
-    probe_lists = probe_lists.withColumn("__ivf_npv", F.expr(norm_sql("pv")))
-    indexed = indexed.withColumn("__ivf_nv", F.expr(norm_sql("v")))
+    probe_lists = probe_lists.withColumn("__ivf_npv", F.expr(norm("pv")))
+    indexed = indexed.withColumn("__ivf_nv", F.expr(norm("v")))
     cands = probe_lists.join(indexed, "cluster_id").where(F.col("vec_id") != F.col("probe_id"))
-    sim = F.expr(f"ROUND({dot_sql('pv', 'v')} / (__ivf_npv * __ivf_nv), 6)")
+    sim = F.expr(f"ROUND({dot('pv', 'v')} / (__ivf_npv * __ivf_nv), 6)")
     wk = Window.partitionBy("probe_id").orderBy(F.col("sim").desc(), F.col("vec_id"))
     return (
         cands.select("probe_id", "vec_id", sim.alias("sim"))
@@ -236,17 +222,13 @@ def sim_knn_ivf_exact(spark, sf_dir):
     # candidate scoring each pay one dot per pair; nv rides the argmin
     # group (every row of a vec_id group carries the same v/nv, so
     # first() is value-deterministic, same as the existing v carry).
-    # HOF expressions build as SQL text (r16, dot_sql rationale): the
-    # Column-API lambdas cost ~0.3 s of py4j round trips per build.
-    from etl_builder_spark.llm.similarity import dot_sql, norm_sql
-
-    en = e.select("vec_id", "v", F.expr(norm_sql("v")).alias("nv"))
-    cn = centroids.select("cluster_id", "cv", F.expr(norm_sql("cv")).alias("ncv"))
+    en = e.select("vec_id", "v", F.expr(norm("v")).alias("nv"))
+    cn = centroids.select("cluster_id", "cv", F.expr(norm("cv")).alias("ncv"))
     asg = (
         en.crossJoin(F.broadcast(cn))
         .withColumn(
             "negc",
-            F.expr(f"-ROUND({dot_sql('v', 'cv')} / (nv * ncv), 6)"),
+            F.expr(f"-ROUND({dot('v', 'cv')} / (nv * ncv), 6)"),
         )
         .groupBy("vec_id")
         .agg(
@@ -260,7 +242,7 @@ def sim_knn_ivf_exact(spark, sf_dir):
         F.col("vec_id").alias("probe_id"), F.col("v").alias("pv"), F.col("nv").alias("npv")
     )
     wp = Window.partitionBy("probe_id").orderBy(
-        F.expr(f"ROUND({dot_sql('pv', 'cv')} / (npv * ncv), 6)").desc(),
+        F.expr(f"ROUND({dot('pv', 'cv')} / (npv * ncv), 6)").desc(),
         F.col("cluster_id"),
     )
     plists = (
@@ -274,7 +256,7 @@ def sim_knn_ivf_exact(spark, sf_dir):
         .join(asg, "cluster_id")
         .where(F.col("vec_id") != F.col("probe_id"))
     )
-    sim = F.expr(f"ROUND({dot_sql('pv', 'v')} / (npv * nv), 6)")
+    sim = F.expr(f"ROUND({dot('pv', 'v')} / (npv * nv), 6)")
     wk = Window.partitionBy("probe_id").orderBy(F.col("sim").desc(), "cand_id")
     return (
         cands.select("probe_id", F.col("vec_id").alias("cand_id"), sim.alias("sim"))

@@ -33,6 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_builder_spark.llm.dedup import _band_collisions
 from etl_builder_spark.registry import register
 from pyspark.sql.types import (
     ArrayType,
@@ -1426,18 +1427,18 @@ def dedup_image_whash_hamming(spark, sf_dir):
                 ),
             )
         ).alias("bk"),
-    ).select("asset_id", "whash", F.col("bk.band").alias("band"), F.col("bk.bits").alias("bits"))
-    a, b = bands.alias("a"), bands.alias("b")
+    ).select(
+        # named for dedup._band_collisions' (doc_id, band, bh) frame
+        F.col("asset_id").alias("doc_id"),
+        "whash",
+        F.col("bk.band").alias("band"),
+        F.col("bk.bits").alias("bh"),
+    )
     cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bits") == F.col("b.bits"))
-            & (F.col("a.asset_id") < F.col("b.asset_id")),
-        )
+        _band_collisions(bands)
         .select(
-            F.col("a.asset_id").alias("asset_a"),
-            F.col("b.asset_id").alias("asset_b"),
+            F.col("a.doc_id").alias("asset_a"),
+            F.col("b.doc_id").alias("asset_b"),
             F.col("a.whash").alias("wa"),
             F.col("b.whash").alias("wb"),
         )

@@ -38,7 +38,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_builder_spark.llm.similarity import _dbl
+from etl_builder_spark.llm.similarity import _dbl, cosine, dot, norm, sq_dist
 from etl_builder_spark.registry import register
 from etl_builder_spark.session import file_version, load_table
 
@@ -131,16 +131,11 @@ def corpus_codebook(
 PQ_SEED_LO, PQ_SEED_HI = 200, 215
 
 
-def pinned_codebook(spark: SparkSession, sf_dir: str, m: int = M_SUBSPACES) -> DataFrame:
+def _pinned_codebook_from(e: DataFrame, m: int = M_SUBSPACES) -> DataFrame:
     """(subspace, code, cv): codebook c of subspace s = the s-th
     D/m-dim slice of corpus vector PQ_SEED_LO + c.  Same schema as
-    ``train_pq_codebooks`` so every PQ helper accepts either."""
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", _dbl().alias("v"))
-    return _pinned_codebook_from(e, m)
-
-
-def _pinned_codebook_from(e: DataFrame, m: int = M_SUBSPACES) -> DataFrame:
-    """Codebook derived from an already-loaded (vec_id, v) frame — so
+    ``train_pq_codebooks`` so every PQ helper accepts either.  Derived
+    from an already-loaded (vec_id, v) frame — so
     exact-twin keys can feed ONE persisted corpus frame to codebook,
     encode, probes and rerank instead of re-scanning the source per
     reference (the r5 multi-scan lesson, plans/audit.py)."""
@@ -159,33 +154,12 @@ def _pinned_codebook_from(e: DataFrame, m: int = M_SUBSPACES) -> DataFrame:
     )
 
 
-def _sq_dist(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x - y), F.lit(0.0), lambda acc, x: acc + x * x
-    )
-
-
-def _sq_dist_sql(a: str, b: str) -> str:
-    """SQL-text twin of :func:`_sq_dist` (r16, the dot_sql rationale —
-    guide §4's boundary lesson on the DRIVER side): each Column-API
-    higher-order pair costs ~25 py4j crossings per build; one parsed
-    string yields the same zip_with/aggregate Catalyst operators
-    (0.0D is the double literal F.lit(0.0) builds)."""
-    return f"aggregate(zip_with({a}, {b}, (x, y) -> x - y), 0.0D, (acc, x) -> acc + x * x)"
-
-
-def _subvec_sql(v: str) -> str:
-    """SQL-text twin of :func:`_subvec` — start/length from the joined
-    codebook row's own (subspace, size(cv)), identical tree."""
-    return f"slice({v}, subspace * size(cv) + 1, size(cv))"
-
-
 #: Subvector slice aligned to the codebook row itself: start/length come
 #: from the joined row's own (subspace, size(cv)), so encoding follows
 #: whatever m the codebook was trained at — a codebook trained at m≠8
 #: slices correctly instead of silently mis-slicing (ADVICE r3).
-def _subvec(vec_col):
-    return F.slice(F.col(vec_col), F.col("subspace") * F.size("cv") + 1, F.size("cv"))
+def _subvec(v: str) -> str:
+    return f"slice({v}, subspace * size(cv) + 1, size(cv))"
 
 
 def pq_encode(vectors: DataFrame, codebook: DataFrame, vec_col: str = "v") -> DataFrame:
@@ -203,7 +177,7 @@ def pq_encode(vectors: DataFrame, codebook: DataFrame, vec_col: str = "v") -> Da
     100 TB that is k× shuffle volume on the encode of every vector
     (VERDICT r4 item 4); the groupBy form combines the expansion away
     before any exchange and leaves no Window node in the encode plan."""
-    d2 = F.expr(_sq_dist_sql(_subvec_sql(vec_col), "cv"))
+    d2 = F.expr(sq_dist(_subvec(vec_col), "cv"))
     best = (
         vectors.crossJoin(F.broadcast(codebook))
         .withColumn("d2", d2)
@@ -257,7 +231,7 @@ def _adc_scored(codes: DataFrame, codebook: DataFrame, probes: DataFrame) -> Dat
             # rounded-then-DECIMAL partial distances: the m-way sum below
             # must be order-free for the exact-twin hash (policy §7.2)
             F.expr(
-                f"CAST(ROUND({_sq_dist_sql(_subvec_sql('pv'), 'cv')}, 9)"
+                f"CAST(ROUND({sq_dist(_subvec('pv'), 'cv')}, 9)"
                 " AS DECIMAL(20,9))"
             ).alias("pd2"),
         )
@@ -348,7 +322,7 @@ def sim_topk_pq_rerank(spark, sf_dir):
         .join(e, "vec_id")
         .join(F.broadcast(probes), "probe_id")
     )
-    exact_d2 = F.expr(_sq_dist_sql("pv", "v"))
+    exact_d2 = F.expr(sq_dist("pv", "v"))
     wk = Window.partitionBy("probe_id").orderBy(F.col("exact_dist").asc(), "vec_id")
     return (
         rerank.select("probe_id", "vec_id", F.round(exact_d2, 6).alias("exact_dist"))
@@ -399,7 +373,6 @@ def _ivfpq_topk(spark: SparkSession, sf_dir: str, cb: DataFrame | None = None) -
     and identical lineages dedupe in the CacheManager, so long-lived
     multi-query sessions spill rather than OOM."""
     from etl_builder_spark.llm.ivf import IVF_SEED_LO, IVF_SEED_HI
-    from etl_builder_spark.llm.similarity import cosine_sql, dot_sql, norm_sql
 
     n_probe, shortlist_k, k_final = 4, 50, 10
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", _dbl().alias("v")).persist()
@@ -410,16 +383,14 @@ def _ivfpq_topk(spark: SparkSession, sf_dir: str, cb: DataFrame | None = None) -
     )
     # coarse assignment — de-windowed argmax (map-side combine); norms
     # hoisted out of the ×16 crossJoin (similarity.norm: bit-identical,
-    # 3 folds per pair → 1 dot per pair + 1 norm per row).  All HOF
-    # expressions build as SQL text (r16, dot_sql rationale): the
-    # Column-API lambdas cost ~0.3 s of py4j round trips per build.
-    en = e.select("vec_id", "v", F.expr(norm_sql("v")).alias("nv"))
-    cn = cent.select("cluster_id", "cv", F.expr(norm_sql("cv")).alias("ncv"))
+    # 3 folds per pair → 1 dot per pair + 1 norm per row).
+    en = e.select("vec_id", "v", F.expr(norm("v")).alias("nv"))
+    cn = cent.select("cluster_id", "cv", F.expr(norm("cv")).alias("ncv"))
     asg = (
         en.crossJoin(F.broadcast(cn))
         .withColumn(
             "negc",
-            F.expr(f"-ROUND({dot_sql('v', 'cv')} / (nv * ncv), 6)"),
+            F.expr(f"-ROUND({dot('v', 'cv')} / (nv * ncv), 6)"),
         )
         .groupBy("vec_id")
         .agg(F.min(F.struct(F.col("negc"), F.col("cluster_id"))).alias("b"))
@@ -435,7 +406,7 @@ def _ivfpq_topk(spark: SparkSession, sf_dir: str, cb: DataFrame | None = None) -
     )
     # probe's n_probe nearest lists (16×5 rows — a trivial top-k)
     wp = Window.partitionBy("probe_id").orderBy(
-        F.expr(f"ROUND({cosine_sql('pv', 'cv')}, 6)").desc(), F.col("cluster_id")
+        F.expr(f"ROUND({cosine('pv', 'cv')}, 6)").desc(), F.col("cluster_id")
     )
     plists = (
         probes.crossJoin(F.broadcast(cent))
@@ -452,7 +423,7 @@ def _ivfpq_topk(spark: SparkSession, sf_dir: str, cb: DataFrame | None = None) -
         "subspace",
         "code",
         F.expr(
-            f"CAST(ROUND({_sq_dist_sql(_subvec_sql('pv'), 'cv')}, 9) AS DECIMAL(20,9))"
+            f"CAST(ROUND({sq_dist(_subvec('pv'), 'cv')}, 9) AS DECIMAL(20,9))"
         ).alias("pd2"),
     )
     # candidates = probed lists only (the IVF pruning), scored from
@@ -478,7 +449,7 @@ def _ivfpq_topk(spark: SparkSession, sf_dir: str, cb: DataFrame | None = None) -
         rerank.select(
             "probe_id",
             "vec_id",
-            F.expr(f"ROUND({_sq_dist_sql('pv', 'v')}, 6)").alias("exact_dist"),
+            F.expr(f"ROUND({sq_dist('pv', 'v')}, 6)").alias("exact_dist"),
         )
         .withColumn("rank", F.row_number().over(wk))
         .where(F.col("rank") <= k_final)
@@ -503,8 +474,8 @@ _M = M_SUBSPACES
 
 
 def _sql_d2(a: str, b: str) -> str:
-    """DuckDB twin of ``_sq_dist``: the SAME left fold over (xᵢ-yᵢ)² —
-    list_reduce starts at element 1, Spark's aggregate at 0.0+el₁,
+    """DuckDB twin of ``similarity.sq_dist``: the SAME left fold over
+    (xᵢ-yᵢ)² — list_reduce starts at element 1, Spark's aggregate at 0.0+el₁,
     identical float trajectories."""
     return (
         f"list_reduce(list_transform(list_zip({a}, {b}), "
@@ -679,7 +650,7 @@ def sim_topk_pq_rerank_exact(spark, sf_dir):
         .join(e, "vec_id")
         .join(F.broadcast(probes), "probe_id")
     )
-    exact_d2 = F.expr(_sq_dist_sql("pv", "v"))
+    exact_d2 = F.expr(sq_dist("pv", "v"))
     wk = Window.partitionBy("probe_id").orderBy(F.col("exact_dist").asc(), "vec_id")
     return (
         rerank.select("probe_id", "vec_id", F.round(exact_d2, 6).alias("exact_dist"))
@@ -801,8 +772,6 @@ def ml_ndcg_pq_adc(spark, sf_dir):
     the expensive half (brute force per probe) and is exactly what you
     run on a small probe panel to monitor a production index's
     recall/NDCG drift — |probes| · |corpus|, never corpus²."""
-    from etl_builder_spark.llm.similarity import cosine_sql
-
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", _dbl().alias("v")).persist()
     cb = _pinned_codebook_from(e)
     codes = pq_encode(e, cb).select(
@@ -819,7 +788,7 @@ def ml_ndcg_pq_adc(spark, sf_dir):
         .select("probe_id", "vec_id", "rank")
     )
     we = Window.partitionBy("probe_id").orderBy(
-        F.expr(f"ROUND({cosine_sql('pv', 'v')}, 6)").desc(), "vec_id"
+        F.expr(f"ROUND({cosine('pv', 'v')}, 6)").desc(), "vec_id"
     )
     exact10 = (
         probes.crossJoin(e)

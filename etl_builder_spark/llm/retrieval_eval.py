@@ -17,21 +17,12 @@ probe_id (never unpartitioned).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from etl_builder_spark.llm.similarity import cosine
 from etl_builder_spark.registry import register
 from etl_builder_spark.session import load_table
-
-
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
-
-
-def _cos(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
 
 
 def _vecs(spark, sf_dir):
@@ -102,16 +93,14 @@ def embed_matryoshka_recall(spark, sf_dir):
     probes = vecs.where(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("probe_id"), F.col("v").alias("pv")
     )
-    pv16 = F.slice(F.col("pv"), 1, 16)
-    v16 = F.slice(F.col("v"), 1, 16)
     sims = (
         F.broadcast(probes)
         .join(vecs, F.col("vec_id") != F.col("probe_id"))
         .select(
             "probe_id",
             F.col("vec_id").alias("cand_id"),
-            F.round(_cos(F.col("pv"), F.col("v")), 6).alias("sim_full"),
-            F.round(_cos(pv16, v16), 6).alias("sim_16"),
+            F.round(F.expr(cosine("pv", "v")), 6).alias("sim_full"),
+            F.round(F.expr(cosine("slice(pv, 1, 16)", "slice(v, 1, 16)")), 6).alias("sim_16"),
         )
     )
     wf = Window.partitionBy("probe_id").orderBy(F.col("sim_full").desc(), "cand_id")
@@ -181,7 +170,7 @@ def _label_ranked(spark, sf_dir):
             "probe_label",
             F.col("vec_id").alias("cand_id"),
             F.col("label").alias("cand_label"),
-            F.round(_cos(F.col("pv"), F.col("v")), 6).alias("sim"),
+            F.round(F.expr(cosine("pv", "v")), 6).alias("sim"),
         )
     )
     w = Window.partitionBy("probe_id").orderBy(F.col("sim").desc(), "cand_id")
@@ -346,15 +335,12 @@ def sim_maxsim_multivector(spark, sf_dir):
         F.col("vec_id").alias("probe_id"), F.col("v").alias("pv")
     )
 
-    def seg(c: Column, i: int) -> Column:
-        return F.slice(c, 16 * i + 1, 16)
+    def seg(c: str, i: int) -> str:
+        return f"slice({c}, {16 * i + 1}, 16)"
 
     maxes = [
         F.greatest(
-            *[
-                F.round(_cos(seg(F.col("pv"), i), seg(F.col("v"), j)), 6)
-                for j in range(4)
-            ]
+            *[F.round(F.expr(cosine(seg("pv", i), seg("v", j))), 6) for j in range(4)]
         )
         for i in range(4)
     ]

@@ -22,50 +22,41 @@ from etl_builder_spark.registry import register
 from etl_builder_spark.session import load_table
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Expression-only dot product of two array<double> columns —
-    sequential left fold, JVM-side, no UDF."""
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-
-
-def dot_sql(a: str, b: str) -> str:
-    """SQL-text twin of :func:`dot` for composing WIDE expression sets
-    (r15, guide §1.2 step 2): building N-bit/N-perm expression families
-    through the Column API costs thousands of py4j round trips per
-    query construction (measured ~1.5s for the 32-hyperplane signing
-    select at sf0.1 — pure driver time, paid on every build); one
-    parsed SQL string per output column is ~100x fewer crossings and
-    parses to the same Catalyst operators (`0.0D` is the double literal
-    F.lit(0.0) builds, the lambda shapes are identical)."""
+def dot(a: str, b: str) -> str:
+    """Dot product of two array<double> SQL expressions as SQL text —
+    a sequential left fold, JVM-side, no UDF.  Every vector expression
+    in the engine is built as SQL text and Column callers wrap it in
+    ``F.expr``: one parsed string is one py4j call, while each Column
+    API node (``F.aggregate``, ``F.zip_with``, every lambda) is a call
+    of its own — measured ~1.5 s of plan-construction time for the
+    32-hyperplane signing select at sf0.1.  The parse yields the same
+    Catalyst operators (`0.0D` is the double literal F.lit(0.0)
+    builds)."""
     return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
-
-
-def norm_sql(a: str) -> str:
-    """SQL-text twin of :func:`norm` (r16, the dot_sql rationale)."""
-    return f"sqrt({dot_sql(a, a)})"
-
-
-def cosine_sql(a: str, b: str) -> str:
-    """SQL-text twin of :func:`cosine` — same Divide/Multiply/Sqrt tree
-    over the same folds, one parse instead of ~6 lambda round trips."""
-    return f"{dot_sql(a, b)} / ({norm_sql(a)} * {norm_sql(b)})"
-
-
-def norm(a: Column) -> Column:
+def norm(a: str) -> str:
     """sqrt(dot(a,a)) — the cosine denominator factor, exposed so hot
     crossJoin sites can HOIST each side's norm to a per-row column
-    before the join (r15, guide §1.2 step 2): inside cosine() both
-    norms re-fold per PAIR (3 array folds per candidate), while the
-    hoisted form folds each norm once per row and the pair pays one
-    dot.  dot(a,b)/(norm(a)*norm(b)) is bit-identical to cosine(a,b) —
-    the same float ops on the same values in the same order — so
-    rounded similarities and every downstream ranking are unchanged
-    (A/B at sf0.1: coarse assignment 0.66 -> 0.45 s, rows identical)."""
-    return F.sqrt(dot(a, a))
+    before the join: inside cosine() both norms re-fold per PAIR
+    (3 array folds per candidate), while the hoisted form folds each
+    norm once per row and the pair pays one dot.
+    dot(a,b)/(norm(a)*norm(b)) is bit-identical to cosine(a,b) — the
+    same float ops on the same values in the same order — so rounded
+    similarities and every downstream ranking are unchanged (A/B at
+    sf0.1: coarse assignment 0.66 -> 0.45 s, rows identical)."""
+    return f"sqrt({dot(a, a)})"
+
+
+def cosine(a: str, b: str) -> str:
+    return f"{dot(a, b)} / ({norm(a)} * {norm(b)})"
+
+
+def sq_dist(a: str, b: str) -> str:
+    """Squared Euclidean distance: the element differences folded as
+    ``acc + d * d``, left to right from 0.0 — the same IEEE steps as
+    summing ``(x - y) * (x - y)`` per element."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x - y), 0.0D, (acc, x) -> acc + x * x)"
 
 
 def _dbl(col: str = "embedding") -> Column:
@@ -103,7 +94,7 @@ def sim_topk_cosine_sql(spark, sf_dir):
     # norms hoisted to per-row columns BEFORE the probe×candidate join
     # (see norm()): each candidate folds its norm once instead of once
     # per probe; the pair computes one dot — bit-identical similarity.
-    en = e.select("vec_id", "v", norm(F.col("v")).alias("nv"))
+    en = e.select("vec_id", "v", F.expr(norm("v")).alias("nv"))
     probes = en.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("probe_id"), F.col("v").alias("pv"), F.col("nv").alias("npv")
     )
@@ -113,9 +104,7 @@ def sim_topk_cosine_sql(spark, sf_dir):
         .select(
             "probe_id",
             F.col("vec_id").alias("cand_id"),
-            F.round(
-                dot(F.col("pv"), F.col("v")) / (F.col("npv") * F.col("nv")), 6
-            ).alias("sim"),
+            F.round(F.expr(f"{dot('pv', 'v')} / (npv * nv)"), 6).alias("sim"),
         )
     )
     w = Window.partitionBy("probe_id").orderBy(F.col("sim").desc(), "cand_id")
@@ -270,14 +259,13 @@ def sim_rrf_fusion(spark, sf_dir):
         F.col("vec_id").alias("probe_id"), F.col("v").alias("pv")
     )
     j = vecs.join(F.broadcast(probes), F.col("vec_id") != F.col("probe_id"))
-    pv, v = F.col("pv"), F.col("v")
     sims = j.select(
         "probe_id",
         F.col("vec_id").alias("cand_id"),
-        F.round(dot(pv, v) / (F.sqrt(dot(pv, pv)) * F.sqrt(dot(v, v))), 6).alias(
-            "cos_sim"
-        ),
-        F.round(dot(pv, pv) - 2 * dot(pv, v) + dot(v, v), 6).alias("l2_sq"),
+        F.round(F.expr(cosine("pv", "v")), 6).alias("cos_sim"),
+        F.round(
+            F.expr(f"{dot('pv', 'pv')} - 2 * {dot('pv', 'v')} + {dot('v', 'v')}"), 6
+        ).alias("l2_sq"),
     )
     wc = Window.partitionBy("probe_id").orderBy(F.desc("cos_sim"), "cand_id")
     wl = Window.partitionBy("probe_id").orderBy("l2_sq", "cand_id")

@@ -264,14 +264,14 @@ def pipeline_dedup_cascade(spark, sf_dir):
     posture: stages run cheapest-first so each pass shrinks the input
     of the costlier next pass; every stage is the already-bounded
     primitive (hash shuffle / band buckets / centroid blocks)."""
-    from etl_builder_spark.llm.dedup import _minhash_sig_bands
+    from etl_builder_spark.llm.dedup import _band_collisions, _minhash_sig_bands
     from etl_builder_spark.llm.embed_dedup import (
         EMBED_DUP_TAU,
         PERTURB_DELTA,
         SEM_CENT_LO,
         SEM_N_CENT,
     )
-    from etl_builder_spark.llm.similarity import _dbl, cosine
+    from etl_builder_spark.llm.similarity import _dbl, dot, norm
     from pyspark.sql import Window
 
     d = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < CASCADE_SLICE).select(
@@ -314,14 +314,8 @@ def pipeline_dedup_cascade(spark, sf_dir):
     # stage 2: banded MinHash, drop higher id of pairs with >= CASCADE_MIN_EQ
     # matching signature components
     sig, bands = _minhash_sig_bands(surv1)
-    a, b = bands.alias("a"), bands.alias("b")
     cand2 = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        _band_collisions(bands)
         .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .distinct()
     )
@@ -363,16 +357,13 @@ def pipeline_dedup_cascade(spark, sf_dir):
     # per pair, and nv rides the persisted assignment so the
     # within-cluster pair fan-out — the hot loop — pays one dot per
     # pair instead of three folds.
-    from etl_builder_spark.llm.similarity import dot as _dot
-    from etl_builder_spark.llm.similarity import norm as _norm
-
-    ev = evec.select("doc_id", "v", _norm(F.col("v")).alias("nv"))
-    cn = cent.select("cluster_id", "cv", _norm(F.col("cv")).alias("ncv"))
+    ev = evec.select("doc_id", "v", F.expr(norm("v")).alias("nv"))
+    cn = cent.select("cluster_id", "cv", F.expr(norm("cv")).alias("ncv"))
     asg = (
         ev.crossJoin(F.broadcast(cn))
         .withColumn(
             "negc",
-            -F.round(_dot(F.col("v"), F.col("cv")) / (F.col("nv") * F.col("ncv")), 6),
+            -F.round(F.expr(f"{dot('v', 'cv')} / (nv * ncv)"), 6),
         )
         .groupBy("doc_id")
         .agg(
@@ -394,7 +385,7 @@ def pipeline_dedup_cascade(spark, sf_dir):
         x.join(y, "cluster_id")
         .where(F.col("id_a") < F.col("id_b"))
         .where(
-            F.round(_dot(F.col("xv"), F.col("yv")) / (F.col("nxv") * F.col("nyv")), 6)
+            F.round(F.expr(f"{dot('xv', 'yv')} / (nxv * nyv)"), 6)
             >= EMBED_DUP_TAU
         )
         .select(F.col("id_b").alias("doc_id"))

@@ -51,14 +51,6 @@ def _lev_pinned(a, b, threshold: int | None = None):
     return F.when(ascii_ok, lev)
 
 
-#: DuckDB twin of _lev_pinned over the standard pair aliases
-def _lev_sql(x: str, y: str) -> str:
-    return (
-        f"CASE WHEN strlen({x}) = length({x}) AND strlen({y}) = length({y}) "
-        f"THEN levenshtein({x}, {y}) END"
-    )
-
-
 @register(
     "er_blocked_fuzzy_match",
     oracle=f"""

@@ -305,21 +305,7 @@ def graph_triangle_count(spark, sf_dir):
     support-floor edge definition is the scale lever shared with
     ml_item_cf_cosine.  All counts are exact integers; the single
     division rounds 6 dp."""
-    l = load_table(spark, sf_dir, "lineitem")
-    items = l.select("l_orderkey", "l_partkey").distinct()
-    a, b = items.alias("a"), items.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .agg(F.count(F.lit(1)).alias("n_co"))
-        .where(F.col("n_co") >= 3)
-        .select("u", "v")
-        .persist()
-    )
+    edges = _copurchase_edges(spark, sf_dir)
     e1, e2, e3 = edges.alias("e1"), edges.alias("e2"), edges.alias("e3")
     wedges = e1.join(e2, F.col("e1.v") == F.col("e2.u")).select(
         F.col("e1.u").alias("wu"), F.col("e1.v").alias("wv"), F.col("e2.v").alias("ww")
@@ -415,21 +401,7 @@ def graph_jaccard_link_prediction(spark, sf_dir):
     TakeOrderedAndProject merge.  All set sizes are exact integers —
     the one division rounds 6 dp before ranking with the pair-key
     tiebreak."""
-    l = load_table(spark, sf_dir, "lineitem")
-    items = l.select("l_orderkey", "l_partkey").distinct()
-    a, b = items.alias("a"), items.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .agg(F.count(F.lit(1)).alias("n_co"))
-        .where(F.col("n_co") >= 3)
-        .select("u", "v")
-        .persist()
-    )
+    edges = _copurchase_edges(spark, sf_dir)
     adj = (
         edges.select(F.col("u").alias("node"), F.col("v").alias("nbr"))
         .unionAll(edges.select(F.col("v").alias("node"), F.col("u").alias("nbr")))
@@ -523,21 +495,7 @@ def graph_resource_allocation(spark, sf_dir):
     Jaccard key: fan-out bounded by degree, degrees broadcast,
     non-adjacency as a broadcast anti-join, top-k a
     TakeOrderedAndProject merge."""
-    l = load_table(spark, sf_dir, "lineitem")
-    items = l.select("l_orderkey", "l_partkey").distinct()
-    a, b = items.alias("a"), items.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .agg(F.count(F.lit(1)).alias("n_co"))
-        .where(F.col("n_co") >= 3)
-        .select("u", "v")
-        .persist()
-    )
+    edges = _copurchase_edges(spark, sf_dir)
     adj = edges.select(F.col("u").alias("node"), F.col("v").alias("nbr")).unionAll(
         edges.select(F.col("v").alias("node"), F.col("u").alias("nbr"))
     )
@@ -624,21 +582,7 @@ def graph_katz_centrality(spark, sf_dir):
     endpoint (fan-out bounded by degree — the triangle/wedge
     argument) followed by a map-side-combined count; β^k never
     materializes as a float."""
-    l = load_table(spark, sf_dir, "lineitem")
-    items = l.select("l_orderkey", "l_partkey").distinct()
-    a0, b0 = items.alias("a"), items.alias("b")
-    e0 = (
-        a0.join(
-            b0,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .agg(F.count(F.lit(1)).alias("n_co"))
-        .where(F.col("n_co") >= 3)
-        .select("u", "v")
-        .persist()  # both adjacency orientations derive from one build
-    )
+    e0 = _copurchase_edges(spark, sf_dir)
     adj = (
         e0.select(F.col("u").alias("src"), F.col("v").alias("dst"))
         .unionAll(e0.select(F.col("v").alias("src"), F.col("u").alias("dst")))
@@ -675,8 +619,9 @@ def graph_katz_centrality(spark, sf_dir):
 
 
 def _copurchase_edges(spark, sf_dir):
-    """The graph_triangle_count edge build, shared by the round-9 graph
-    kernels: undirected co-purchase edges (u < v), support floor ≥ 3."""
+    """Undirected co-purchase edges (u < v) with a support floor of
+    ≥ 3 shared orders, persisted: every co-purchase graph key reads
+    the edge list two or more times."""
     l = load_table(spark, sf_dir, "lineitem")
     items = l.select("l_orderkey", "l_partkey").distinct()
     a, b = items.alias("a"), items.alias("b")
@@ -692,6 +637,34 @@ def _copurchase_edges(spark, sf_dir):
         .select("u", "v")
         .persist()
     )
+
+
+def _propagate_labels(sym):
+    """(node, lab) after 3 rounds of min-label propagation over the
+    symmetric edge list ``sym`` (u, v): every node starts with its own
+    id and takes the least of its label and its neighbours' labels.
+
+    Each round's frontier is persisted: without it every round's plan
+    re-expands the full prior lineage (the classic
+    iterate-on-DataFrame trap — each extra round would re-run all
+    earlier joins), while the cache turns round r's input into one
+    InMemoryTableScan; A/B at sf0.1 warmed: 3.81s -> 3.56s, and the
+    gap widens with rounds x data (PERF.md round 9)."""
+    labels = sym.select(F.col("u").alias("node")).distinct().select(
+        "node", F.col("node").alias("lab")
+    )
+    for _ in range(3):
+        labels = labels.persist()
+        nb_min = (
+            sym.join(labels.withColumnRenamed("node", "v2"), sym["v"] == F.col("v2"))
+            .groupBy("u")
+            .agg(F.min("lab").alias("nb_lab"))
+        )
+        labels = labels.join(nb_min, labels["node"] == nb_min["u"], "left").select(
+            "node",
+            F.least(F.col("lab"), F.coalesce(F.col("nb_lab"), F.col("lab"))).alias("lab"),
+        )
+    return labels
 
 
 _EDGES_SQL = """
@@ -1043,33 +1016,8 @@ def graph_label_propagation(spark, sf_dir):
     sym = edges.select("u", "v").unionAll(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).repartition("v").persist()
-    labels = sym.select(F.col("u").alias("node")).distinct().select(
-        "node", F.col("node").alias("lab")
-    )
-    for _ in range(3):
-        # persist each round's frontier: without it every round's plan
-        # re-expands the full prior lineage (the classic
-        # iterate-on-DataFrame trap — each extra round would re-run all
-        # earlier joins), while the cache turns round r's input into one
-        # InMemoryTableScan; A/B at sf0.1 warmed: 3.81s -> 3.56s here,
-        # and the gap widens with rounds x data (PERF.md round 9)
-        labels = labels.persist()
-        nb_min = (
-            sym.join(labels.withColumnRenamed("node", "v2"), sym["v"] == F.col("v2"))
-            .groupBy("u")
-            .agg(F.min("lab").alias("nb_lab"))
-        )
-        labels = (
-            labels.join(nb_min, labels["node"] == nb_min["u"], "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("lab"), F.coalesce(F.col("nb_lab"), F.col("lab"))
-                ).alias("lab"),
-            )
-        )
     return (
-        labels.groupBy(F.col("lab").alias("label"))
+        _propagate_labels(sym).groupBy(F.col("lab").alias("label"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_members"),
             F.min("node").cast("bigint").alias("min_node"),
@@ -1256,23 +1204,7 @@ def graph_modularity_score(spark, sf_dir):
     sym = edges.select("u", "v").unionAll(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).persist()
-    labels = sym.select(F.col("u").alias("node")).distinct().select(
-        "node", F.col("node").alias("lab")
-    )
-    for _ in range(3):
-        labels = labels.persist()
-        nb_min = (
-            sym.join(labels.withColumnRenamed("node", "v2"), sym["v"] == F.col("v2"))
-            .groupBy("u")
-            .agg(F.min("lab").alias("nb_lab"))
-        )
-        labels = labels.join(nb_min, labels["node"] == nb_min["u"], "left").select(
-            "node",
-            F.least(F.col("lab"), F.coalesce(F.col("nb_lab"), F.col("lab"))).alias(
-                "lab"
-            ),
-        )
-    labels = labels.persist()
+    labels = _propagate_labels(sym).persist()
     m2 = sym.agg(F.count(F.lit(1)).cast("bigint").alias("m2"))
     la = labels.select(F.col("node").alias("u"), F.col("lab").alias("la"))
     lb = labels.select(F.col("node").alias("v"), F.col("lab").alias("lb"))

@@ -233,22 +233,7 @@ def stats_ks_two_sample(spark, sf_dir):
     frame (max + argmin location — two consumers, one derivation)."""
     from pyspark.sql import Window
 
-    o = load_table(spark, sf_dir, "orders").where(
-        # complete-case (round-12 nullmeasures sweep): a NULL price is
-        # not an observation — both engines drop it before the statistic
-        F.year("o_orderdate").isin(1995, 1996)
-        & F.col("o_totalprice").isNotNull()
-    )
-    is_a = F.when(F.year("o_orderdate") == 1995, 1).otherwise(0)
-    per_val = (
-        o.select(F.col("o_totalprice").alias("v"), is_a.alias("is_a"))
-        .groupBy("v")
-        .agg(
-            F.sum("is_a").cast("bigint").alias("na"),
-            F.sum(1 - F.col("is_a")).cast("bigint").alias("nb"),
-        )
-        .persist()
-    )
+    per_val = _per_val_counts(spark, sf_dir).persist()
     tot = per_val.agg(
         F.sum("na").cast("bigint").alias("ta"), F.sum("nb").cast("bigint").alias("tb")
     )
@@ -606,22 +591,7 @@ def stats_mannwhitney_u(spark, sf_dir):
     sorts |rows|; this one never materializes a rank."""
     from pyspark.sql import Window
 
-    o = load_table(spark, sf_dir, "orders").where(
-        # complete-case (round-12 nullmeasures sweep): a NULL price is
-        # not an observation — both engines drop it before the statistic
-        F.year("o_orderdate").isin(1995, 1996)
-        & F.col("o_totalprice").isNotNull()
-    )
-    is_a = F.when(F.year("o_orderdate") == 1995, 1).otherwise(0)
-    per_val = (
-        o.select(F.col("o_totalprice").alias("v"), is_a.alias("is_a"))
-        .groupBy("v")
-        .agg(
-            F.sum("is_a").cast("bigint").alias("na"),
-            F.sum(1 - F.col("is_a")).cast("bigint").alias("nb"),
-        )
-        .persist()
-    )
+    per_val = _per_val_counts(spark, sf_dir).persist()
     tot = per_val.agg(
         F.sum("na").cast("bigint").alias("ta"), F.sum("nb").cast("bigint").alias("tb")
     )
@@ -734,8 +704,9 @@ PREFIX_BANDS = 32
 
 
 def _per_val_counts(spark, sf_dir):
-    """Shared fixture of the KS / Mann-Whitney pair: per-DISTINCT-value
-    integer counts of the 1995 (a) vs 1996 (b) order-total samples."""
+    """Shared fixture of the KS / Mann-Whitney keys and their banded
+    twins: per-DISTINCT-value integer counts (v, na, nb) of the 1995
+    (a) vs 1996 (b) order-total samples."""
     o = load_table(spark, sf_dir, "orders").where(
         # complete-case (round-12 nullmeasures sweep): a NULL price is
         # not an observation — both engines drop it before the statistic
@@ -926,7 +897,7 @@ def banded_running(df, value_col: str, tiebreak_col: str, descending: bool = Fal
     prefix shapes (ts_changepoint_cusum: order by day, sum
     deviations).
 
-    Expressions build as SQL text (r16, the dot_sql rationale): this
+    Expressions build as SQL text (r16, the similarity.dot rationale): this
     helper sits under ~10 stats/window keys and its Column-API build
     cost ~0.2 s of py4j round trips per invocation; the parsed strings
     yield the same Catalyst trees (double literal `{n_bands}.0D`,

@@ -16,6 +16,46 @@ from etl_builder_spark.registry import register
 from etl_builder_spark.session import load_table
 
 
+def _hour_spine(e):
+    """(hour_start): every hour from the hour of the first event to
+    the hour of the last — the dense spine gaps are filled against."""
+    bounds = e.agg(
+        F.date_trunc("hour", F.min("ts")).alias("lo"),
+        F.date_trunc("hour", F.max("ts")).alias("hi"),
+    )
+    return bounds.select(
+        F.explode(F.sequence("lo", "hi", F.expr("INTERVAL 1 HOUR"))).alias("hour_start")
+    )
+
+
+def _epoch_hour(ts):
+    """Whole hours since the epoch of an hour-aligned timestamp."""
+    return (F.unix_micros(ts) / 3_600_000_000).cast("bigint")
+
+
+def _tail_series(e, event_type: str, n: int):
+    """One row (xs): the hourly counts of ``event_type`` over the last
+    ``n`` hours of the spine, zero-filled, as doubles in hour order."""
+    spine = _hour_spine(e).select(_epoch_hour("hour_start").alias("t"))
+    hourly = (
+        e.where(F.col("event_type") == event_type)
+        .groupBy(_epoch_hour(F.date_trunc("hour", F.col("ts"))).alias("t"))
+        .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
+    )
+    tmax = spine.agg(F.max("t").alias("tmax"))
+    tail = (
+        spine.crossJoin(F.broadcast(tmax))
+        .where(F.col("t") > F.col("tmax") - n)
+        .join(hourly, "t", "left")
+        .select("t", F.coalesce("x", F.lit(0)).cast("double").alias("x"))
+    )
+    return tail.agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("t", "x"))), lambda s: s["x"]
+        ).alias("xs")
+    )
+
+
 @register(
     "ts_hourly_gapfill",
     oracle="""
@@ -49,13 +89,7 @@ def ts_hourly_gapfill(spark, sf_dir):
     the observed range) × type dims, left-joined against the sparse
     hourly aggregate; gaps zero-filled and flagged."""
     e = load_table(spark, sf_dir, "events")
-    bounds = e.agg(
-        F.date_trunc("hour", F.min("ts")).alias("lo"),
-        F.date_trunc("hour", F.max("ts")).alias("hi"),
-    )
-    spine = bounds.select(
-        F.explode(F.sequence("lo", "hi", F.expr("INTERVAL 1 HOUR"))).alias("hour_start")
-    )
+    spine = _hour_spine(e)
     types = e.select("event_type").distinct()
     grid = spine.crossJoin(F.broadcast(types))
     actual = e.groupBy(
@@ -675,13 +709,7 @@ def ts_interpolate_linear(spark, sf_dir):
     from pyspark.sql import Window
 
     e = load_table(spark, sf_dir, "events")
-    bounds = e.agg(
-        F.date_trunc("hour", F.min("ts")).alias("lo"),
-        F.date_trunc("hour", F.max("ts")).alias("hi"),
-    )
-    spine = bounds.select(
-        F.explode(F.sequence("lo", "hi", F.expr("INTERVAL 1 HOUR"))).alias("hour_start")
-    )
+    spine = _hour_spine(e)
     types = e.select("event_type").distinct()
     grid = spine.crossJoin(F.broadcast(types))
     actual = e.groupBy(
@@ -2778,18 +2806,8 @@ def ts_cross_corr_lags(spark, sf_dir):
     bounds are the gapfill machinery (second scan of events, within
     the ≤2-scan budget)."""
     e = load_table(spark, sf_dir, "events")
-    bounds = e.agg(
-        F.date_trunc("hour", F.min("ts")).alias("lo"),
-        F.date_trunc("hour", F.max("ts")).alias("hi"),
-    )
-    spine = bounds.select(
-        F.explode(F.sequence("lo", "hi", F.expr("INTERVAL 1 HOUR"))).alias("h")
-    ).select((F.unix_micros("h") / 3_600_000_000).cast("bigint").alias("t"))
-    hourly = e.groupBy(
-        (F.unix_micros(F.date_trunc("hour", F.col("ts"))) / 3_600_000_000)
-        .cast("bigint")
-        .alias("t")
-    ).agg(
+    spine = _hour_spine(e).select(_epoch_hour("hour_start").alias("t"))
+    hourly = e.groupBy(_epoch_hour(F.date_trunc("hour", F.col("ts"))).alias("t")).agg(
         F.sum(F.when(F.col("event_type") == XCORR_X, 1).otherwise(0))
         .cast("bigint")
         .alias("x"),
@@ -2912,34 +2930,7 @@ def ts_holt_linear_fold(spark, sf_dir):
     smoothing at scale is the same fold inside a groupBy(key)
     collect_list of bounded windows."""
     e = load_table(spark, sf_dir, "events")
-    bounds = e.agg(
-        F.date_trunc("hour", F.min("ts")).alias("lo"),
-        F.date_trunc("hour", F.max("ts")).alias("hi"),
-    )
-    spine = bounds.select(
-        F.explode(F.sequence("lo", "hi", F.expr("INTERVAL 1 HOUR"))).alias("h")
-    ).select((F.unix_micros("h") / 3_600_000_000).cast("bigint").alias("t"))
-    hourly = (
-        e.where(F.col("event_type") == XCORR_X)
-        .groupBy(
-            (F.unix_micros(F.date_trunc("hour", F.col("ts"))) / 3_600_000_000)
-            .cast("bigint")
-            .alias("t")
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
-    )
-    tmax = spine.agg(F.max("t").alias("tmax"))
-    tail = (
-        spine.crossJoin(F.broadcast(tmax))
-        .where(F.col("t") > F.col("tmax") - HOLT_N)
-        .join(hourly, "t", "left")
-        .select("t", F.coalesce("x", F.lit(0)).cast("double").alias("x"))
-    )
-    arr = tail.agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("t", "x"))), lambda s: s["x"]
-        ).alias("xs")
-    )
+    arr = _tail_series(e, XCORR_X, HOLT_N)
     folded = arr.select(
         F.expr(
             """
@@ -3133,34 +3124,7 @@ def ts_kalman_local_level(spark, sf_dir):
     filtering at scale = the same fold inside groupBy(key) over
     collect_list of bounded windows."""
     e = load_table(spark, sf_dir, "events")
-    bounds = e.agg(
-        F.date_trunc("hour", F.min("ts")).alias("lo"),
-        F.date_trunc("hour", F.max("ts")).alias("hi"),
-    )
-    spine = bounds.select(
-        F.explode(F.sequence("lo", "hi", F.expr("INTERVAL 1 HOUR"))).alias("h")
-    ).select((F.unix_micros("h") / 3_600_000_000).cast("bigint").alias("t"))
-    hourly = (
-        e.where(F.col("event_type") == XCORR_X)
-        .groupBy(
-            (F.unix_micros(F.date_trunc("hour", F.col("ts"))) / 3_600_000_000)
-            .cast("bigint")
-            .alias("t")
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
-    )
-    tmax = spine.agg(F.max("t").alias("tmax"))
-    tail = (
-        spine.crossJoin(F.broadcast(tmax))
-        .where(F.col("t") > F.col("tmax") - HOLT_N)
-        .join(hourly, "t", "left")
-        .select("t", F.coalesce("x", F.lit(0)).cast("double").alias("x"))
-    )
-    arr = tail.agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("t", "x"))), lambda s: s["x"]
-        ).alias("xs")
-    )
+    arr = _tail_series(e, XCORR_X, HOLT_N)
     folded = arr.select(
         F.expr(
             f"""
@@ -3276,34 +3240,7 @@ def ts_croston_intermittent(spark, sf_dir):
     inside groupBy(sku) over collected bounded windows — exactly how
     the planner runs it over millions of SKUs."""
     e = load_table(spark, sf_dir, "events")
-    bounds = e.agg(
-        F.date_trunc("hour", F.min("ts")).alias("lo"),
-        F.date_trunc("hour", F.max("ts")).alias("hi"),
-    )
-    spine = bounds.select(
-        F.explode(F.sequence("lo", "hi", F.expr("INTERVAL 1 HOUR"))).alias("h")
-    ).select((F.unix_micros("h") / 3_600_000_000).cast("bigint").alias("t"))
-    hourly = (
-        e.where(F.col("event_type") == CROSTON_TYPE)
-        .groupBy(
-            (F.unix_micros(F.date_trunc("hour", F.col("ts"))) / 3_600_000_000)
-            .cast("bigint")
-            .alias("t")
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
-    )
-    tmax = spine.agg(F.max("t").alias("tmax"))
-    tail = (
-        spine.crossJoin(F.broadcast(tmax))
-        .where(F.col("t") > F.col("tmax") - CROSTON_N)
-        .join(hourly, "t", "left")
-        .select("t", F.coalesce("x", F.lit(0)).cast("double").alias("x"))
-    )
-    arr = tail.agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("t", "x"))), lambda s: s["x"]
-        ).alias("xs")
-    )
+    arr = _tail_series(e, CROSTON_TYPE, CROSTON_N)
     folded = arr.select(
         F.expr(
             f"""

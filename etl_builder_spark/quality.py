@@ -58,15 +58,6 @@ def audit(df: DataFrame, checks: list[Check]) -> DataFrame:
     ).select("check_name", "n_violations", "n_rows")
 
 
-def check_unique(df: DataFrame, cols: tuple[str, ...]) -> DataFrame:
-    """Duplicate-key report: keys with multiplicity > 1."""
-    return (
-        df.groupBy(*cols)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") > 1)
-    )
-
-
 def check_referential(child: DataFrame, child_key: str, parent: DataFrame, parent_key: str) -> DataFrame:
     """Orphan report: child keys with no parent (anti join)."""
     return (

@@ -121,13 +121,17 @@ def run_to_memory_with_progress(
         for p in q.recentProgress:
             d = p if isinstance(p, dict) else json.loads(p.json)
             seen.setdefault(d["batchId"], d)
+        out = spark.table(name)
     finally:
         spark.streams.removeListener(listener)
         # the query has stopped (or never started) and the memory sink
-        # keeps its rows in memory, so the checkpoint is dead weight
+        # keeps its rows in memory, so the checkpoint is dead weight;
+        # ``out`` holds the sink itself, so the catalog view would only
+        # pile up one entry per replay
         shutil.rmtree(ckpt, ignore_errors=True)
+        spark.catalog.dropTempView(name)
     progress = [seen[b] for b in sorted(seen)]
-    return spark.table(name), progress
+    return out, progress
 
 
 def tumbling_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:

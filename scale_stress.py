@@ -339,10 +339,10 @@ def measure_ivf(spark, sf_dir: str) -> dict:
     from pyspark.sql import Window
 
     pc = probes.crossJoin(F.broadcast(cent))
-    from etl_builder_spark.llm.ivf import _sq_dist
+    from etl_builder_spark.llm.similarity import sq_dist
 
     w = Window.partitionBy("probe_id").orderBy(
-        F.round(_sq_dist(F.col("pv"), F.col("cv")), 9).asc(), F.col("cluster_id")
+        F.expr(f"ROUND({sq_dist('pv', 'cv')}, 9)").asc(), F.col("cluster_id")
     )
     probe_lists = (
         pc.withColumn("crn", F.row_number().over(w))

@@ -20,6 +20,8 @@ of waiting for the next full sweep:
 
 from __future__ import annotations
 
+import tempfile
+
 import duckdb
 import pytest
 
@@ -115,7 +117,12 @@ SHAPES = (
 def corpora(tmp_path_factory):
     root = tmp_path_factory.mktemp("degenerate")
     degenerate_corpora.build("/root/testdata/sf0.001", str(root))
-    return str(root)
+    # the corpora live under a new tmp path each run, so the stages the
+    # keys build for them (keyed on the absolute corpus path) must live
+    # there too, or every run leaves a fresh set under the real temp dir
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(tempfile, "tempdir", str(tmp_path_factory.mktemp("stages")))
+        yield str(root)
 
 
 @pytest.fixture(scope="module")

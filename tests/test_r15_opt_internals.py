@@ -233,11 +233,21 @@ def test_kmeans_assignment_carries_vector_no_rejoin(spark):
 
 
 def test_hoisted_norm_cosine_bit_identical(spark):
-    """dot(a,b)/(norm(a)*norm(b)) must be BIT-identical to cosine(a,b)
-    — the hoist moves the same fold out of the pair loop without
-    changing a single float op — on the real embedding corpus."""
-    from etl_builder_spark.llm.similarity import _dbl, cosine, dot, norm
+    """dot(a,b)/(norm(a)*norm(b)) with each norm hoisted to a per-row
+    column before the join must be BIT-identical to a plain-Python
+    cosine fold in the same operation order — the hoist moves the same
+    fold out of the pair loop without changing a single float op — on
+    the real embedding corpus."""
+    import math
+
+    from etl_builder_spark.llm.similarity import _dbl, dot, norm
     from etl_builder_spark.session import load_table
+
+    def py_dot(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc = acc + x * y
+        return acc
 
     e = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
         "vec_id", _dbl().alias("v")
@@ -245,17 +255,20 @@ def test_hoisted_norm_cosine_bit_identical(spark):
     probes = e.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("probe_id"),
         F.col("v").alias("pv"),
-        norm(F.col("v")).alias("npv"),
+        F.expr(norm("v")).alias("npv"),
     )
-    pairs = F.broadcast(probes).join(
-        e.select("vec_id", "v", norm(F.col("v")).alias("nv")),
-        F.col("vec_id") != F.col("probe_id"),
-    )
-    mismatch = pairs.where(
-        ~(
-            cosine(F.col("pv"), F.col("v")).eqNullSafe(
-                dot(F.col("pv"), F.col("v")) / (F.col("npv") * F.col("nv"))
-            )
+    rows = (
+        F.broadcast(probes)
+        .join(
+            e.select("vec_id", "v", F.expr(norm("v")).alias("nv")),
+            F.col("vec_id") != F.col("probe_id"),
         )
-    ).count()
-    assert mismatch == 0
+        .select("pv", "v", F.expr(f"{dot('pv', 'v')} / (npv * nv)").alias("cos"))
+        .collect()
+    )
+    assert len(rows) > 100
+    for r in rows:
+        expect = py_dot(r.pv, r.v) / (
+            math.sqrt(py_dot(r.pv, r.pv)) * math.sqrt(py_dot(r.v, r.v))
+        )
+        assert r.cos == expect

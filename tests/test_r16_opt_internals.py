@@ -8,10 +8,9 @@ parity suite already covers end-to-end values):
   would have selected — including the duplicated-threshold shape the
   ``single`` corpus caught during the round (ten equidepth bins all
   targeting rank 1 must not share one window partition);
-- the SQL-text expression twins (``dot_sql``/``norm_sql``/
-  ``cosine_sql``/``_sq_dist_sql``) evaluate bit-identically to their
-  Column-API builders on the real embedding corpus — the whole
-  construction-tax batch rests on "same Catalyst trees, one parse".
+- the SQL-text vector builders (``dot``/``norm``/``cosine``/
+  ``sq_dist``) evaluate bit-identically to a plain-Python left fold in
+  the same operation order on the real embedding corpus.
 """
 
 from __future__ import annotations
@@ -78,20 +77,21 @@ def test_threshold_lookup_no_crossing_and_empty(spark):
 
 
 def test_sql_text_twins_bit_identical(spark):
-    """dot_sql/norm_sql/cosine_sql/_sq_dist_sql parse to expressions
-    that evaluate bit-identically to the Column-API forms on the real
-    corpus (eqNullSafe sweep, zero tolerance)."""
-    from etl_builder_spark.llm.pq import _sq_dist, _sq_dist_sql
-    from etl_builder_spark.llm.similarity import (
-        _dbl,
-        cosine,
-        cosine_sql,
-        dot,
-        dot_sql,
-        norm,
-        norm_sql,
-    )
+    """The SQL-text vector builders (``dot``/``norm``/``cosine``/
+    ``sq_dist``) evaluate bit-identically to a plain-Python left fold
+    in the same operation order on the real corpus (zero tolerance):
+    aggregate() folds from 0.0 left to right, so Spark and Python round
+    the same IEEE doubles at the same steps."""
+    import math
+
+    from etl_builder_spark.llm.similarity import _dbl, cosine, dot, norm, sq_dist
     from etl_builder_spark.session import load_table
+
+    def fold(a, b, term):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc = acc + term(x, y)
+        return acc
 
     e = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
         "vec_id", _dbl().alias("v")
@@ -99,14 +99,28 @@ def test_sql_text_twins_bit_identical(spark):
     probes = e.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("probe_id"), F.col("v").alias("pv")
     )
-    pairs = F.broadcast(probes).join(e, F.col("vec_id") != F.col("probe_id"))
-    mismatch = pairs.where(
-        ~dot(F.col("pv"), F.col("v")).eqNullSafe(F.expr(dot_sql("pv", "v")))
-        | ~norm(F.col("v")).eqNullSafe(F.expr(norm_sql("v")))
-        | ~cosine(F.col("pv"), F.col("v")).eqNullSafe(F.expr(cosine_sql("pv", "v")))
-        | ~_sq_dist(F.col("pv"), F.col("v")).eqNullSafe(F.expr(_sq_dist_sql("pv", "v")))
-    ).count()
-    assert mismatch == 0
+    rows = (
+        F.broadcast(probes)
+        .join(e, F.col("vec_id") != F.col("probe_id"))
+        .select(
+            "pv",
+            "v",
+            F.expr(dot("pv", "v")).alias("dot"),
+            F.expr(norm("v")).alias("norm"),
+            F.expr(cosine("pv", "v")).alias("cos"),
+            F.expr(sq_dist("pv", "v")).alias("d2"),
+        )
+        .collect()
+    )
+    assert len(rows) > 100
+    for r in rows:
+        d = fold(r.pv, r.v, lambda x, y: x * y)
+        n_p = math.sqrt(fold(r.pv, r.pv, lambda x, y: x * y))
+        n_v = math.sqrt(fold(r.v, r.v, lambda x, y: x * y))
+        assert r.dot == d
+        assert r.norm == n_v
+        assert r.cos == d / (n_p * n_v)
+        assert r.d2 == fold(r.pv, r.v, lambda x, y: (x - y) * (x - y))
 
 
 def test_winsorized_windows_share_one_exchange(spark):

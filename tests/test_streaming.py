@@ -83,6 +83,22 @@ def test_memory_replay_removes_its_checkpoint(spark, events_dir):
     assert out.agg(F.sum("n_events")).collect()[0][0] == 1000
 
 
+def test_memory_replays_leave_no_catalog_views(spark, events_dir):
+    """Memory-sink replays drop their ``mem_*`` temp view once they
+    hold the sink's frame, so a long session's catalog does not grow
+    per replay; the returned frames still collect every row."""
+
+    def mem_views():
+        return {t.name for t in spark.catalog.listTables() if t.name.startswith("mem_")}
+
+    before = mem_views()
+    ev = runtime.stream_events(spark, events_dir)
+    outs = [runtime.run_to_memory(runtime.session_counts(ev), "complete") for _ in range(2)]
+    assert mem_views() - before == set()
+    for out in outs:
+        assert out.agg(F.sum("n_events")).collect()[0][0] == 1000
+
+
 def test_dedup_within_watermark(spark, tmp_path):
     """J5: a replayed duplicate file is fully deduplicated by event_id."""
     dup_dir = tmp_path / "dup_events"
