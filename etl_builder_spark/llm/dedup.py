@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_builder_spark.folding import fold_lower, fold_upper
+from etl_builder_spark.llm.text import token_trigrams
 from etl_builder_spark.registry import register
 from etl_builder_spark.session import load_table
 
@@ -76,6 +77,20 @@ def _band_collisions(bands: DataFrame) -> DataFrame:
         (F.col("a.band") == F.col("b.band"))
         & (F.col("a.bh") == F.col("b.bh"))
         & (F.col("a.doc_id") < F.col("b.doc_id")),
+    )
+
+
+def _signature_agreement(cand: DataFrame, sig: DataFrame, keys, name: str) -> DataFrame:
+    """Candidate pairs ``cand`` (id_a, id_b, …) joined component-wise to
+    both documents' MinHash signatures ``sig`` (doc_id, i, minh): per
+    ``keys`` group, the number ``name`` of signature components on which
+    the two documents agree."""
+    sa, sb = sig.alias("sa"), sig.alias("sb")
+    return (
+        cand.join(sa, F.col("sa.doc_id") == F.col("id_a"))
+        .join(sb, (F.col("sb.doc_id") == F.col("id_b")) & (F.col("sb.i") == F.col("sa.i")))
+        .groupBy(*keys)
+        .agg(F.sum(F.when(F.col("sa.minh") == F.col("sb.minh"), 1).otherwise(0)).alias(name))
     )
 
 
@@ -387,16 +402,8 @@ def dedup_minhash_exact(spark, sf_dir):
         .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("n_shared_bands"))
     )
-    sa, sb = sig.alias("sa"), sig.alias("sb")
-    return (
-        cand.join(sa, F.col("sa.doc_id") == F.col("id_a"))
-        .join(sb, (F.col("sb.doc_id") == F.col("id_b")) & (F.col("sb.i") == F.col("sa.i")))
-        .groupBy("id_a", "id_b", "n_shared_bands")
-        .agg(
-            F.sum(F.when(F.col("sa.minh") == F.col("sb.minh"), 1).otherwise(0)).alias(
-                "n_eq_components"
-            )
-        )
+    return _signature_agreement(
+        cand, sig, ("id_a", "id_b", "n_shared_bands"), "n_eq_components"
     )
 
 
@@ -519,18 +526,9 @@ def dedup_minhash_incremental(spark, sf_dir):
         .groupBy("id_a", "id_b")
         .agg(F.countDistinct("band").alias("n_shared_bands"))
     )
-    sa, sb = sig.alias("sa"), sig.alias("sb")
-    return (
-        cand.join(sa, F.col("sa.doc_id") == F.col("id_a"))
-        .join(sb, (F.col("sb.doc_id") == F.col("id_b")) & (F.col("sb.i") == F.col("sa.i")))
-        .groupBy("id_a", "id_b", "n_shared_bands")
-        .agg(
-            F.sum(F.when(F.col("sa.minh") == F.col("sb.minh"), 1).otherwise(0)).alias(
-                "n_eq_components"
-            )
-        )
-        .withColumn("cross_corpus", F.col("id_a") < INC_OLD_MAX)
-    )
+    return _signature_agreement(
+        cand, sig, ("id_a", "id_b", "n_shared_bands"), "n_eq_components"
+    ).withColumn("cross_corpus", F.col("id_a") < INC_OLD_MAX)
 
 
 @register(
@@ -857,20 +855,7 @@ def dedup_text_containment(spark, sf_dir):
             excerpt_text.alias("text"),
         )
     )
-    # two-stage form (r15, guide §1.2 step 2): token array as a column
-    # first — the inlined form re-split the text once per trigram per
-    # element_at (see llm/sparse_sim.shingle_tf for the measurement)
-    t = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
-    tok_base = everything.select("doc_id", t.alias("toks")).where(F.size("toks") >= 3)
-    tri = F.transform(
-        F.sequence(F.lit(1), F.size("toks") - 2),
-        lambda i: F.concat_ws(
-            " ",
-            F.element_at(F.col("toks"), i),
-            F.element_at(F.col("toks"), i + 1),
-            F.element_at(F.col("toks"), i + 2),
-        ),
-    )
+    tok_base, tri = token_trigrams(everything, F.col("text"))
     sh = (
         tok_base.select("doc_id", F.explode(tri).alias("token"))
         .distinct()
@@ -1081,17 +1066,7 @@ def dedup_minhash_estimate_error(spark, sf_dir):
         .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .distinct()
     )
-    sa, sb = sig.alias("sa"), sig.alias("sb")
-    eq = (
-        cand.join(sa, F.col("sa.doc_id") == F.col("id_a"))
-        .join(sb, (F.col("sb.doc_id") == F.col("id_b")) & (F.col("sb.i") == F.col("sa.i")))
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.sum(F.when(F.col("sa.minh") == F.col("sb.minh"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_eq")
-        )
-    )
+    eq = _signature_agreement(cand, sig, ("id_a", "id_b"), "n_eq")
     ssize = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).cast("bigint").alias("sz"))
     xa, xb = shingles.alias("xa"), shingles.alias("xb")
     inter = (
@@ -1305,17 +1280,7 @@ def sketch_minhash_calibration(spark, sf_dir):
         .distinct()
         .persist()
     )
-    sa, sb = sig.alias("sa"), sig.alias("sb")
-    eq = (
-        cand.join(sa, F.col("sa.doc_id") == F.col("id_a"))
-        .join(sb, (F.col("sb.doc_id") == F.col("id_b")) & (F.col("sb.i") == F.col("sa.i")))
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.sum(F.when(F.col("sa.minh") == F.col("sb.minh"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_eq")
-        )
-    )
+    eq = _signature_agreement(cand, sig, ("id_a", "id_b"), "n_eq")
     x, y = shingles.alias("x"), shingles.alias("y")
     common = (
         cand.join(x, F.col("x.doc_id") == F.col("id_a"))

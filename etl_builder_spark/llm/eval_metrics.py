@@ -360,20 +360,34 @@ def ml_lift_gain_deciles(spark, sf_dir):
     rollup and the 10-row cumulative window are negligible."""
     from pyspark.sql import Window
 
+    ranked = _centroid_scored(spark, sf_dir).select(
+        "is_pos", F.ntile(10).over(Window.orderBy("d9", "vec_id")).alias("decile")
+    )
+    return _lift_table(ranked, F.col("decile").cast("int").alias("decile"))
+
+
+def _centroid_scored(spark, sf_dir):
+    """(vec_id, is_pos, d9): every embedding scored by its 9 dp squared
+    distance to the class-3 mean vector — the scorer both lift keys
+    rank."""
     e = load_table(spark, sf_dir, "embeddings")
     cent = _mean_vectors(
         e.where(F.col("label") == 3).select(F.posexplode(_dbl()).alias("pos0", "x"))
     )
     d2 = F.expr(sq_dist("v", "c"))
-    scored = (
+    return (
         e.select("vec_id", (F.col("label") == 3).alias("is_pos"), _dbl().alias("v"))
         .crossJoin(F.broadcast(cent))
         .select("vec_id", "is_pos", F.round(d2, 9).alias("d9"))
     )
-    ranked = scored.select(
-        "is_pos", F.ntile(10).over(Window.orderBy("d9", "vec_id")).alias("decile")
-    )
-    per = ranked.groupBy(F.col("decile").cast("int").alias("decile")).agg(
+
+
+def _lift_table(deciled, decile):
+    """Per-decile (decile, n, n_pos, lift, cum_capture) from (is_pos, …)
+    rows grouped on the ``decile`` column expression."""
+    from pyspark.sql import Window
+
+    per = deciled.groupBy(decile).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.when(F.col("is_pos"), 1).otherwise(0)).cast("bigint").alias("n_pos"),
     ).persist()
@@ -730,13 +744,28 @@ def ml_rfm_segmentation(spark, sf_dir):
     unchanged."""
     from pyspark.sql import Window
 
+    base = _rfm_base(spark, sf_dir)
+    r = F.ntile(5).over(Window.orderBy(F.col("recency_us").desc(), "user_id")).cast("int")
+    f = F.ntile(5).over(Window.orderBy("frequency", "user_id")).cast("int")
+    m = F.ntile(5).over(Window.orderBy("monetary", "user_id")).cast("int")
+    scored = base.select(
+        "user_id", "recency_us", "frequency", "monetary",
+        r.alias("r_score"), f.alias("f_score"), m.alias("m_score"),
+    )
+    return _rfm_segments(scored)
+
+
+def _rfm_base(spark, sf_dir):
+    """(user_id, recency_us, frequency, monetary): the per-user RFM
+    metrics both segmentation keys score — recency in exact µs against
+    the corpus high-water mark, purchase count and exact purchase value."""
     from etl_builder_spark.policy import money
 
     e = load_table(spark, sf_dir, "events")
     ref = e.agg(F.max("ts").alias("cutoff"))
     age = F.unix_micros(F.col("cutoff")) - F.unix_micros(F.col("ts"))
     is_p = F.col("event_type") == "purchase"
-    base = (
+    return (
         e.crossJoin(F.broadcast(ref))
         .groupBy("user_id")
         .agg(
@@ -747,13 +776,11 @@ def ml_rfm_segmentation(spark, sf_dir):
             ),
         )
     )
-    r = F.ntile(5).over(Window.orderBy(F.col("recency_us").desc(), "user_id")).cast("int")
-    f = F.ntile(5).over(Window.orderBy("frequency", "user_id")).cast("int")
-    m = F.ntile(5).over(Window.orderBy("monetary", "user_id")).cast("int")
-    scored = base.select(
-        "user_id", "recency_us", "frequency", "monetary",
-        r.alias("r_score"), f.alias("f_score"), m.alias("m_score"),
-    )
+
+
+def _rfm_segments(scored):
+    """Append the 555-style segment code and the lifecycle label to
+    (…, r_score, f_score, m_score) rows."""
     lifecycle = (
         F.when((F.col("r_score") >= 4) & (F.col("f_score") >= 4), "champion")
         .when((F.col("r_score") <= 2) & (F.col("f_score") >= 4), "at_risk_loyal")
@@ -853,26 +880,7 @@ def ml_rfm_segmentation_bucketed(spark, sf_dir):
     The same two-pass shape generalizes to the other global-window
     rankers flagged in VERDICT r5 (lift/gain deciles,
     cumulative-share, KS)."""
-    from pyspark.sql import functions as F  # noqa: F811
-
-    from etl_builder_spark.policy import money
-
-    e = load_table(spark, sf_dir, "events")
-    ref = e.agg(F.max("ts").alias("cutoff"))
-    age = F.unix_micros(F.col("cutoff")) - F.unix_micros(F.col("ts"))
-    is_p = F.col("event_type") == "purchase"
-    base = (
-        e.crossJoin(F.broadcast(ref))
-        .groupBy("user_id")
-        .agg(
-            F.min(age).cast("bigint").alias("recency_us"),
-            F.count(F.when(is_p, 1)).cast("bigint").alias("frequency"),
-            F.coalesce(F.sum(F.when(is_p, money("value"))).cast("double"), F.lit(0.0)).alias(
-                "monetary"
-            ),
-        )
-    )
-    base = base.persist()
+    base = _rfm_base(spark, sf_dir).persist()
     edges = (
         base.agg(
             F.expr(f"percentile(recency_us, {_RFM_QS})").alias("re"),
@@ -911,22 +919,7 @@ def ml_rfm_segmentation_bucketed(spark, sf_dir):
         "user_id", "recency_us", "frequency", "monetary",
         r_score.alias("r_score"), f_score.alias("f_score"), m_score.alias("m_score"),
     )
-    lifecycle = (
-        F.when((F.col("r_score") >= 4) & (F.col("f_score") >= 4), "champion")
-        .when((F.col("r_score") <= 2) & (F.col("f_score") >= 4), "at_risk_loyal")
-        .when((F.col("r_score") >= 4) & (F.col("f_score") <= 2), "new_or_promising")
-        .when((F.col("r_score") <= 2) & (F.col("f_score") <= 2), "hibernating")
-        .otherwise("regular")
-    )
-    return scored.select(
-        "*",
-        F.concat(
-            F.col("r_score").cast("string"),
-            F.col("f_score").cast("string"),
-            F.col("m_score").cast("string"),
-        ).alias("rfm_segment"),
-        lifecycle.alias("lifecycle"),
-    )
+    return _rfm_segments(scored)
 
 
 @register(
@@ -1006,17 +999,7 @@ def ml_lift_gain_deciles_bucketed(spark, sf_dir):
     Edges rounded 9 dp (the d9 score's own granularity) before
     comparison; Spark ``percentile`` ≡ DuckDB ``quantile_cont``
     verified bit-equal on this corpus."""
-    e = load_table(spark, sf_dir, "embeddings")
-    cent = _mean_vectors(
-        e.where(F.col("label") == 3).select(F.posexplode(_dbl()).alias("pos0", "x"))
-    )
-    d2 = F.expr(sq_dist("v", "c"))
-    scored = (
-        e.select("vec_id", (F.col("label") == 3).alias("is_pos"), _dbl().alias("v"))
-        .crossJoin(F.broadcast(cent))
-        .select("vec_id", "is_pos", F.round(d2, 9).alias("d9"))
-    )
-    scored = scored.persist()
+    scored = _centroid_scored(spark, sf_dir).persist()
     qs = ", ".join(f"{k / 10:.1f}D" for k in range(1, 10))
     edges = scored.agg(F.expr(f"percentile(d9, array({qs}))").alias("es")).select(
         *[F.round(F.col("es")[i], 9).alias(f"e{i + 1}") for i in range(9)]
@@ -1024,45 +1007,10 @@ def ml_lift_gain_deciles_bucketed(spark, sf_dir):
     decile = F.lit(1)
     for k in range(1, 10):
         decile = decile + (F.col("d9") > F.col(f"e{k}")).cast("int")
-    per = (
-        scored.crossJoin(F.broadcast(edges))
-        .select("is_pos", decile.cast("int").alias("decile"))
-        .groupBy("decile")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.when(F.col("is_pos"), 1).otherwise(0)).cast("bigint").alias("n_pos"),
-        )
-        .persist()
+    deciled = scored.crossJoin(F.broadcast(edges)).select(
+        "is_pos", decile.cast("int").alias("decile")
     )
-    tot = per.agg(
-        F.sum("n").cast("bigint").alias("nt"), F.sum("n_pos").cast("bigint").alias("pt")
-    )
-    from pyspark.sql import Window
-
-    cum = F.sum("n_pos").over(
-        Window.orderBy("decile").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        per.crossJoin(F.broadcast(tot))
-        .select(
-            "decile",
-            "n",
-            "n_pos",
-            # try_divide (round-12 degenerate sweep): zero positives in
-            # the corpus zero the base rate — lift/capture are the
-            # defined NULL on both engines
-            F.round(
-                F.try_divide(
-                    F.col("n_pos").cast("double") / F.col("n"),
-                    F.col("pt").cast("double") / F.col("nt"),
-                ),
-                6,
-            ).alias("lift"),
-            F.round(F.try_divide(cum.cast("double"), F.col("pt")), 6).alias(
-                "cum_capture"
-            ),
-        )
-    )
+    return _lift_table(deciled, "decile")
 
 
 @register(

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from etl_builder_spark.llm.similarity import _dbl, dot, norm, sq_dist
+from etl_builder_spark.llm.similarity import _dbl, dot, norm, probe_vectors, sq_dist
 from etl_builder_spark.registry import register
 from etl_builder_spark.session import load_table
 
@@ -276,7 +276,5 @@ def sim_knn_ivf(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", _dbl().alias("v"))
     centroids = train_quantizer(e, k=16, seed=42)
     indexed = assign_clusters(e, centroids)
-    probes = e.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("probe_id"), F.col("v").alias("pv")
-    )
+    probes = probe_vectors(e, 5)
     return ivf_topk(indexed, centroids, probes, k=10, n_probe=4)

@@ -38,7 +38,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_builder_spark.llm.similarity import _dbl, cosine, dot, norm, sq_dist
+from etl_builder_spark.llm.similarity import _dbl, cosine, dot, norm, probe_vectors, sq_dist
 from etl_builder_spark.registry import register
 from etl_builder_spark.session import file_version, load_table
 
@@ -261,7 +261,13 @@ def embed_pq_codes(spark, sf_dir):
     the true array shape for downstream composition (ADC, rerank,
     IVF-PQ)."""
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", _dbl().alias("v"))
-    return pq_encode(e, corpus_codebook(spark, sf_dir)).select(
+    return _codes_csv(pq_encode(e, corpus_codebook(spark, sf_dir)))
+
+
+def _codes_csv(encoded: DataFrame) -> DataFrame:
+    """(vec_id, codes_csv, recon_err): ``pq_encode`` output with the
+    codes comma-joined into one scalar column."""
+    return encoded.select(
         "vec_id",
         F.array_join(F.transform("codes", lambda x: x.cast("string")), ",").alias("codes_csv"),
         "recon_err",
@@ -278,14 +284,19 @@ def sim_topk_pq_adc(spark, sf_dir):
     distance (see _adc_scored).  Ranked on rounded distance with
     vec_id tiebreak."""
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", _dbl().alias("v"))
-    cb = corpus_codebook(spark, sf_dir)
-    codes = pq_encode(e, cb).select(
-        "vec_id", F.posexplode("codes").alias("subspace", "code")
-    )
-    probes = e.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("probe_id"), F.col("v").alias("pv")
-    )
-    scored = _adc_scored(codes, cb, probes)
+    return _adc_top10(e, corpus_codebook(spark, sf_dir))
+
+
+def _subspace_codes(e: DataFrame, cb: DataFrame) -> DataFrame:
+    """(vec_id, subspace, code): ``e`` PQ-encoded against ``cb``, one
+    row per subspace — the candidate side of ADC scoring."""
+    return pq_encode(e, cb).select("vec_id", F.posexplode("codes").alias("subspace", "code"))
+
+
+def _adc_top10(e: DataFrame, cb: DataFrame) -> DataFrame:
+    """(probe_id, vec_id, adc_dist, rank): each of the 5 probes' top-10
+    ADC neighbours in ``e`` under codebook ``cb``."""
+    scored = _adc_scored(_subspace_codes(e, cb), cb, probe_vectors(e, 5))
     wk = Window.partitionBy("probe_id").orderBy(F.col("adc_dist").asc(), "vec_id")
     return scored.withColumn("rank", F.row_number().over(wk)).where(F.col("rank") <= 10)
 
@@ -306,26 +317,34 @@ def sim_topk_pq_rerank(spark, sf_dir):
     Measured on the fixture: exact-top-10 recall 0.70 via the top-50
     shortlist vs 0.30 for pure ADC@10."""
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", _dbl().alias("v"))
-    cb = corpus_codebook(spark, sf_dir)
-    codes = pq_encode(e, cb).select(
-        "vec_id", F.posexplode("codes").alias("subspace", "code")
-    )
-    probes = e.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("probe_id"), F.col("v").alias("pv")
-    )
-    scored = _adc_scored(codes, cb, probes)
+    return _adc_rerank(e, corpus_codebook(spark, sf_dir))
+
+
+def _adc_rerank(e: DataFrame, cb: DataFrame) -> DataFrame:
+    """ADC scores of the whole of ``e`` for the 5 probes under codebook
+    ``cb``, re-ranked exactly (``_exact_rerank``)."""
+    probes = probe_vectors(e, 5)
+    return _exact_rerank(_adc_scored(_subspace_codes(e, cb), cb, probes), e, probes)
+
+
+def _exact_rerank(scored: DataFrame, e: DataFrame, probes: DataFrame) -> DataFrame:
+    """(probe_id, vec_id, exact_dist, rank): the top-50 ADC shortlist
+    per probe, re-ranked to a top-10 by exact squared distance against
+    the raw vectors of the shortlisted candidates only."""
     ws = Window.partitionBy("probe_id").orderBy(F.col("adc_dist").asc(), "vec_id")
     shortlist = scored.withColumn("r", F.row_number().over(ws)).where(F.col("r") <= 50)
-    # exact re-rank: fetch raw vectors only for shortlisted candidates
     rerank = (
         shortlist.select("probe_id", "vec_id")
         .join(e, "vec_id")
         .join(F.broadcast(probes), "probe_id")
     )
-    exact_d2 = F.expr(sq_dist("pv", "v"))
     wk = Window.partitionBy("probe_id").orderBy(F.col("exact_dist").asc(), "vec_id")
     return (
-        rerank.select("probe_id", "vec_id", F.round(exact_d2, 6).alias("exact_dist"))
+        rerank.select(
+            "probe_id",
+            "vec_id",
+            F.expr(f"ROUND({sq_dist('pv', 'v')}, 6)").alias("exact_dist"),
+        )
         .withColumn("rank", F.row_number().over(wk))
         .where(F.col("rank") <= 10)
     )
@@ -358,26 +377,26 @@ def sim_knn_ivfpq(spark, sf_dir):
     twin — ``sim_knn_ivfpq_exact`` is the hash-checkable twin with the
     codebook pinned too.  Recall floor vs exact cosine is pinned in
     tests/test_pq.py::test_ivfpq_recall_vs_exact."""
-    return _ivfpq_topk(spark, sf_dir, corpus_codebook(spark, sf_dir))
+    cb = corpus_codebook(spark, sf_dir)
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", _dbl().alias("v")).persist()
+    return _ivfpq_topk(e, cb)
 
 
-def _ivfpq_topk(spark: SparkSession, sf_dir: str, cb: DataFrame | None = None) -> DataFrame:
-    """IVF-PQ search shared by the trained-codebook (rows-only) and
-    pinned-codebook (exact-oracle, cb=None) declared keys — the
-    codebook is the ONLY difference between them, so one body carries
-    both.  The corpus frame is persisted: it feeds coarse centroids,
-    assignment, encode, probes and the rerank fetch (5 references —
-    10 source scans unpersisted, plans/audit.py).  A lazy result can't
-    unpersist its own inputs, so the cache is left to the session
-    (ADVICE r6): DataFrame.persist() defaults to MEMORY_AND_DISK_DESER
-    and identical lineages dedupe in the CacheManager, so long-lived
-    multi-query sessions spill rather than OOM."""
+def _ivfpq_topk(e: DataFrame, cb: DataFrame) -> DataFrame:
+    """IVF-PQ search over the corpus frame ``e`` with codebook ``cb``,
+    shared by the trained-codebook (rows-only) and pinned-codebook
+    (exact-oracle) declared keys — the codebook is the ONLY difference
+    between them, so one body carries both.  Callers persist ``e``: it
+    feeds coarse centroids, assignment, encode, probes and the rerank
+    fetch (5 references — 10 source scans unpersisted, plans/audit.py).
+    A lazy result can't unpersist its own inputs, so the cache is left
+    to the session (ADVICE r6): DataFrame.persist() defaults to
+    MEMORY_AND_DISK_DESER and identical lineages dedupe in the
+    CacheManager, so long-lived multi-query sessions spill rather than
+    OOM."""
     from etl_builder_spark.llm.ivf import IVF_SEED_LO, IVF_SEED_HI
 
-    n_probe, shortlist_k, k_final = 4, 50, 10
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", _dbl().alias("v")).persist()
-    if cb is None:
-        cb = _pinned_codebook_from(e)
+    n_probe = 4
     cent = e.where(F.col("vec_id").between(IVF_SEED_LO, IVF_SEED_HI)).select(
         (F.col("vec_id") - IVF_SEED_LO).alias("cluster_id"), F.col("v").alias("cv")
     )
@@ -396,14 +415,8 @@ def _ivfpq_topk(spark: SparkSession, sf_dir: str, cb: DataFrame | None = None) -
         .agg(F.min(F.struct(F.col("negc"), F.col("cluster_id"))).alias("b"))
         .select("vec_id", F.col("b.cluster_id").alias("cluster_id"))
     )
-    codes = (
-        pq_encode(e, cb)
-        .select("vec_id", F.posexplode("codes").alias("subspace", "code"))
-        .join(asg, "vec_id")
-    )
-    probes = e.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("probe_id"), F.col("v").alias("pv")
-    )
+    codes = _subspace_codes(e, cb).join(asg, "vec_id")
+    probes = probe_vectors(e, 5)
     # probe's n_probe nearest lists (16×5 rows — a trivial top-k)
     wp = Window.partitionBy("probe_id").orderBy(
         F.expr(f"ROUND({cosine('pv', 'cv')}, 6)").desc(), F.col("cluster_id")
@@ -436,24 +449,7 @@ def _ivfpq_topk(spark: SparkSession, sf_dir: str, cb: DataFrame | None = None) -
         .groupBy("probe_id", "vec_id")
         .agg(F.round(F.sum("pd2"), 6).cast("double").alias("adc_dist"))
     )
-    ws = Window.partitionBy("probe_id").orderBy(F.col("adc_dist").asc(), "vec_id")
-    short = scored.withColumn("r", F.row_number().over(ws)).where(F.col("r") <= shortlist_k)
-    # exact re-rank: raw vectors for the shortlist only
-    rerank = (
-        short.select("probe_id", "vec_id")
-        .join(e, "vec_id")
-        .join(F.broadcast(probes), "probe_id")
-    )
-    wk = Window.partitionBy("probe_id").orderBy(F.col("exact_dist").asc(), "vec_id")
-    return (
-        rerank.select(
-            "probe_id",
-            "vec_id",
-            F.expr(f"ROUND({sq_dist('pv', 'v')}, 6)").alias("exact_dist"),
-        )
-        .withColumn("rank", F.row_number().over(wk))
-        .where(F.col("rank") <= k_final)
-    )
+    return _exact_rerank(scored, e, probes)
 
 
 # ---------------------------------------------------------------------------
@@ -583,11 +579,7 @@ def embed_pq_codes_exact(spark, sf_dir):
     the same ``pq_encode`` call (broadcast codebook, de-windowed
     argmin, DECIMAL recon-error sum), hash-checkable end to end."""
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", _dbl().alias("v")).persist()
-    return pq_encode(e, _pinned_codebook_from(e)).select(
-        "vec_id",
-        F.array_join(F.transform("codes", lambda x: x.cast("string")), ",").alias("codes_csv"),
-        "recon_err",
-    )
+    return _codes_csv(pq_encode(e, _pinned_codebook_from(e)))
 
 
 @register(
@@ -609,16 +601,7 @@ def sim_topk_pq_adc_exact(spark, sf_dir):
     """``sim_topk_pq_adc`` with the codebook pinned — same
     ``_adc_scored`` compressed-domain scoring, exact oracle."""
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", _dbl().alias("v")).persist()
-    cb = _pinned_codebook_from(e)
-    codes = pq_encode(e, cb).select(
-        "vec_id", F.posexplode("codes").alias("subspace", "code")
-    )
-    probes = e.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("probe_id"), F.col("v").alias("pv")
-    )
-    scored = _adc_scored(codes, cb, probes)
-    wk = Window.partitionBy("probe_id").orderBy(F.col("adc_dist").asc(), "vec_id")
-    return scored.withColumn("rank", F.row_number().over(wk)).where(F.col("rank") <= 10)
+    return _adc_top10(e, _pinned_codebook_from(e))
 
 
 @register(
@@ -635,28 +618,7 @@ def sim_topk_pq_rerank_exact(spark, sf_dir):
     """``sim_topk_pq_rerank`` with the codebook pinned — ADC top-50
     shortlist, exact-distance re-rank to top-10, hash-checkable."""
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", _dbl().alias("v")).persist()
-    cb = _pinned_codebook_from(e)
-    codes = pq_encode(e, cb).select(
-        "vec_id", F.posexplode("codes").alias("subspace", "code")
-    )
-    probes = e.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("probe_id"), F.col("v").alias("pv")
-    )
-    scored = _adc_scored(codes, cb, probes)
-    ws = Window.partitionBy("probe_id").orderBy(F.col("adc_dist").asc(), "vec_id")
-    shortlist = scored.withColumn("r", F.row_number().over(ws)).where(F.col("r") <= 50)
-    rerank = (
-        shortlist.select("probe_id", "vec_id")
-        .join(e, "vec_id")
-        .join(F.broadcast(probes), "probe_id")
-    )
-    exact_d2 = F.expr(sq_dist("pv", "v"))
-    wk = Window.partitionBy("probe_id").orderBy(F.col("exact_dist").asc(), "vec_id")
-    return (
-        rerank.select("probe_id", "vec_id", F.round(exact_d2, 6).alias("exact_dist"))
-        .withColumn("rank", F.row_number().over(wk))
-        .where(F.col("rank") <= 10)
-    )
+    return _adc_rerank(e, _pinned_codebook_from(e))
 
 
 @register(
@@ -709,7 +671,8 @@ def sim_knn_ivfpq_exact(spark, sf_dir):
     coarse pruning to 4/16 lists, compressed-domain ADC over probed
     lists only, top-50 exact re-rank — now hash-checkable end to end,
     clearing the last evidence-less component family."""
-    return _ivfpq_topk(spark, sf_dir)
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", _dbl().alias("v")).persist()
+    return _ivfpq_topk(e, _pinned_codebook_from(e))
 
 
 @register(
@@ -773,20 +736,8 @@ def ml_ndcg_pq_adc(spark, sf_dir):
     run on a small probe panel to monitor a production index's
     recall/NDCG drift — |probes| · |corpus|, never corpus²."""
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", _dbl().alias("v")).persist()
-    cb = _pinned_codebook_from(e)
-    codes = pq_encode(e, cb).select(
-        "vec_id", F.posexplode("codes").alias("subspace", "code")
-    )
-    probes = e.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("probe_id"), F.col("v").alias("pv")
-    )
-    wk = Window.partitionBy("probe_id").orderBy(F.col("adc_dist").asc(), "vec_id")
-    adc10 = (
-        _adc_scored(codes, cb, probes)
-        .withColumn("rank", F.row_number().over(wk))
-        .where(F.col("rank") <= 10)
-        .select("probe_id", "vec_id", "rank")
-    )
+    adc10 = _adc_top10(e, _pinned_codebook_from(e)).select("probe_id", "vec_id", "rank")
+    probes = probe_vectors(e, 5)
     we = Window.partitionBy("probe_id").orderBy(
         F.expr(f"ROUND({cosine('pv', 'v')}, 6)").desc(), "vec_id"
     )

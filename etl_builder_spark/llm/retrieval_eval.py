@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from etl_builder_spark.llm.similarity import cosine
+from etl_builder_spark.llm.similarity import cosine, probe_vectors
 from etl_builder_spark.registry import register
 from etl_builder_spark.session import load_table
 
@@ -90,9 +90,7 @@ def embed_matryoshka_recall(spark, sf_dir):
     scan computing both similarities per pair; recall@10 is the exact
     overlap of two deterministic rank-10 sets divided by 10."""
     vecs = _vecs(spark, sf_dir).drop("label")
-    probes = vecs.where(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("probe_id"), F.col("v").alias("pv")
-    )
+    probes = probe_vectors(vecs, 20)
     sims = (
         F.broadcast(probes)
         .join(vecs, F.col("vec_id") != F.col("probe_id"))
@@ -331,9 +329,7 @@ def sim_maxsim_multivector(spark, sf_dir):
     the segment slices become an array-of-arrays column; the plan does
     not change)."""
     vecs = _vecs(spark, sf_dir).drop("label")
-    probes = vecs.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("probe_id"), F.col("v").alias("pv")
-    )
+    probes = probe_vectors(vecs, 10)
 
     def seg(c: str, i: int) -> str:
         return f"slice({c}, {16 * i + 1}, 16)"

@@ -63,6 +63,14 @@ def _dbl(col: str = "embedding") -> Column:
     return F.transform(F.col(col), lambda x: x.cast("double"))
 
 
+def probe_vectors(vecs: DataFrame, n: int) -> DataFrame:
+    """(probe_id, pv): the vectors of a (vec_id, v) frame with
+    vec_id < ``n`` — the probe side of every search key."""
+    return vecs.where(F.col("vec_id") < n).select(
+        F.col("vec_id").alias("probe_id"), F.col("v").alias("pv")
+    )
+
+
 @register(
     "sim_topk_cosine_sql",
     oracle="""
@@ -255,9 +263,7 @@ def sim_rrf_fusion(spark, sf_dir):
     ranker would come from its index (IVF / LSH keys here) and this
     operator fuses their candidate lists — the shape is identical."""
     vecs = load_table(spark, sf_dir, "embeddings").select("vec_id", _dbl().alias("v"))
-    probes = vecs.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("probe_id"), F.col("v").alias("pv")
-    )
+    probes = probe_vectors(vecs, 5)
     j = vecs.join(F.broadcast(probes), F.col("vec_id") != F.col("probe_id"))
     sims = j.select(
         "probe_id",

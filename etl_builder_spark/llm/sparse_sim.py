@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_builder_spark.folding import fold_lower
+from etl_builder_spark.llm.text import token_trigrams
 from etl_builder_spark.registry import register
 from etl_builder_spark.session import load_table
 
@@ -50,24 +51,7 @@ def shingle_tf(d):
     norms, both dot-product sides).  Shared by the registered operator
     and scale_stress's ``sparse_inverted`` family so the measured
     scaling curve exercises the exact shipped code path."""
-    # two-stage form (r15, guide §1.2 step 2): materialize the token
-    # array as a COLUMN first, then shingle off the column.  The
-    # single-expression form inlined filter(split(lower(text))) into
-    # every element_at inside the transform lambda — Catalyst does not
-    # hoist it, so the split re-ran once per trigram per element_at
-    # (O(n_tokens) splits/doc, ×3); measured 5.67 s → 0.56 s for this
-    # pass at sf0.1 on 8 cores, bit-identical output.
-    t = F.filter(F.split(fold_lower("text"), " "), lambda x: x != "")
-    base = d.select("doc_id", t.alias("toks")).where(F.size("toks") >= 3)
-    tri = F.transform(
-        F.sequence(F.lit(1), F.size("toks") - 2),
-        lambda i: F.concat_ws(
-            " ",
-            F.element_at(F.col("toks"), i),
-            F.element_at(F.col("toks"), i + 1),
-            F.element_at(F.col("toks"), i + 2),
-        ),
-    )
+    base, tri = token_trigrams(d, fold_lower("text"))
     return (
         base.select("doc_id", F.explode(tri).alias("token"))
         .groupBy("doc_id", "token")

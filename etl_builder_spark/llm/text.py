@@ -23,6 +23,34 @@ def tokens(df, text_col: str = "text"):
     ).where(F.col("token") != "")
 
 
+def token_trigrams(df, text):
+    """Word-trigram shingling of ``df``'s ``text`` column expression:
+    returns ``(toks, tri)`` — ``toks`` is (doc_id, toks) with the
+    non-empty space-split tokens of each doc that has at least 3, and
+    ``tri`` is the array<string> column of that doc's trigrams, built
+    off ``toks``."""
+    # two-stage form (r15, guide §1.2 step 2): materialize the token
+    # array as a COLUMN first, then shingle off the column.  The
+    # single-expression form inlined filter(split(lower(text))) into
+    # every element_at inside the transform lambda — Catalyst does not
+    # hoist it, so the split re-ran once per trigram per element_at
+    # (O(n_tokens) splits/doc, ×3); measured 5.67 s → 0.56 s for the
+    # sparse_sim.shingle_tf pass at sf0.1 on 8 cores, bit-identical
+    # output.
+    t = F.filter(F.split(text, " "), lambda x: x != "")
+    toks = df.select("doc_id", t.alias("toks")).where(F.size("toks") >= 3)
+    tri = F.transform(
+        F.sequence(F.lit(1), F.size("toks") - 2),
+        lambda i: F.concat_ws(
+            " ",
+            F.element_at(F.col("toks"), i),
+            F.element_at(F.col("toks"), i + 1),
+            F.element_at(F.col("toks"), i + 2),
+        ),
+    )
+    return toks, tri
+
+
 @register(
     "text_tokenize_counts",
     oracle="""
@@ -220,20 +248,7 @@ def text_ngrams_trigram(spark, sf_dir):
     posexplode — the explode is the only row amplification (×n_tokens),
     no shuffle until whatever aggregates downstream."""
     d = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 100)
-    # two-stage form (r15, guide §1.2 step 2): token array as a column
-    # first — the inlined form re-split the text once per trigram per
-    # element_at (see llm/sparse_sim.shingle_tf for the measurement)
-    t = F.filter(F.split(fold_lower(F.col("text")), " "), lambda x: x != "")
-    base = d.select("doc_id", t.alias("toks")).where(F.size("toks") >= 3)
-    tri = F.transform(
-        F.sequence(F.lit(1), F.size("toks") - 2),
-        lambda i: F.concat_ws(
-            " ",
-            F.element_at(F.col("toks"), i),
-            F.element_at(F.col("toks"), i + 1),
-            F.element_at(F.col("toks"), i + 2),
-        ),
-    )
+    base, tri = token_trigrams(d, fold_lower(F.col("text")))
     return (
         base.select("doc_id", F.posexplode(tri).alias("pos0", "trigram"))
         .select("doc_id", (F.col("pos0") + 1).cast("int").alias("pos"), "trigram")
@@ -1054,20 +1069,7 @@ def text_ngram_novelty(spark, sf_dir):
     all, so no DF ceiling is even needed — cost is linear in corpus
     shingle volume."""
     d = load_table(spark, sf_dir, "documents")
-    # two-stage form (r15, guide §1.2 step 2): token array as a column
-    # first — the inlined form re-split the text once per trigram per
-    # element_at (see llm/sparse_sim.shingle_tf for the measurement)
-    t = F.filter(F.split(fold_lower("text"), " "), lambda x: x != "")
-    base = d.select("doc_id", t.alias("toks")).where(F.size("toks") >= 3)
-    tri = F.transform(
-        F.sequence(F.lit(1), F.size("toks") - 2),
-        lambda i: F.concat_ws(
-            " ",
-            F.element_at(F.col("toks"), i),
-            F.element_at(F.col("toks"), i + 1),
-            F.element_at(F.col("toks"), i + 2),
-        ),
-    )
+    base, tri = token_trigrams(d, fold_lower("text"))
     tris = (
         base.select("doc_id", F.explode(tri).alias("token"))
         .distinct()

@@ -264,7 +264,11 @@ def pipeline_dedup_cascade(spark, sf_dir):
     posture: stages run cheapest-first so each pass shrinks the input
     of the costlier next pass; every stage is the already-bounded
     primitive (hash shuffle / band buckets / centroid blocks)."""
-    from etl_builder_spark.llm.dedup import _band_collisions, _minhash_sig_bands
+    from etl_builder_spark.llm.dedup import (
+        _band_collisions,
+        _minhash_sig_bands,
+        _signature_agreement,
+    )
     from etl_builder_spark.llm.embed_dedup import (
         EMBED_DUP_TAU,
         PERTURB_DELTA,
@@ -319,12 +323,8 @@ def pipeline_dedup_cascade(spark, sf_dir):
         .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .distinct()
     )
-    sa, sb = sig.alias("sa"), sig.alias("sb")
     drops2 = (
-        cand2.join(sa, F.col("sa.doc_id") == F.col("id_a"))
-        .join(sb, (F.col("sb.doc_id") == F.col("id_b")) & (F.col("sb.i") == F.col("sa.i")))
-        .groupBy("id_a", "id_b")
-        .agg(F.sum(F.when(F.col("sa.minh") == F.col("sb.minh"), 1).otherwise(0)).alias("n_eq"))
+        _signature_agreement(cand2, sig, ("id_a", "id_b"), "n_eq")
         .where(F.col("n_eq") >= CASCADE_MIN_EQ)
         .select(F.col("id_b").alias("doc_id"))
         .distinct()

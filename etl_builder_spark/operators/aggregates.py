@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from etl_builder_spark.policy import money, money_avg, money_sum
 from etl_builder_spark.folding import nan_to_null
-from etl_builder_spark.registry import register
+from etl_builder_spark.registry import REGISTRY, register
 from etl_builder_spark.session import load_table
 
 
@@ -837,14 +837,25 @@ def agg_gini_revenue(spark, sf_dir):
     pinned by key."""
     from pyspark.sql import Window
 
+    w = Window.orderBy("x", "o_custkey")
+    ranked = _customer_revenue(spark, sf_dir).select("x", F.row_number().over(w).alias("i"))
+    return _gini(ranked)
+
+
+def _customer_revenue(spark, sf_dir):
+    """(o_custkey, x): exact DECIMAL revenue per customer, customers
+    with unknown revenue dropped — the frame both Gini keys rank."""
     o = load_table(spark, sf_dir, "orders")
-    rev = (
+    return (
         o.groupBy("o_custkey")
         .agg(F.sum(money("o_totalprice")).alias("x"))
         .where(F.col("x").isNotNull())  # complete-case (r12)
     )
-    w = Window.orderBy("x", "o_custkey")
-    ranked = rev.select("x", F.row_number().over(w).alias("i"))
+
+
+def _gini(ranked):
+    """Closed-form Gini G = 2·Σ(i·xᵢ)/(n·Σx) − (n+1)/n over (x, i)
+    rows, i the ascending rank of x."""
     n = F.count(F.lit(1))
     sx = F.sum("x").cast("double")
     six = F.sum(F.col("i") * F.col("x")).cast("double")
@@ -1388,25 +1399,7 @@ def agg_abc_classification(spark, sf_dir):
 
 @register(
     "agg_gini_revenue_banded",
-    oracle="""
-        WITH rev AS (
-            SELECT o_custkey, SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS x
-            FROM orders GROUP BY o_custkey
-        ),
-        ranked AS (
-            -- complete-case (r12): a customer whose revenue is unknown
-            -- (all prices NULL) is not ranked — the engines otherwise
-            -- disagree on where NULL sorts (Spark first, DuckDB last)
-            SELECT x, ROW_NUMBER() OVER (ORDER BY x, o_custkey) AS i
-            FROM rev WHERE x IS NOT NULL
-        )
-        SELECT COUNT(*) AS n_customers,
-               CAST(SUM(x) AS DOUBLE) AS total_revenue,
-               ROUND(2.0 * CAST(SUM(i * x) AS DOUBLE)
-                     / (COUNT(*) * CAST(SUM(x) AS DOUBLE))
-                     - (COUNT(*) + 1.0) / COUNT(*), 6) AS gini
-        FROM ranked
-    """,
+    oracle=REGISTRY["agg_gini_revenue"].oracle,
     tags=("D-gini", "SCALE-twin"),
 )
 def agg_gini_revenue_banded(spark, sf_dir):
@@ -1418,27 +1411,13 @@ def agg_gini_revenue_banded(spark, sf_dir):
     KS/MW banded, cumulative-share banded).  The rank-weighted sum
     Σ(i·xᵢ) multiplies exact bigint ranks by exact decimals, so the
     closed-form Gini is bit-identical to the parent's."""
-    from pyspark.sql import Window  # noqa: F401  (parent parity; unused)
-
     from etl_builder_spark.operators.stats import banded_running
 
-    o = load_table(spark, sf_dir, "orders")
-    rev = (
-        o.groupBy("o_custkey")
-        .agg(F.sum(money("o_totalprice")).alias("x"))
-        .where(F.col("x").isNotNull())  # complete-case (r12)
-    )
+    rev = _customer_revenue(spark, sf_dir)
     ranked = banded_running(rev, "x", "o_custkey", descending=False).select(
         "x", F.col("rnk").alias("i")
     )
-    n = F.count(F.lit(1))
-    sx = F.sum("x").cast("double")
-    six = F.sum(F.col("i") * F.col("x")).cast("double")
-    return ranked.agg(
-        n.alias("n_customers"),
-        sx.alias("total_revenue"),
-        F.round(F.lit(2.0) * six / (n * sx) - (n + F.lit(1.0)) / n, 6).alias("gini"),
-    )
+    return _gini(ranked)
 
 
 @register(

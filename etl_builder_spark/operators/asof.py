@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from etl_builder_spark.registry import register
+from etl_builder_spark.registry import REGISTRY, register
 from etl_builder_spark.session import load_table
 
 
@@ -44,8 +44,15 @@ def join_interval(spark, sf_dir):
     e = load_table(spark, sf_dir, "events")
     s = e.where(F.col("event_type") == "signup").alias("s")
     p = e.where(F.col("event_type") == "purchase").alias("p")
+    return _signup_purchase_delays(s, p, F.col("s.user_id") == F.col("p.user_id"))
+
+
+def _signup_purchase_delays(s, p, key_cond):
+    """Join signups ``s`` to purchases ``p`` on ``key_cond`` plus the
+    exact range residual (purchase at most 30 min after the signup),
+    projecting (user_id, signup_event_id, purchase_event_id, delay_us)."""
     cond = (
-        (F.col("s.user_id") == F.col("p.user_id"))
+        key_cond
         & (F.col("p.ts") >= F.col("s.ts"))
         & (F.col("p.ts") <= F.col("s.ts") + F.expr("INTERVAL 30 MINUTES"))
     )
@@ -59,19 +66,7 @@ def join_interval(spark, sf_dir):
 
 @register(
     "join_interval_bucketed",
-    oracle="""
-        SELECT s.user_id,
-               s.event_id AS signup_event_id,
-               p.event_id AS purchase_event_id,
-               epoch_us(p.ts) - epoch_us(s.ts) AS delay_us
-        FROM events s
-        JOIN events p
-          ON s.user_id = p.user_id
-         AND s.event_type = 'signup'
-         AND p.event_type = 'purchase'
-         AND p.ts >= s.ts
-         AND p.ts <= s.ts + INTERVAL 30 MINUTE
-    """,
+    oracle=REGISTRY["join_interval"].oracle,
     tags=("C9", "scale-path"),
 )
 def join_interval_bucketed(spark, sf_dir):
@@ -98,17 +93,10 @@ def join_interval_bucketed(spark, sf_dir):
         .alias("s")
     )
     p = e.where(F.col("event_type") == "purchase").withColumn("__b", b(F.col("ts"))).alias("p")
-    cond = (
-        (F.col("s.user_id") == F.col("p.user_id"))
-        & (F.col("s.__b") == F.col("p.__b"))
-        & (F.col("p.ts") >= F.col("s.ts"))
-        & (F.col("p.ts") <= F.col("s.ts") + F.expr("INTERVAL 30 MINUTES"))
-    )
-    return s.join(p, cond).select(
-        F.col("s.user_id").alias("user_id"),
-        F.col("s.event_id").alias("signup_event_id"),
-        F.col("p.event_id").alias("purchase_event_id"),
-        (F.unix_micros(F.col("p.ts")) - F.unix_micros(F.col("s.ts"))).alias("delay_us"),
+    return _signup_purchase_delays(
+        s,
+        p,
+        (F.col("s.user_id") == F.col("p.user_id")) & (F.col("s.__b") == F.col("p.__b")),
     )
 
 

@@ -234,13 +234,18 @@ def stats_ks_two_sample(spark, sf_dir):
     from pyspark.sql import Window
 
     per_val = _per_val_counts(spark, sf_dir).persist()
-    tot = per_val.agg(
-        F.sum("na").cast("bigint").alias("ta"), F.sum("nb").cast("bigint").alias("tb")
-    )
     w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     cum = per_val.select(
         "v", F.sum("na").over(w).alias("ca"), F.sum("nb").over(w).alias("cb")
     )
+    return _ks_statistic(per_val, cum)
+
+
+def _ks_statistic(per_val, cum):
+    """(n_a, n_b, d_stat, d_location) from the per-value counts and
+    their inclusive running sums (v, ca, cb): integer cross-product
+    ECDF differences, supremum + min-v location, one final division."""
+    tot = _sample_totals(per_val)
     diffs = (
         cum.crossJoin(F.broadcast(tot))
         .select(
@@ -592,18 +597,29 @@ def stats_mannwhitney_u(spark, sf_dir):
     from pyspark.sql import Window
 
     per_val = _per_val_counts(spark, sf_dir).persist()
-    tot = per_val.agg(
-        F.sum("na").cast("bigint").alias("ta"), F.sum("nb").cast("bigint").alias("tb")
-    )
     w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     cum = per_val.select(
         "na", "nb", (F.sum("nb").over(w) - F.col("nb")).alias("cbb")
     )
+    return _mwu_statistic(per_val, cum.agg(_u2a_sum(), _ties_sum()))
+
+
+def _u2a_sum():
+    """2·U_a = Σ_v na(v)·(2·cbb(v) + nb(v)) over (na, nb, cbb) rows."""
+    return F.sum(F.col("na") * (2 * F.col("cbb") + F.col("nb"))).cast("bigint").alias("u2a")
+
+
+def _ties_sum():
+    """Σ(t³ − t) tie-correction term, t = na + nb per distinct value."""
     t = F.col("na") + F.col("nb")
-    s = cum.agg(
-        F.sum(F.col("na") * (2 * F.col("cbb") + F.col("nb"))).cast("bigint").alias("u2a"),
-        F.sum(t * t * t - t).cast("bigint").alias("s3"),
-    )
+    return F.sum(t * t * t - t).cast("bigint").alias("s3")
+
+
+def _mwu_statistic(per_val, s):
+    """(n_a, n_b, u_a, u_b, z_score) from the per-value counts and the
+    1-row sums (u2a, s3): U and the tie-corrected normal z, one float
+    expression written identically in both engines."""
+    tot = _sample_totals(per_val)
     ta, tb = F.col("ta"), F.col("tb")
     ua = F.col("u2a").cast("double") / F.lit(2)
     mu = (ta * tb).cast("double") / F.lit(2)
@@ -724,6 +740,13 @@ def _per_val_counts(spark, sf_dir):
     )
 
 
+def _sample_totals(per_val):
+    """1-row (ta, tb): the two sample sizes."""
+    return per_val.agg(
+        F.sum("na").cast("bigint").alias("ta"), F.sum("nb").cast("bigint").alias("tb")
+    )
+
+
 def _banded_cumulative(per_val, n_bands: int = PREFIX_BANDS):
     """Inclusive running sums (ca, cb) of (na, nb) in ascending-``v``
     order WITHOUT any unpartitioned Window — the range-partitioned
@@ -798,40 +821,11 @@ def stats_ks_two_sample_banded(spark, sf_dir):
     instead of one unpartitioned Window — the last documented-but-
     unproven scale swap from VERDICT r5/r6, now under the exact hash
     with the parent's own oracle.  Everything downstream of (ca, cb)
-    is the parent verbatim: integer cross-product ECDF differences,
-    supremum + min-v location, one final IEEE division."""
+    is the parent verbatim (``_ks_statistic``): integer cross-product
+    ECDF differences, supremum + min-v location, one final IEEE
+    division."""
     per_val = _per_val_counts(spark, sf_dir).persist()
-    tot = per_val.agg(
-        F.sum("na").cast("bigint").alias("ta"), F.sum("nb").cast("bigint").alias("tb")
-    )
-    cum = _banded_cumulative(per_val)
-    diffs = (
-        cum.crossJoin(F.broadcast(tot))
-        .select(
-            "v",
-            F.abs(F.col("ca") * F.col("tb") - F.col("cb") * F.col("ta")).alias("dnum"),
-            "ta",
-            "tb",
-        )
-        .persist()
-    )
-    m = diffs.agg(F.max("dnum").alias("md"))
-    loc = diffs.join(F.broadcast(m), F.col("dnum") == F.col("md")).agg(
-        F.min("v").alias("d_location")
-    )
-    return (
-        tot.crossJoin(F.broadcast(m))
-        .crossJoin(F.broadcast(loc))
-        .select(
-            F.col("ta").alias("n_a"),
-            F.col("tb").alias("n_b"),
-            # try_divide (round-12 degenerate sweep): absent sample → 0
-            F.try_divide(F.col("md").cast("double"), F.col("ta") * F.col("tb")).alias(
-                "d_stat"
-            ),
-            "d_location",
-        )
-    )
+    return _ks_statistic(per_val, _banded_cumulative(per_val))
 
 
 @register(
@@ -847,36 +841,11 @@ def stats_mannwhitney_u_banded(spark, sf_dir):
     tie term never needed a window; it stays a plain reduction over the
     distinct-value frame."""
     per_val = _per_val_counts(spark, sf_dir).persist()
-    tot = per_val.agg(
-        F.sum("na").cast("bigint").alias("ta"), F.sum("nb").cast("bigint").alias("tb")
-    )
     cum = _banded_cumulative(per_val).select(
         "na", "nb", (F.col("cb") - F.col("nb")).alias("cbb")
     )
-    t = F.col("na") + F.col("nb")
-    s_u = cum.agg(
-        F.sum(F.col("na") * (2 * F.col("cbb") + F.col("nb"))).cast("bigint").alias("u2a")
-    )
-    s_t = per_val.agg(F.sum(t * t * t - t).cast("bigint").alias("s3"))
-    s = s_u.crossJoin(F.broadcast(s_t))
-    ta, tb = F.col("ta"), F.col("tb")
-    ua = F.col("u2a").cast("double") / F.lit(2)
-    mu = (ta * tb).cast("double") / F.lit(2)
-    var = (ta * tb).cast("double") / F.lit(12) * (
-        (ta + tb + F.lit(1)).cast("double")
-        - F.try_divide(
-            F.col("s3").cast("double"),
-            (ta + tb).cast("double") * (ta + tb - F.lit(1)).cast("double"),
-        )
-    )
-    return tot.crossJoin(F.broadcast(s)).select(
-        ta.alias("n_a"),
-        tb.alias("n_b"),
-        ua.alias("u_a"),
-        ((ta * tb).cast("double") - ua).alias("u_b"),
-        # try_divide (round-12 degenerate sweep): absent sample → var 0
-        F.round(F.try_divide(ua - mu, F.sqrt(var)), 6).alias("z_score"),
-    )
+    s = cum.agg(_u2a_sum()).crossJoin(F.broadcast(per_val.agg(_ties_sum())))
+    return _mwu_statistic(per_val, s)
 
 
 def banded_running(df, value_col: str, tiebreak_col: str, descending: bool = False,

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_builder_spark.policy import money
-from etl_builder_spark.registry import register
+from etl_builder_spark.registry import REGISTRY, register
 from etl_builder_spark.session import load_table
 
 
@@ -337,6 +337,12 @@ def sessionize_events_gap(spark, sf_dir):
             .alias("session_seq"),
         )
     )
+    return _session_rollup(sess)
+
+
+def _session_rollup(sess):
+    """Per-(user_id, session_seq) session rows: start, end, event count
+    and exact value — the rollup both sessionize keys end with."""
     return sess.groupBy("user_id", "session_seq").agg(
         F.min("ts").alias("session_start"),
         F.max("ts").alias("session_end"),
@@ -347,32 +353,7 @@ def sessionize_events_gap(spark, sf_dir):
 
 @register(
     "sessionize_events_gap_rangesplit",
-    oracle="""
-        WITH ordered AS (
-            SELECT user_id, event_id, ts, value,
-                   CASE WHEN LAG(epoch_us(ts)) OVER w IS NULL
-                             OR epoch_us(ts) - LAG(epoch_us(ts)) OVER w > 1800000000
-                        THEN 1 ELSE 0 END AS is_start
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        ),
-        sess AS (
-            SELECT user_id, ts, value,
-                   SUM(is_start) OVER (
-                       PARTITION BY user_id ORDER BY ts, event_id
-                       ROWS UNBOUNDED PRECEDING
-                   ) AS session_seq
-            FROM ordered
-        )
-        SELECT user_id,
-               CAST(session_seq AS INT) AS session_seq,
-               MIN(ts) AS session_start,
-               MAX(ts) AS session_end,
-               COUNT(*) AS n_events,
-               CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS session_value
-        FROM sess
-        GROUP BY user_id, session_seq
-    """,
+    oracle=REGISTRY["sessionize_events_gap"].oracle,
     tags=("TS-sessionize", "SCALE-twin"),
 )
 def sessionize_events_gap_rangesplit(spark, sf_dir):
@@ -508,12 +489,7 @@ def sessionize_events_gap_rangesplit(spark, sf_dir):
         "value",
         (F.col("band_offset") + F.col("local_seq")).cast("int").alias("session_seq"),
     )
-    return sess.groupBy("user_id", "session_seq").agg(
-        F.min("ts").alias("session_start"),
-        F.max("ts").alias("session_end"),
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(money("value")).cast("double").alias("session_value"),
-    )
+    return _session_rollup(sess)
 
 
 @register(

@@ -12,7 +12,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from etl_builder_spark.policy import money
-from etl_builder_spark.registry import register
+from etl_builder_spark.registry import REGISTRY, register
 from etl_builder_spark.session import load_table
 
 
@@ -461,30 +461,7 @@ def win_running_reset(spark, sf_dir):
 
 @register(
     "win_cumulative_share_banded",
-    oracle="""
-        WITH rev AS (
-            SELECT o_custkey,
-                   SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS revenue
-            FROM orders
-            GROUP BY o_custkey
-        ),
-        ranked AS (
-            SELECT o_custkey, revenue,
-                   ROW_NUMBER() OVER w AS rnk,
-                   SUM(revenue) OVER (
-                       w ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                   ) AS running,
-                   SUM(revenue) OVER () AS total
-            FROM rev
-            WINDOW w AS (ORDER BY revenue DESC, o_custkey)
-        )
-        SELECT o_custkey,
-               CAST(revenue AS DOUBLE) AS revenue,
-               CAST(rnk AS INT) AS rnk,
-               ROUND(CAST(running AS DOUBLE) / CAST(total AS DOUBLE), 6) AS cum_share,
-               (CAST(running AS DOUBLE) / CAST(total AS DOUBLE) <= 0.8) AS in_top80
-        FROM ranked
-    """,
+    oracle=REGISTRY["win_cumulative_share"].oracle,
     tags=("E-pareto", "SCALE-twin"),
 )
 def win_cumulative_share_banded(spark, sf_dir):
@@ -526,15 +503,7 @@ RANGESPLIT_BAND_US = 3_600_000_000
 
 @register(
     "win_lead_lag_rangesplit",
-    oracle="""
-        SELECT event_id, user_id,
-               LAG(value)  OVER w AS prev_value,
-               LEAD(value) OVER w AS next_value,
-               FIRST_VALUE(event_type) OVER w AS first_type,
-               epoch_us(ts) - LAG(epoch_us(ts)) OVER w AS gap_us
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    """,
+    oracle=REGISTRY["win_lead_lag"].oracle,
     tags=("E3", "SCALE-twin"),
 )
 def win_lead_lag_rangesplit(spark, sf_dir):

@@ -70,6 +70,16 @@ class Pipeline:
             raise ValueError("pipeline has no source; call .scan() first")
         return self._df
 
+    def _resolve(self, other: "Pipeline | DataFrame | str") -> DataFrame:
+        """The frame behind a join/union/asof right side: a table name
+        is loaded from this pipeline's corpus, a Pipeline gives its
+        frame, a DataFrame is itself."""
+        if isinstance(other, str):
+            return load_table(self.spark, self.sf_dir, other)
+        if isinstance(other, Pipeline):
+            return other.frame()
+        return other
+
     # -- sources ----------------------------------------------------
     def scan(self, table: str) -> "Pipeline":
         return self._with(load_table(self.spark, self.sf_dir, table))
@@ -106,12 +116,7 @@ class Pipeline:
     ) -> "Pipeline":
         """Join against another pipeline, frame, or table name.
         ``on`` is a SQL condition or a comma-separated column list."""
-        if isinstance(other, str):
-            right = load_table(self.spark, self.sf_dir, other)
-        elif isinstance(other, Pipeline):
-            right = other.frame()
-        else:
-            right = other
+        right = self._resolve(other)
         if broadcast_right:
             right = F.broadcast(right)
         cond = [c.strip() for c in on.split(",")] if ("=" not in on and "(" not in on) else F.expr(on)
@@ -142,12 +147,7 @@ class Pipeline:
 
     # -- set ops ----------------------------------------------------
     def union_all(self, other: "Pipeline | DataFrame | str") -> "Pipeline":
-        if isinstance(other, str):
-            right = load_table(self.spark, self.sf_dir, other)
-        elif isinstance(other, Pipeline):
-            right = other.frame()
-        else:
-            right = other
+        right = self._resolve(other)
         return self._with(self.frame().unionByName(right))
 
     # -- cleaning / reshaping ---------------------------------------
@@ -214,12 +214,7 @@ class Pipeline:
 
         if direction != "backward":
             raise ValueError("pipeline asof supports direction='backward'")
-        if isinstance(other, str):
-            right = load_table(self.spark, self.sf_dir, other)
-        elif isinstance(other, Pipeline):
-            right = other.frame()
-        else:
-            right = other
+        right = self._resolve(other)
         return self._with(asof_join(self.frame(), right, key, right_cols=tuple(right_cols)))
 
     # -- sinks ------------------------------------------------------

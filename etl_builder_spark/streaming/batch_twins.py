@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_builder_spark.policy import money
-from etl_builder_spark.registry import register
+from etl_builder_spark.registry import REGISTRY, register
 from etl_builder_spark.session import load_table
 
 
@@ -31,9 +31,14 @@ from etl_builder_spark.session import load_table
     tags=("J1",),
 )
 def stream_tumbling_1h(spark, sf_dir):
-    e = load_table(spark, sf_dir, "events")
+    return _tumbling_1h(load_table(spark, sf_dir, "events"))
+
+
+def _tumbling_1h(events):
+    """1 h tumbling windows × event_type: count and exact value — the
+    aggregate the batch key and its live twin share."""
     return (
-        e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        events.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"), F.sum(money("value")).cast("double").alias("total_value"))
         .select(
             F.col("w.start").alias("ws"),
@@ -69,9 +74,14 @@ def stream_sliding_1h_15m(spark, sf_dir):
     """Sliding window (1h length, 15m slide): every event lands in
     exactly 4 windows; the oracle expands the slide lattice with
     timestamp arithmetic."""
-    e = load_table(spark, sf_dir, "events")
+    return _sliding_1h_15m(load_table(spark, sf_dir, "events"))
+
+
+def _sliding_1h_15m(events):
+    """1 h windows sliding by 15 min: count and exact value — the
+    aggregate the batch key and its live twin share."""
     return (
-        e.groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
+        events.groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
         .agg(F.count(F.lit(1)).alias("n"), F.sum(money("value")).cast("double").alias("total_value"))
         .select(F.col("w.start").alias("ws"), F.col("w.end").alias("we"), "n", "total_value")
     )
@@ -79,22 +89,7 @@ def stream_sliding_1h_15m(spark, sf_dir):
 
 @register(
     "stream_sliding_1h_15m_live",
-    oracle="""
-        WITH expanded AS (
-            SELECT date_trunc('hour', ts)
-                     + ((minute(ts) // 15) * 15) * INTERVAL 1 MINUTE
-                     - k * INTERVAL 15 MINUTE AS ws,
-                   value
-            FROM events
-            CROSS JOIN (VALUES (0), (1), (2), (3)) t(k)
-        )
-        SELECT ws,
-               ws + INTERVAL 1 HOUR AS we,
-               COUNT(*) AS n,
-               CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        FROM expanded
-        GROUP BY ws
-    """,
+    oracle=REGISTRY["stream_sliding_1h_15m"].oracle,
     tags=("J2", "live-stream"),
 )
 def stream_sliding_1h_15m_live(spark, sf_dir):
@@ -108,12 +103,7 @@ def stream_sliding_1h_15m_live(spark, sf_dir):
     from etl_builder_spark.streaming.runtime import run_to_memory, stream_events
 
     events = stream_events(spark, _staged_events_dir(sf_dir))
-    agg = (
-        events.groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n"), F.sum(money("value")).cast("double").alias("total_value"))
-        .select(F.col("w.start").alias("ws"), F.col("w.end").alias("we"), "n", "total_value")
-    )
-    return run_to_memory(agg, mode="complete")
+    return run_to_memory(_sliding_1h_15m(events), mode="complete")
 
 
 @register(
@@ -248,15 +238,7 @@ def stream_stateful_counters_live(spark, sf_dir):
 
 @register(
     "stream_tumbling_1h_live",
-    oracle="""
-        SELECT date_trunc('hour', ts) AS ws,
-               date_trunc('hour', ts) + INTERVAL 1 HOUR AS we,
-               event_type,
-               COUNT(*) AS n,
-               CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        FROM events
-        GROUP BY 1, 2, 3
-    """,
+    oracle=REGISTRY["stream_tumbling_1h"].oracle,
     tags=("J1", "live-stream"),
 )
 def stream_tumbling_1h_live(spark, sf_dir):
@@ -269,18 +251,7 @@ def stream_tumbling_1h_live(spark, sf_dir):
     from etl_builder_spark.streaming.runtime import run_to_memory, stream_events
 
     events = stream_events(spark, _staged_events_dir(sf_dir))
-    agg = (
-        events.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum(money("value")).cast("double").alias("total_value"))
-        .select(
-            F.col("w.start").alias("ws"),
-            F.col("w.end").alias("we"),
-            "event_type",
-            "n",
-            "total_value",
-        )
-    )
-    return run_to_memory(agg, mode="complete")
+    return run_to_memory(_tumbling_1h(events), mode="complete")
 
 
 def _staged_events_dir(sf_dir):

@@ -4,7 +4,7 @@
 Runs every declared query's PySpark implementation and its DuckDB
 oracle side-by-side and compares row count, column names, and values.
 
-Two value-comparison modes:
+Value comparison mode:
 
 * ``parity`` (default) — replicates the DRIVER's canonicalization
   exactly, as reverse-engineered from CORRECTNESS_r01.json tracebacks:
@@ -16,26 +16,19 @@ Two value-comparison modes:
   here, as it does in the driver.  Round-1 lesson: the legacy
   Python-value canon normalized exactly the differences the driver
   trips on, so six driver-red queries were locally green.
-* ``--legacy`` — the old Python-value canon (fetchall/collect), kept
-  as a secondary semantic check (catches value drift that string
-  formatting could mask).
 
 Usage:
     python selfcheck.py                       # sf0.01, parity mode
     python selfcheck.py --sf /root/testdata/sf0.001
     python selfcheck.py --only agg_pricing_summary,join_asof
-    python selfcheck.py --legacy
 """
 
 from __future__ import annotations
 
 import argparse
 import contextlib
-import math
 import sys
 import time
-from datetime import date, datetime
-from decimal import Decimal
 
 import duckdb
 import pandas as pd
@@ -44,7 +37,6 @@ from etl_builder_spark.registry import REGISTRY, _ensure_loaded
 from etl_builder_spark.session import TABLES, get_spark
 
 
-# ---------------------------------------------------------------- parity mode
 def pandas_canon(pdf: pd.DataFrame) -> pd.DataFrame:
     """The driver's canonicalization, replicated: sort columns by name,
     sort rows on raw (dtype-sensitive) values, then stringify."""
@@ -117,77 +109,10 @@ def check_query_parity(spark, con, name, spec, sf_dir) -> tuple[str, str, float]
     return f"{status_prefix}OK", f"{len(spdf)} rows", time.time() - t0
 
 
-# ---------------------------------------------------------------- legacy mode
-def canon(v) -> str:
-    """Canonicalize a cell value to a comparable string."""
-    if v is None:
-        return "∅"
-    if isinstance(v, bool):
-        return "T" if v else "F"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        if v == 0.0:
-            return "0.0"  # normalize -0.0
-        return repr(v)
-    if isinstance(v, Decimal):
-        return canon(float(v))
-    if isinstance(v, datetime):
-        return v.isoformat()
-    if isinstance(v, date):
-        return v.isoformat()
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(canon(x) for x in v) + "]"
-    if isinstance(v, bytes):
-        return v.hex()
-    return str(v)
-
-
-def rows_to_canonical(col_names, rows) -> list[tuple[str, ...]]:
-    order = sorted(range(len(col_names)), key=lambda i: col_names[i])
-    return sorted(tuple(canon(r[i]) for i in order) for r in rows)
-
-
-def check_query_legacy(spark, con, name, spec, sf_dir) -> tuple[str, str, float]:
-    t0 = time.time()
-    try:
-        sdf = spec.fn(spark, sf_dir)
-        scols = list(sdf.columns)
-        srows = sdf.collect()
-    except Exception as e:  # noqa: BLE001
-        return "SPARK-ERROR", f"{type(e).__name__}: {str(e)[:400]}", time.time() - t0
-    if spec.oracle is None:
-        return "ROWS-ONLY", f"{len(srows)} rows", time.time() - t0
-    try:
-        cur = con.execute(spec.oracle)
-        ocols = [d[0] for d in cur.description]
-        orows = cur.fetchall()
-    except Exception as e:  # noqa: BLE001
-        return "ORACLE-ERROR", f"{type(e).__name__}: {str(e)[:400]}", time.time() - t0
-    if sorted(scols) != sorted(ocols):
-        return "SCHEMA-MISMATCH", f"spark={sorted(scols)} oracle={sorted(ocols)}", time.time() - t0
-    if len(srows) != len(orows):
-        return "COUNT-MISMATCH", f"spark={len(srows)} oracle={len(orows)}", time.time() - t0
-    s_canon = rows_to_canonical(scols, srows)
-    o_canon = rows_to_canonical(ocols, orows)
-    if s_canon != o_canon:
-        diffs = [(s, o) for s, o in zip(s_canon, o_canon) if s != o]
-        example = diffs[0] if diffs else ("<set-level>", "<set-level>")
-        return (
-            "VALUE-MISMATCH",
-            f"{len(diffs)}/{len(srows)} rows differ; first: spark={example[0]} oracle={example[1]}",
-            time.time() - t0,
-        )
-    return "OK", f"{len(srows)} rows", time.time() - t0
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     ap.add_argument("--only", default=None)
-    ap.add_argument(
-        "--legacy", action="store_true", help="old Python-value canon instead of driver parity"
-    )
     ap.add_argument(
         "--json",
         default=None,
@@ -237,11 +162,10 @@ def main() -> int:
 
     con = _connect()
 
-    check = check_query_legacy if args.legacy else check_query_parity
     n_bad = 0
     results = {}
     for name, spec in specs.items():
-        status, detail, dt = check(spark, con, name, spec, args.sf)
+        status, detail, dt = check_query_parity(spark, con, name, spec, args.sf)
         if status in ("ORACLE-ERROR", "SPARK-ERROR"):
             # retry ONCE: a transient host-state failure (OOM under
             # contention, spill-disk exhaustion — on EITHER engine: the
@@ -262,7 +186,7 @@ def main() -> int:
                         fp = _os.path.join(spill, fn)
                         _os.remove(fp) if _os.path.isfile(fp) else _shutil.rmtree(fp)
             con = _connect()
-            status, detail, dt2 = check(spark, con, name, spec, args.sf)
+            status, detail, dt2 = check_query_parity(spark, con, name, spec, args.sf)
             dt += dt2
             if status in ("OK", "ROWS-ONLY", "DYNAMIC-SCHEMA-OK"):
                 detail += " (retried once)"
@@ -270,12 +194,11 @@ def main() -> int:
         n_bad += 0 if ok else 1
         results[name] = {"status": status, "detail": detail, "secs": round(dt, 2)}
         print(f"{'✓' if ok else '✗'} {name:32s} {status:16s} {dt:6.2f}s  {detail}", flush=True)
-    print(f"\n{len(specs) - n_bad}/{len(specs)} green [{'legacy' if args.legacy else 'parity'}]")
+    print(f"\n{len(specs) - n_bad}/{len(specs)} green")
     if args.json:
         import json as _json
 
         payload = {
-            "mode": "legacy" if args.legacy else "parity",
             "sf_dir": args.sf,
             "n_green": len(specs) - n_bad,
             "n_total": len(specs),

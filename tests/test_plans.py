@@ -13,6 +13,15 @@ from tests.conftest import SF_DIR
 _ensure_loaded()
 
 
+def _plannable_specs():
+    """Registry entries in key order, minus the live-stream keys: calling
+    one of those runs a streaming query, and its batch twin covers the
+    plan surface."""
+    return [
+        (name, spec) for name, spec in sorted(REGISTRY.items()) if "live-stream" not in spec.tags
+    ]
+
+
 def plan(spark, name: str) -> str:
     import contextlib
     import io
@@ -504,9 +513,7 @@ def test_registry_wide_plan_anti_patterns(spark):
 
     offenders = {}
     unpartitioned = set()
-    for name, spec in sorted(REGISTRY.items()):
-        if "live-stream" in spec.tags or name == "stream_foreachbatch_sink":
-            continue
+    for name, spec in _plannable_specs():
         df = spec.fn(spark, SF_DIR)
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
@@ -544,9 +551,7 @@ def test_registry_wide_canon_safe_schemas(spark):
     from pyspark.sql import types as T
 
     offenders = {}
-    for name, spec in sorted(REGISTRY.items()):
-        if "live-stream" in spec.tags or name == "stream_foreachbatch_sink":
-            continue
+    for name, spec in _plannable_specs():
         df = spec.fn(spark, SF_DIR)
         bad = [
             f.name
@@ -855,11 +860,7 @@ def test_plan_shape_fingerprints_cross_round(spark):
 
     drift = {}
     computed = {}
-    skipped = []
-    for name, spec in sorted(REGISTRY.items()):
-        if "live-stream" in spec.tags or name == "stream_foreachbatch_sink":
-            skipped.append(name)
-            continue
+    for name, spec in _plannable_specs():
         # the emitter's exact build-and-hash path (canonical cache state)
         _, h = canonical_plan_hashes(spark, spec.fn, fp_sf)
         computed[name] = h

@@ -99,6 +99,48 @@ def test_memory_replays_leave_no_catalog_views(spark, events_dir):
         assert out.agg(F.sum("n_events")).collect()[0][0] == 1000
 
 
+def test_live_keys_stay_bounded_over_passes(spark, monkeypatch, tmp_path):
+    """Soak: three passes of ``stream_tumbling_1h_live`` and
+    ``stream_foreachbatch_sink`` in one session.  After the first pass
+    has built its stages, a further pass must add nothing: the catalog
+    tables, the entries under the temp dir (two levels deep), the
+    streaming listener count and the active streams read the same after
+    pass 2 as after pass 3, and no stream is left running.  Executor
+    cached bytes are printed per pass (not asserted: the session is
+    shared with every other test's persisted frames)."""
+    import glob
+    import tempfile
+
+    from etl_builder_spark.streaming.batch_twins import (
+        stream_foreachbatch_sink,
+        stream_tumbling_1h_live,
+    )
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+
+    def readings():
+        entries = glob.glob(os.path.join(tmp_path, "*")) + glob.glob(
+            os.path.join(tmp_path, "*", "*")
+        )
+        return {
+            "tables": sorted(t.name for t in spark.catalog.listTables()),
+            "entries": sorted(os.path.relpath(e, tmp_path) for e in entries),
+            "listeners": len(spark.streams._jsqm.listListeners()),
+            "active": [q.name for q in spark.streams.active],
+        }
+
+    seen, cached_mb = [], []
+    for _ in range(3):
+        for key in (stream_tumbling_1h_live, stream_foreachbatch_sink):
+            assert key(spark, SF_DIR).count() > 0
+        seen.append(readings())
+        infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        cached_mb.append(round(sum(i.memSize() for i in infos) / 2**20, 2))
+    print(f"soak cached MB per pass: {cached_mb}")
+    assert seen[1] == seen[2]
+    assert seen[2]["active"] == []
+
+
 def test_dedup_within_watermark(spark, tmp_path):
     """J5: a replayed duplicate file is fully deduplicated by event_id."""
     dup_dir = tmp_path / "dup_events"
