@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_builder_spark.folding import fold_lower, fold_upper
-from etl_builder_spark.llm.text import token_trigrams
+from etl_builder_spark.llm.text import shared_token_pairs, token_trigrams
 from etl_builder_spark.registry import register
 from etl_builder_spark.session import load_table
 
@@ -165,10 +165,8 @@ def _ngram_jaccard(spark, sf_dir, df_ceiling: int = DF_CEILING):
     )
     sh = sh.join(F.broadcast(keep), "token").persist()
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = sh.alias("a")
-    b = sh.alias("b")
     inter = (
-        a.join(b, (F.col("a.token") == F.col("b.token")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        shared_token_pairs(sh)
         .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
@@ -254,26 +252,36 @@ MINHASH_PERMS: tuple[tuple[int, int], ...] = tuple(
 _POW31 = (1, 31, 961, 29791)
 
 
-def _minhash_sig_bands(everything):
-    """Shared MinHash signature pipeline over a (doc_id, text) frame:
-    3-word shingles → char-poly hash mod P → 16 permuted minima as 16
-    map-side-combined aggregates → (doc_id, i, minh) long form → 4×4
-    band keys.  Returns (sig, bands)."""
-    # HOF expressions as SQL text (r16, the similarity.dot rationale): the gram
-    # transform, char-code filter and rolling-hash fold cost ~7 lambda
-    # constructions of py4j round trips per build; the parsed strings
-    # yield the same Catalyst trees (CAST(0 AS BIGINT) is the long
-    # literal the Column form built).
+def _word_shingles(everything: DataFrame) -> DataFrame:
+    """Distinct 3-word shingles (doc_id, sh) of a (doc_id, text) frame,
+    split on single spaces: the set the MinHash signature hashes and
+    the exact-Jaccard audits intersect, so both sides tokenize alike."""
+    # SQL text, like the signature's hash fold below: one parse instead
+    # of a Column-API lambda's py4j round trips, the same Catalyst tree,
+    # and a lambda name that no JVM-wide counter moves.
     toks = everything.select("doc_id", F.split("text", " ").alias("toks"))
     grams = F.expr(
         "transform(sequence(0, size(toks) - 3),"
         " i -> array_join(slice(toks, i + 1, 3), ' '))"
     )
-    shingles = (
+    return (
         toks.where(F.size("toks") >= 3)
         .select("doc_id", F.explode(grams).alias("sh"))
         .distinct()
     )
+
+
+def _minhash_sig_bands(everything):
+    """Shared MinHash signature pipeline over a (doc_id, text) frame:
+    3-word shingles → char-poly hash mod P → 16 permuted minima as 16
+    map-side-combined aggregates → (doc_id, i, minh) long form → 4×4
+    band keys.  Returns (sig, bands)."""
+    shingles = _word_shingles(everything)
+    # HOF expressions as SQL text (the similarity.dot rationale): the
+    # char-code filter and rolling-hash fold cost lambda constructions
+    # of py4j round trips per build; the parsed string yields the same
+    # Catalyst tree (CAST(0 AS BIGINT) is the long literal the Column
+    # form built).
     h = F.expr(
         "aggregate(filter(transform(split(sh, ''), c -> CAST(ascii(c) AS BIGINT)),"
         f" x -> x > 0), CAST(0 AS BIGINT), (a, x) -> (a * 31 + x) % {_P})"
@@ -868,9 +876,8 @@ def dedup_text_containment(spark, sf_dir):
     )
     sh = sh.join(F.broadcast(keep), "token").persist()
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a, b = sh.alias("a"), sh.alias("b")
     inter = (
-        a.join(b, (F.col("a.token") == F.col("b.token")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        shared_token_pairs(sh)
         .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
@@ -1050,17 +1057,7 @@ def dedup_minhash_estimate_error(spark, sf_dir):
     planted = _trimmed_copy(d, 2)
     everything = d.unionByName(planted).persist()
     sig, bands = _minhash_sig_bands(everything)
-    toks = everything.select("doc_id", F.split("text", " ").alias("toks"))
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size("toks") - F.lit(3)),
-        lambda i: F.array_join(F.slice("toks", i + 1, 3), " "),
-    )
-    shingles = (
-        toks.where(F.size("toks") >= 3)
-        .select("doc_id", F.explode(grams).alias("sh"))
-        .distinct()
-        .persist()
-    )
+    shingles = _word_shingles(everything).persist()
     cand = (
         _band_collisions(bands)
         .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
@@ -1259,20 +1256,7 @@ def sketch_minhash_calibration(spark, sf_dir):
     planted = _trimmed_copy(d, 2)
     everything = d.unionByName(planted)
     sig, bands = _minhash_sig_bands(everything)
-    # exact-Jaccard side: the same shingling expressions the signature
-    # pipeline uses (kept textually identical so the two sides can
-    # never diverge on tokenization)
-    toks = everything.select("doc_id", F.split("text", " ").alias("toks"))
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size("toks") - F.lit(3)),
-        lambda i: F.array_join(F.slice("toks", i + 1, 3), " "),
-    )
-    shingles = (
-        toks.where(F.size("toks") >= 3)
-        .select("doc_id", F.explode(grams).alias("sh"))
-        .distinct()
-        .persist()
-    )
+    shingles = _word_shingles(everything).persist()
     sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).cast("bigint").alias("n_sh"))
     cand = (
         _band_collisions(bands)

@@ -34,7 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from etl_builder_spark.llm.similarity import _dbl, dot, norm
+from etl_builder_spark.llm.similarity import corpus_vectors, dot, norm
 from etl_builder_spark.registry import register
 from etl_builder_spark.session import load_table
 
@@ -175,16 +175,14 @@ def sign_lsh_candidates(
     """Sign-LSH banded candidate pairs (id_a < id_b, distinct) over
     ``all_vecs`` (vec_id, v double-array), hyperplanes taken from
     ``hyp_source`` ids HYP_LO..HYP_LO+n_bands*bits_per_band-1 — the
-    candidate stage of ``dedup_embedding_cosine``, factored out so the
-    scale-stress harness (scale_stress.py) measures the SAME code path
-    it ships.
+    candidate stage of ``dedup_embedding_cosine``.
 
     Scale law (measured, PERF.md "Measured scaling"): expected
     candidates ≈ n_bands · N² / 2^(bits_per_band+1) on a decorrelated
     corpus — the band width must grow with log₂(N) or banding
     saturates into all-pairs.  The fixture default (4×8) is sized for
-    the ~4k-vector fixture; the harness demonstrates the remedy by
-    re-running at 2×16 over the same 32-hyperplane pool.
+    the ~4k-vector fixture; 2×16 over the same 32-hyperplane pool is
+    the remedy at larger N (``adaptive_n`` below).
 
     ``adaptive_n`` (round 15): a 1-row DataFrame carrying the corpus
     size as column ``n`` — when given (requires the default 4×8
@@ -264,7 +262,7 @@ def dedup_embedding_cosine(spark, sf_dir):
     at every scale while the candidate count follows the log-N law
     instead of saturating (the ×100 fan's 4×8 candidates were ~1.25e9;
     2×16 keeps them ~linear in the corpus)."""
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", _dbl().alias("v"))
+    e = corpus_vectors(spark, sf_dir)
     all_vecs = e.unionByName(_planted(e))
     # corpus size via the dense-id span (2·(max+1)) — the same scalar
     # shape as the planted offset, one broadcast, no count pass
@@ -397,7 +395,7 @@ def dedup_semantic_centroids(spark, sf_dir):
     unrolled dot was also measured and REJECTED: 5.7× slower than the
     zip_with/aggregate fold (giant expression trees fall out of
     efficient whole-stage codegen; the interpreted HOF loop wins)."""
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", _dbl().alias("v"))
+    e = corpus_vectors(spark, sf_dir)
     all_vecs = e.unionByName(_planted(e))
     cent = e.where(
         F.col("vec_id").between(SEM_CENT_LO, SEM_CENT_LO + SEM_N_CENT - 1)

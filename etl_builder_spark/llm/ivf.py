@@ -21,9 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from etl_builder_spark.llm.similarity import _dbl, dot, norm, probe_vectors, sq_dist
+from etl_builder_spark.llm.similarity import corpus_vectors, dot, norm, probe_vectors, sq_dist
 from etl_builder_spark.registry import register
-from etl_builder_spark.session import load_table
 
 
 def train_quantizer(vectors: DataFrame, vec_col: str = "v", k: int = 16, seed: int = 42) -> DataFrame:
@@ -209,7 +208,7 @@ def sim_knn_ivf_exact(spark, sf_dir):
     argmax assignment, probes touch 4 of 16 lists, candidates come only
     from probed lists.  Cosine everywhere, rounded 6 dp, ranked on the
     rounded value with id tiebreaks (policy §7.2)."""
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", _dbl().alias("v"))
+    e = corpus_vectors(spark, sf_dir)
     centroids = e.where(F.col("vec_id").between(IVF_SEED_LO, IVF_SEED_HI)).select(
         (F.col("vec_id") - IVF_SEED_LO).alias("cluster_id"), F.col("v").alias("cv")
     )
@@ -273,7 +272,7 @@ def sim_knn_ivf_exact(spark, sf_dir):
 def sim_knn_ivf(spark, sf_dir):
     """IVF top-10 for 5 probes (k=16 lists, 4 probed). Deterministic
     given the seed; rows-only by construction."""
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", _dbl().alias("v"))
+    e = corpus_vectors(spark, sf_dir)
     centroids = train_quantizer(e, k=16, seed=42)
     indexed = assign_clusters(e, centroids)
     probes = probe_vectors(e, 5)

@@ -38,9 +38,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_builder_spark.llm.similarity import _dbl, cosine, dot, norm, probe_vectors, sq_dist
+from etl_builder_spark.llm.similarity import corpus_vectors, cosine, dot, norm, probe_vectors, sq_dist
 from etl_builder_spark.registry import register
-from etl_builder_spark.session import file_version, load_table
+from etl_builder_spark.session import file_version
 
 #: subspaces (64-dim fixture → 8 dims each) and codes per subspace.
 #: m=8 measured recall@10 = 0.30 vs 0.16 at m=4 on the synthetic
@@ -114,7 +114,7 @@ def corpus_codebook(
     anti-pattern."""
     key = (str(sf_dir), file_version(os.path.join(sf_dir, "embeddings.parquet")), m, k, seed)
     if key not in _CODEBOOK_CACHE:
-        e = load_table(spark, sf_dir, "embeddings").select("vec_id", _dbl().alias("v"))
+        e = corpus_vectors(spark, sf_dir)
         cb = train_pq_codebooks(e, m=m, k=k, seed=seed)
         _CODEBOOK_CACHE[key] = [(r[0], r[1], [float(x) for x in r[2]]) for r in cb.collect()]
     return spark.createDataFrame(
@@ -260,7 +260,7 @@ def embed_pq_codes(spark, sf_dir):
     so every declared schema must be scalar-only.  ``pq_encode`` keeps
     the true array shape for downstream composition (ADC, rerank,
     IVF-PQ)."""
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", _dbl().alias("v"))
+    e = corpus_vectors(spark, sf_dir)
     return _codes_csv(pq_encode(e, corpus_codebook(spark, sf_dir)))
 
 
@@ -283,7 +283,7 @@ def sim_topk_pq_adc(spark, sf_dir):
     """Approximate top-10 neighbors for 5 probes via PQ asymmetric
     distance (see _adc_scored).  Ranked on rounded distance with
     vec_id tiebreak."""
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", _dbl().alias("v"))
+    e = corpus_vectors(spark, sf_dir)
     return _adc_top10(e, corpus_codebook(spark, sf_dir))
 
 
@@ -316,7 +316,7 @@ def sim_topk_pq_rerank(spark, sf_dir):
 
     Measured on the fixture: exact-top-10 recall 0.70 via the top-50
     shortlist vs 0.30 for pure ADC@10."""
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", _dbl().alias("v"))
+    e = corpus_vectors(spark, sf_dir)
     return _adc_rerank(e, corpus_codebook(spark, sf_dir))
 
 
@@ -378,7 +378,7 @@ def sim_knn_ivfpq(spark, sf_dir):
     codebook pinned too.  Recall floor vs exact cosine is pinned in
     tests/test_pq.py::test_ivfpq_recall_vs_exact."""
     cb = corpus_codebook(spark, sf_dir)
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", _dbl().alias("v")).persist()
+    e = corpus_vectors(spark, sf_dir).persist()
     return _ivfpq_topk(e, cb)
 
 
@@ -578,7 +578,7 @@ def embed_pq_codes_exact(spark, sf_dir):
     """``embed_pq_codes`` with the codebook pinned to corpus points —
     the same ``pq_encode`` call (broadcast codebook, de-windowed
     argmin, DECIMAL recon-error sum), hash-checkable end to end."""
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", _dbl().alias("v")).persist()
+    e = corpus_vectors(spark, sf_dir).persist()
     return _codes_csv(pq_encode(e, _pinned_codebook_from(e)))
 
 
@@ -600,7 +600,7 @@ def embed_pq_codes_exact(spark, sf_dir):
 def sim_topk_pq_adc_exact(spark, sf_dir):
     """``sim_topk_pq_adc`` with the codebook pinned — same
     ``_adc_scored`` compressed-domain scoring, exact oracle."""
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", _dbl().alias("v")).persist()
+    e = corpus_vectors(spark, sf_dir).persist()
     return _adc_top10(e, _pinned_codebook_from(e))
 
 
@@ -617,7 +617,7 @@ def sim_topk_pq_adc_exact(spark, sf_dir):
 def sim_topk_pq_rerank_exact(spark, sf_dir):
     """``sim_topk_pq_rerank`` with the codebook pinned — ADC top-50
     shortlist, exact-distance re-rank to top-10, hash-checkable."""
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", _dbl().alias("v")).persist()
+    e = corpus_vectors(spark, sf_dir).persist()
     return _adc_rerank(e, _pinned_codebook_from(e))
 
 
@@ -671,7 +671,7 @@ def sim_knn_ivfpq_exact(spark, sf_dir):
     coarse pruning to 4/16 lists, compressed-domain ADC over probed
     lists only, top-50 exact re-rank — now hash-checkable end to end,
     clearing the last evidence-less component family."""
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", _dbl().alias("v")).persist()
+    e = corpus_vectors(spark, sf_dir).persist()
     return _ivfpq_topk(e, _pinned_codebook_from(e))
 
 
@@ -735,7 +735,7 @@ def ml_ndcg_pq_adc(spark, sf_dir):
     the expensive half (brute force per probe) and is exactly what you
     run on a small probe panel to monitor a production index's
     recall/NDCG drift — |probes| · |corpus|, never corpus²."""
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", _dbl().alias("v")).persist()
+    e = corpus_vectors(spark, sf_dir).persist()
     adc10 = _adc_top10(e, _pinned_codebook_from(e)).select("probe_id", "vec_id", "rank")
     probes = probe_vectors(e, 5)
     we = Window.partitionBy("probe_id").orderBy(

@@ -63,6 +63,11 @@ def _dbl(col: str = "embedding") -> Column:
     return F.transform(F.col(col), lambda x: x.cast("double"))
 
 
+def corpus_vectors(spark, sf_dir) -> DataFrame:
+    """The corpus embeddings as (vec_id, v array<double>)."""
+    return load_table(spark, sf_dir, "embeddings").select("vec_id", _dbl().alias("v"))
+
+
 def probe_vectors(vecs: DataFrame, n: int) -> DataFrame:
     """(probe_id, pv): the vectors of a (vec_id, v) frame with
     vec_id < ``n`` — the probe side of every search key."""
@@ -98,7 +103,7 @@ def sim_topk_cosine_sql(spark, sf_dir):
     """Brute-force cosine top-10 for 5 probe vectors. The probe set is
     broadcast; candidates stream through codegen — scan-shaped, scales
     linearly with the candidate table."""
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", _dbl().alias("v"))
+    e = corpus_vectors(spark, sf_dir)
     # norms hoisted to per-row columns BEFORE the probe×candidate join
     # (see norm()): each candidate folds its norm once instead of once
     # per probe; the pair computes one dot — bit-identical similarity.
@@ -262,7 +267,7 @@ def sim_rrf_fusion(spark, sf_dir):
     windows are partitioned (never global); at corpus scale each
     ranker would come from its index (IVF / LSH keys here) and this
     operator fuses their candidate lists — the shape is identical."""
-    vecs = load_table(spark, sf_dir, "embeddings").select("vec_id", _dbl().alias("v"))
+    vecs = corpus_vectors(spark, sf_dir)
     probes = probe_vectors(vecs, 5)
     j = vecs.join(F.broadcast(probes), F.col("vec_id") != F.col("probe_id"))
     sims = j.select(

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_builder_spark.folding import fold_lower
-from etl_builder_spark.llm.text import token_trigrams
+from etl_builder_spark.llm.text import shared_token_pairs, token_trigrams
 from etl_builder_spark.registry import register
 from etl_builder_spark.session import load_table
 
@@ -49,8 +49,9 @@ def shingle_tf(d):
     """Token-trigram shingle term frequencies — one (doc_id, token, tf)
     row per distinct shingle per doc, PERSISTED (three consumers: df,
     norms, both dot-product sides).  Shared by the registered operator
-    and scale_stress's ``sparse_inverted`` family so the measured
-    scaling curve exercises the exact shipped code path."""
+    and ``tests/test_scaling.py``, which asserts that the candidate
+    pairs of the shipped code path grow by exactly the corpus copy
+    factor."""
     base, tri = token_trigrams(d, fold_lower("text"))
     return (
         base.select("doc_id", F.explode(tri).alias("token"))
@@ -132,9 +133,8 @@ def sim_sparse_tfidf_pairs(spark, sf_dir):
     )
     term9 = lambda c: F.round(c, 9).cast("decimal(38,9)")  # noqa: E731
     norms = w.groupBy("doc_id").agg(F.sum(term9(F.col("w") * F.col("w"))).alias("n2"))
-    a, b = w.alias("a"), w.alias("b")
     dot = (
-        a.join(b, (F.col("a.token") == F.col("b.token")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        shared_token_pairs(w)
         .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .agg(
             F.count(F.lit(1)).alias("n_shared"),

@@ -51,6 +51,15 @@ def token_trigrams(df, text):
     return toks, tri
 
 
+def shared_token_pairs(sh):
+    """Inverted-index candidate self-join of a (doc_id, token, …) frame
+    under aliases ``a`` and ``b``: one row per token two documents
+    share, a.doc_id < b.doc_id — candidates come only from shared
+    tokens, never all pairs."""
+    a, b = sh.alias("a"), sh.alias("b")
+    return a.join(b, (F.col("a.token") == F.col("b.token")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+
+
 @register(
     "text_tokenize_counts",
     oracle="""

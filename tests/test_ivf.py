@@ -6,20 +6,15 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_builder_spark.llm.ivf import assign_clusters, ivf_topk, train_quantizer
-from etl_builder_spark.llm.similarity import _dbl, sim_topk_cosine_sql
+from etl_builder_spark.llm.similarity import corpus_vectors, sim_topk_cosine_sql
 from etl_builder_spark.registry import REGISTRY, _ensure_loaded
-from etl_builder_spark.session import load_table
 from tests.conftest import SF_DIR
 
 _ensure_loaded()
 
 
-def _vectors(spark):
-    return load_table(spark, SF_DIR, "embeddings").select("vec_id", _dbl().alias("v"))
-
-
 def test_every_vector_assigned_once(spark):
-    e = _vectors(spark)
+    e = corpus_vectors(spark, SF_DIR)
     centroids = train_quantizer(e, k=8, seed=42)
     idx = assign_clusters(e, centroids)
     assert idx.count() == e.count()
@@ -39,7 +34,7 @@ def test_ivf_recall_vs_bruteforce(spark):
     so this asserts the pruning is genuinely similarity-guided rather
     than arbitrary (random 8/16 pruning alone gives ~50% in
     expectation; the argmin assignment must not do worse)."""
-    e = _vectors(spark)
+    e = corpus_vectors(spark, SF_DIR)
     centroids = train_quantizer(e, k=16, seed=42)
     indexed = assign_clusters(e, centroids)
     probes = e.where(F.col("vec_id") < 5).select(

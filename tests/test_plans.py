@@ -124,10 +124,9 @@ def test_ivf_partitioned_index_prunes_probe_scan(spark, tmp_path):
         train_quantizer,
         write_ivf_index,
     )
-    from etl_builder_spark.llm.similarity import _dbl
-    from etl_builder_spark.session import load_table
+    from etl_builder_spark.llm.similarity import corpus_vectors
 
-    e = load_table(spark, SF_DIR, "embeddings").select("vec_id", _dbl().alias("v"))
+    e = corpus_vectors(spark, SF_DIR)
     centroids = train_quantizer(e, k=8, seed=42)
     indexed = assign_clusters(e, centroids)
     idx_path = str(tmp_path / "ivf_index")

@@ -12,17 +12,12 @@ from etl_builder_spark.llm.pq import (
     pq_encode,
     train_pq_codebooks,
 )
-from etl_builder_spark.llm.similarity import _dbl
-from etl_builder_spark.session import load_table
+from etl_builder_spark.llm.similarity import corpus_vectors
 from tests.conftest import SF_DIR
 
 
-def _vectors(spark):
-    return load_table(spark, SF_DIR, "embeddings").select("vec_id", _dbl().alias("v"))
-
-
 def test_pq_encode_shape_and_determinism(spark):
-    e = _vectors(spark)
+    e = corpus_vectors(spark, SF_DIR)
     cb = train_pq_codebooks(e)
     assert cb.count() == M_SUBSPACES * K_CODES
     out1 = sorted(map(tuple, pq_encode(e, cb).collect()))
@@ -38,7 +33,7 @@ def test_pq_beats_trivial_quantizer(spark):
     """Mean reconstruction error must beat quantizing every subspace to
     its single global centroid (k=1) — i.e. the codebooks actually
     learned structure."""
-    e = _vectors(spark)
+    e = corpus_vectors(spark, SF_DIR)
     err_pq = (
         pq_encode(e, train_pq_codebooks(e)).agg(F.avg("recon_err")).collect()[0][0]
     )
@@ -75,7 +70,7 @@ def test_pq_adc_recall_vs_exact(spark):
     for r in adc.collect():
         got.setdefault(r["probe_id"], set()).add(r["vec_id"])
 
-    e = _vectors(spark)
+    e = corpus_vectors(spark, SF_DIR)
     probes = e.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("probe_id"), F.col("v").alias("pv")
     )
@@ -120,7 +115,7 @@ def test_pq_encode_follows_codebook_m(spark):
     """A codebook trained at m=4 must drive 4-wide slicing and 4 codes
     per vector — m is implied by the codebook, not assumed (ADVICE r3:
     a module-constant m would silently mis-slice here)."""
-    e = _vectors(spark)
+    e = corpus_vectors(spark, SF_DIR)
     cb4 = train_pq_codebooks(e, m=4, k=8)
     out = pq_encode(e, cb4).collect()
     assert out
@@ -188,9 +183,7 @@ def test_corpus_codebook_retrains_after_rewrite(spark, tmp_path):
     fresh = sorted(
         map(
             tuple,
-            train_pq_codebooks(
-                load_table(spark, sf_dir, "embeddings").select("vec_id", _dbl().alias("v"))
-            ).collect(),
+            train_pq_codebooks(corpus_vectors(spark, sf_dir)).collect(),
         )
     )
     assert new == fresh

@@ -293,11 +293,10 @@ def test_sign_lsh_adaptive_geometry_gate(spark):
     import pytest as _pytest
 
     from etl_builder_spark.llm.embed_dedup import sign_lsh_candidates
-    from etl_builder_spark.llm.similarity import _dbl
-    from etl_builder_spark.session import load_table
+    from etl_builder_spark.llm.similarity import corpus_vectors
     from tests.conftest import SF_DIR
 
-    e = load_table(spark, SF_DIR, "embeddings").select("vec_id", _dbl().alias("v"))
+    e = corpus_vectors(spark, SF_DIR)
     low = spark.createDataFrame([(10,)], "n long")
     high = spark.createDataFrame([(1_000_000,)], "n long")
 
