@@ -8,11 +8,11 @@ with component = min reachable node id):
 * ``connected_components_min_label`` — iterative min-label
   propagation; O(diameter) rounds of one shuffle each. The right tool
   for near-dup graphs, whose components are short dup chains
-  (diameter ≤ a few hops). Lineage is truncated with
-  ``localCheckpoint`` every few rounds so hundred-round graphs don't
-  accumulate an unbounded plan; non-convergence at ``max_iter``
-  RAISES by default (silently returning partial labels was round-1
-  behavior — a trap flagged in review).
+  (diameter ≤ a few hops). Every round passes through
+  ``session.round_barrier``, so hundred-round graphs don't accumulate
+  an unbounded plan; non-convergence at ``max_iter`` RAISES by default
+  (silently returning partial labels was round-1 behavior — a trap
+  flagged in review).
 * ``connected_components_star`` — the large-star/small-star
   alternation (Kiveris et al., "Connected Components in MapReduce and
   Beyond"): O(log² n) rounds regardless of diameter, the scale path
@@ -32,14 +32,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_builder_spark.registry import register
-from etl_builder_spark.session import load_table
+from etl_builder_spark.session import load_table, round_barrier
 
 PLANT = 10000
-
-# Truncate cached-plan lineage every N propagation rounds: iterated
-# cache() chains grow the logical plan linearly and at real scale the
-# driver spends more time re-analyzing the plan than running the round.
-_CHECKPOINT_EVERY = 4
 
 
 class NonConvergedError(RuntimeError):
@@ -65,48 +60,40 @@ def connected_components_min_label(
     """
     if on_nonconverged not in ("raise", "warn"):
         raise ValueError(f"on_nonconverged must be 'raise' or 'warn': {on_nonconverged!r}")
-    # the symmetrized edge list is iteration-invariant and referenced by
-    # every round's propagation join — materialize it ONCE with an eager
-    # localCheckpoint (r15, guide §5/§3.3): unlike persist(), this also
-    # TRUNCATES the logical plan, so each round's Catalyst analysis (and
-    # the convergence probe's) walks a one-node scan instead of
-    # re-analyzing the full upstream edge construction — for callers
-    # like DBSCAN whose edge lineage is a large candidate-join tree,
-    # driver-side analysis was the dominant per-round cost.
-    sym = edges.select("src", "dst").union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
+    # the symmetrized edge list is referenced by every round's join; the
+    # barrier spares each round re-analyzing the caller's edge lineage
+    # (for DBSCAN, a large candidate-join tree)
+    sym = round_barrier(
+        edges.select("src", "dst").union(
+            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+    )
     nodes = sym.select(F.col("src").alias("node")).distinct()
-    labels = nodes.select("node", F.col("node").alias("label")).cache()
+    labels = round_barrier(nodes.select("node", F.col("node").alias("label")))
     # Convergence probe (r15, guide §2.4): labels only ever DECREASE
     # (least of old and neighbor min), so the label multiset changed
     # iff the exact decimal SUM of labels moved — one aggregate over
     # the new frame replaces the former old⋈new shuffle join + count
-    # per round, and the same job materializes the round's cache.
+    # per round.
     prev_sum = labels.agg(
         F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
     ).collect()[0]["s"]
     converged = False
-    for it in range(max_iter):
+    for _ in range(max_iter):
         neigh_min = (
             sym.join(labels, sym["dst"] == labels["node"])
             .groupBy("src")
             .agg(F.min("label").alias("nlabel"))
         )
-        new_labels = labels.join(neigh_min, labels["node"] == neigh_min["src"], "left").select(
-            "node",
-            F.least(F.col("label"), F.coalesce("nlabel", F.col("label"))).alias("label"),
+        labels = round_barrier(
+            labels.join(neigh_min, labels["node"] == neigh_min["src"], "left").select(
+                "node",
+                F.least(F.col("label"), F.coalesce("nlabel", F.col("label"))).alias("label"),
+            )
         )
-        if (it + 1) % _CHECKPOINT_EVERY == 0:
-            # eager truncation: cuts lineage AND materializes in one pass
-            new_labels = new_labels.localCheckpoint(eager=True)
-        else:
-            new_labels = new_labels.cache()
-        new_sum = new_labels.agg(
+        new_sum = labels.agg(
             F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
         ).collect()[0]["s"]
-        labels.unpersist()
-        labels = new_labels
         if new_sum == prev_sum:
             converged = True
             break
@@ -154,34 +141,34 @@ def connected_components_star(edges: DataFrame, max_iter: int = 50) -> DataFrame
     graphs where min-label's O(diameter) rounds would be unbounded.
 
     Returns (node, component), component = min node of the component.
-    Each round is two shuffles (groupBy + join); the edge set is
-    localCheckpoint'ed every few rounds to truncate lineage.
+    Each round is two shuffles (groupBy + join); every round's edge
+    set passes through ``session.round_barrier``.
     """
-    cur = (
+    cur = round_barrier(
         edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
         .select(
             F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
         )
         .distinct()
-        .cache()
     )
     if cur.limit(1).count() == 0:
         return cur.select(F.col("src").alias("node"), F.col("dst").alias("component"))
     prev_sig = None
     converged = False
-    for it in range(max_iter):
+    for _ in range(max_iter):
         sym = cur.union(cur.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         after_large = _large_star(sym).where(F.col("src") != F.col("dst")).distinct()
         oriented = after_large.select(
             F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
         ).distinct()
-        # checkpoint EVERY round: each round references `cur` several
-        # times (sym twice, star joins), so without truncation the
-        # logical plan multiplies per round and Catalyst analysis time
-        # explodes long before the compute does
-        new = _small_star(oriented).where(F.col("src") != F.col("dst")).distinct()
-        new = new.localCheckpoint(eager=True)
+        # each round references `cur` several times (sym twice, star
+        # joins), so without the barrier the logical plan multiplies per
+        # round and Catalyst analysis time explodes long before the
+        # compute does
+        new = round_barrier(
+            _small_star(oriented).where(F.col("src") != F.col("dst")).distinct()
+        )
         # one-pass fixpoint signature: count + order-free hash of the edge
         # set (XOR, not SUM: the edge set is distinct so XOR can't cancel,
         # and it can't overflow under ANSI mode)
@@ -190,8 +177,6 @@ def connected_components_star(edges: DataFrame, max_iter: int = 50) -> DataFrame
             F.bit_xor(F.xxhash64("src", "dst")).alias("h"),
         ).collect()[0]
         sig = (sig["n"], sig["h"])
-        if it == 0:
-            cur.unpersist()
         cur = new
         if sig == prev_sig:
             converged = True
@@ -360,16 +345,13 @@ def dbscan_labels(pts: DataFrame, eps: int, min_pts: int) -> DataFrame:
     d2 = (F.col("xa") - F.col("xb")) * (F.col("xa") - F.col("xb")) + (
         F.col("ya") - F.col("yb")
     ) * (F.col("ya") - F.col("yb"))
-    nbrs = (
+    # a barrier, not persist: four consumers (core, both sides of
+    # core_edges, border) would re-analyze this candidate-join lineage
+    # on every reference
+    nbrs = round_barrier(
         left.join(right, ["cxa", "cya"])
         .where(d2 <= F.lit(eps * eps))
         .select("na", "nb")  # includes self-pairs: count = |eps-ball incl. self|
-        # eager localCheckpoint, not persist (r15, guide §3.3): four
-        # consumers (core, both sides of core_edges, border) re-ANALYZE
-        # this candidate-join lineage on every reference; truncating it
-        # makes each downstream plan a one-node scan of the
-        # materialized pairs
-        .localCheckpoint(eager=True)
     )
     core = (
         nbrs.groupBy("na")

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_builder_spark.folding import fold_lower, fold_upper
-from etl_builder_spark.llm.text import shared_token_pairs, token_trigrams
+from etl_builder_spark.llm.text import df_ceiling_tokens, shared_token_pairs, token_trigrams
 from etl_builder_spark.registry import register
 from etl_builder_spark.session import load_table
 
@@ -157,12 +157,7 @@ def _ngram_jaccard(spark, sf_dir, df_ceiling: int = DF_CEILING):
         .distinct()
         .persist()
     )
-    keep = (
-        sh.groupBy("token")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .where(F.col("df") <= df_ceiling)
-        .select("token")
-    )
+    keep = df_ceiling_tokens(sh, df_ceiling).select("token")
     sh = sh.join(F.broadcast(keep), "token").persist()
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     inter = (
@@ -868,12 +863,7 @@ def dedup_text_containment(spark, sf_dir):
         tok_base.select("doc_id", F.explode(tri).alias("token"))
         .distinct()
     )
-    keep = (
-        sh.groupBy("token")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .where(F.col("df") <= DF_CEILING)
-        .select("token")
-    )
+    keep = df_ceiling_tokens(sh, DF_CEILING).select("token")
     sh = sh.join(F.broadcast(keep), "token").persist()
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     inter = (

@@ -498,7 +498,7 @@ def ml_pca_power_component(spark, sf_dir):
     re-rounded each step so both engines walk the SAME trajectory.
     Fixed iteration count keeps the plan static (the
     graph_pagerank_fixed contract) — convergence-tested variants
-    belong in driver loops with localCheckpoint (llm/cluster.py).
+    belong in driver loops with ``session.round_barrier`` (llm/cluster.py).
 
     100 TB posture: per iteration the data is read once (the centered
     frame is persisted across all iterations), shuffle traffic is 64
@@ -650,7 +650,7 @@ def ml_kmeans_lloyd_exact(spark, sf_dir):
     that lose all points drop out on both engines by the same rule.
     Fixed iteration count keeps the plan static (graph_pagerank_fixed
     contract); production k-means adds convergence checks driver-side
-    with localCheckpoint lineage cuts (llm/cluster.py)."""
+    with ``session.round_barrier`` lineage cuts (llm/cluster.py)."""
     e = load_table(spark, sf_dir, "embeddings")
     x = e.select("vec_id", _dbl().alias("v")).persist()
     cent = x.where(F.col("vec_id") < KMEANS_K).select(

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_builder_spark.folding import fold_lower
-from etl_builder_spark.llm.text import shared_token_pairs, token_trigrams
+from etl_builder_spark.llm.text import df_ceiling_tokens, shared_token_pairs, token_trigrams
 from etl_builder_spark.registry import register
 from etl_builder_spark.session import load_table
 
@@ -118,11 +118,7 @@ def sim_sparse_tfidf_pairs(spark, sf_dir):
     sh = shingle_tf(d)
     # df derives from the persisted tf frame (one row per (doc, token))
     # — no second corpus shingle pass.
-    dfreq = (
-        sh.groupBy("token")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .where(F.col("df") <= SPARSE_DF_CEILING)
-    )
+    dfreq = df_ceiling_tokens(sh, SPARSE_DF_CEILING)
     n = d.agg(F.count(F.lit(1)).alias("n_docs"))
     idf = F.round(F.log((F.col("n_docs") + F.lit(1.0)) / (F.col("df") + F.lit(1.0))) + F.lit(1.0), 6)
     w = (

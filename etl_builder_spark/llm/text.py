@@ -51,6 +51,15 @@ def token_trigrams(df, text):
     return toks, tri
 
 
+def df_ceiling_tokens(sh, ceiling: int):
+    """(token, df) for every token of a (doc_id, token, …) frame whose
+    document frequency is at most ``ceiling`` — the inverted index's
+    scale clamp: a token shared by df docs emits ~df² candidate pairs
+    in ``shared_token_pairs``, so capping df bounds the candidate set
+    linearly in corpus size."""
+    return sh.groupBy("token").agg(F.count(F.lit(1)).alias("df")).where(F.col("df") <= ceiling)
+
+
 def shared_token_pairs(sh):
     """Inverted-index candidate self-join of a (doc_id, token, …) frame
     under aliases ``a`` and ``b``: one row per token two documents

@@ -11,7 +11,7 @@ from etl_builder_spark.folding import nan_to_null
 
 from etl_builder_spark.policy import money
 from etl_builder_spark.registry import register
-from etl_builder_spark.session import load_table
+from etl_builder_spark.session import load_table, round_barrier
 
 
 @register(
@@ -897,14 +897,15 @@ def attribution_time_decay(spark, sf_dir):
 
 
 def _markov_state(spark, sf_dir):
-    """Build the persisted markov iteration state and return the four
-    step vectors v0..v3.  The |states|² transition-cell frame (the one
+    """Build the markov iteration state and return the four step
+    vectors v0..v3.  The |states|² transition-cell frame (the one
     expensive pass — the LEAD-window event pairing — feeds both p and
-    states, guide §5), the DECIMAL(10,6) transition frame, the state
-    list and v1..v3 are persisted: the final report joins all four
-    vectors, and an unpersisted v_i re-derives its whole iteration
-    chain once per downstream reference.  Spark's cache reuses the
-    rebuilt, persisted frames across calls."""
+    states, guide §5), the DECIMAL(10,6) transition frame and the state
+    list are iteration-invariant and persisted; Spark's cache reuses
+    them across calls.  Each step v1..v3 passes through
+    ``session.round_barrier``: the final report joins all four vectors,
+    and an uncut v_i would re-derive its whole iteration chain once per
+    downstream reference."""
     from pyspark.sql import Window
 
     ev = load_table(spark, sf_dir, "events")
@@ -959,7 +960,7 @@ def _markov_state(spark, sf_dir):
                 .alias("v")
             )
         )
-        vs.append(nxt.persist())
+        vs.append(round_barrier(nxt))
     return vs
 
 

@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_builder_spark.registry import register
-from etl_builder_spark.session import load_table
+from etl_builder_spark.session import load_table, round_barrier
 
 #: supplier node ids are offset into their own range so the two key
 #: spaces can share one BIGINT node column
@@ -649,7 +649,11 @@ def _propagate_labels(sym):
     iterate-on-DataFrame trap — each extra round would re-run all
     earlier joins), while the cache turns round r's input into one
     InMemoryTableScan; A/B at sf0.1 warmed: 3.81s -> 3.56s, and the
-    gap widens with rounds x data (PERF.md round 9)."""
+    gap widens with rounds x data (PERF.md round 9).  It stays on
+    persist(), not ``session.round_barrier``: a checkpointed frontier
+    forgets its hash(node) partitioning, so the labels side shuffles
+    once more per plan (pinned by
+    test_label_propagation_sym_side_never_reshuffles)."""
     labels = sym.select(F.col("u").alias("node")).distinct().select(
         "node", F.col("node").alias("lab")
     )
@@ -817,11 +821,12 @@ def graph_kcore_peel(spark, sf_dir):
     edge counts — the peel trajectory.
 
     100 TB posture: each round is ONE degree aggregate plus two
-    semi-joins on the (already partitioned) src key; the directed edge
-    list stays partitioned by src across rounds, so rounds reuse the
-    exchange.  Fixed rounds ≡ the graph_pagerank_fixed convergence
-    discipline (run to fixpoint by raising the constant; each round's
-    cost is the same join)."""
+    semi-joins on the src key; each round's ``keep`` and ``nxt`` pass
+    through ``session.round_barrier``, so round r plans only its own
+    joins over two materialized leaves, never the r−1 rounds before it.
+    Fixed rounds ≡ the graph_pagerank_fixed convergence discipline (run
+    to fixpoint by raising the constant; each round's cost is the same
+    join)."""
     edges = _copurchase_edges(spark, sf_dir)
     dedges = edges.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
         edges.select(F.col("v").alias("src"), F.col("u").alias("dst"))
@@ -830,12 +835,11 @@ def graph_kcore_peel(spark, sf_dir):
     cur = dedges
     for r in range(1, KCORE_ROUNDS + 1):
         deg = cur.groupBy("src").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-        keep = deg.where(F.col("d") >= KCORE_K).select("src").persist()
-        nxt = (
+        keep = round_barrier(deg.where(F.col("d") >= KCORE_K).select("src"))
+        nxt = round_barrier(
             cur.join(keep, "src")
             .join(keep.select(F.col("src").alias("dst")), "dst")
             .select("src", "dst")
-            .persist()
         )
         stats = keep.agg(F.count(F.lit(1)).cast("bigint").alias("nodes_surviving")).crossJoin(
             nxt.agg((F.count(F.lit(1)) / 2).cast("bigint").alias("edges_remaining"))

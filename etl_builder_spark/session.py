@@ -61,6 +61,35 @@ def get_spark(app_name: str = "etl_builder_spark", shuffle_partitions: int = 32)
     return spark
 
 
+def round_barrier(df: DataFrame) -> DataFrame:
+    """Materialize one round of a fixpoint loop and cut its lineage.
+
+    Every iterative key (k-core peeling, the Markov power steps, both
+    connected-components loops, DBSCAN's neighbor pairs) passes each
+    round's frame through here, so where a loop materializes is decided
+    once.
+
+    Why a cut and not ``persist()``: a persisted frame keeps its whole
+    logical plan, and a round's plan holds the previous round's cached
+    frame, which holds the one before.  AQE re-plans those nested
+    caches stage by stage on every read, so a lazy persist per round
+    cost a warm ``graph_kcore_peel`` call about 50 s against 4 s for
+    the cut (sf0.001, PERF.md round-9 addendum).  An eager ``localCheckpoint`` runs
+    one job now and returns a frame whose plan is a single
+    ``LogicalRDD`` leaf, so the next round analyzes and plans only its
+    own joins.  The cut also drops the frame's output partitioning: a
+    consumer that relied on a hash-partitioned persist shuffles again.
+
+    Fault tolerance: the blocks live on the executors that computed
+    them and have no lineage to recompute from, so losing an executor
+    fails the query instead of recomputing the lost partitions.  On a
+    cluster where that matters, this function becomes a reliable
+    ``checkpoint()`` into a directory that ``sources/staging.py`` owns;
+    that swap changes only this function and adds no option.
+    """
+    return df.localCheckpoint(eager=True)
+
+
 def _pin_runtime_confs(spark: SparkSession) -> None:
     """Pin determinism-critical confs even on a session we didn't build.
 

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from etl_builder_spark.folding import fold_lower
 from etl_builder_spark.llm.dedup import _band_collisions, _minhash_sig_bands
 from etl_builder_spark.llm.sparse_sim import SPARSE_DF_CEILING, shingle_tf
-from etl_builder_spark.llm.text import shared_token_pairs
+from etl_builder_spark.llm.text import df_ceiling_tokens, shared_token_pairs
 from etl_builder_spark.session import load_table
 from tests.conftest import SF_DIR
 
@@ -57,12 +57,7 @@ def _sparse_pairs(docs) -> int:
     """Distinct candidate pairs that share a trigram shingle kept under
     the document-frequency ceiling."""
     sh = shingle_tf(docs)
-    keep = (
-        sh.groupBy("token")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .where(F.col("df") <= SPARSE_DF_CEILING)
-    )
-    kept = sh.join(F.broadcast(keep), "token")
+    kept = sh.join(F.broadcast(df_ceiling_tokens(sh, SPARSE_DF_CEILING)), "token")
     n = shared_token_pairs(kept).select("a.doc_id", "b.doc_id").distinct().count()
     sh.unpersist()
     return n
