@@ -48,17 +48,29 @@ def get_spark(app_name: str = "etl_builder_spark", shuffle_partitions: int = 32)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # the parity gate collects FULL result sets driver-side
-        # (toPandas canon); pair-valued keys at x100 return >1 GiB in
-        # one task, tripping the 1g default maxResultSize (round-14
-        # x100 sweep) — a harness sizing knob, not a plan property
-        .config("spark.driver.maxResultSize", "8g")
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", _driver_memory()))
+        # Spark's generated-class cache holds 100 classes by default,
+        # fewer than the engine's working set: about 110 distinct
+        # classes for the olap mix and about 180 for the curate mix.  An
+        # evicted class is recompiled with Janino on its next use, so
+        # every pass recompiled what the pass before had compiled.
+        # Guava splits the bound over 4 segments and evicts per
+        # segment, so 1000 leaves each segment about 250 slots for
+        # about 45 classes.  A static conf: it only takes effect when
+        # this call creates the session.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
     )
     spark = builder.getOrCreate()
     _pin_runtime_confs(spark)
     return spark
+
+
+def _driver_memory() -> str:
+    """A quarter of physical memory, at most 8g, so two engine
+    processes side by side (a test run and a selfcheck) fit the host."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(phys // 4, 8 << 30) >> 20}m"
 
 
 def round_barrier(df: DataFrame) -> DataFrame:
@@ -138,16 +150,18 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-#: (applicationId, sf_dir, table, file mtime) → LAZY DataFrame handle.
+#: (applicationId, path, version) → LAZY DataFrame handle, for corpus
+#: tables (``load_table``) and for the directories a stream replays
+#: (``streaming.runtime.stream_events``, which needs only the schema).
 #: Memoizes only the unresolved relation (plan-level reuse — spark.read
 #: .parquet resolves the footer schema EAGERLY, ~80ms of driver time
-#: per call; r15 measured ~160 load_table calls per bench pass), never
+#: per call, and one benchmark pass made ~160 load_table calls), never
 #: any data: every action over the handle still scans the parquet
-#: files.  The mtime in the key makes a regenerated corpus at the same
-#: path miss the memo; the size bound keeps multi-corpus test sessions
-#: from accumulating entries.  A miss also refreshes Spark's cache for
-#: the path: Spark matches cached plans by file path, not by file
-#: version, so frames persisted over an older version of the file
+#: files.  The version in the key makes a regenerated corpus at the
+#: same path miss the memo; the size bound keeps multi-corpus test
+#: sessions from accumulating entries.  A miss also refreshes Spark's
+#: cache for the path: Spark matches cached plans by file path, not by
+#: file version, so frames persisted over an older version of the file
 #: would otherwise keep serving its rows.
 _TABLE_CACHE: dict = {}
 
@@ -161,22 +175,39 @@ def file_version(path: str) -> int:
         return -1
 
 
+def dir_version(path: str) -> tuple:
+    """A directory's version: its entries' ``(name, mtime_ns)``, so
+    adding, removing or rewriting a file misses the memo (``()`` if
+    absent)."""
+    try:
+        return tuple(sorted((e.name, e.stat().st_mtime_ns) for e in os.scandir(path)))
+    except OSError:
+        return ()
+
+
+def read_parquet(spark: SparkSession, path: str, version, post=None) -> DataFrame:
+    """``spark.read.parquet(path)``, then ``post`` if given, through the
+    table memo: one footer probe per (session, path, version)."""
+    key = (spark.sparkContext.applicationId, path, version)
+    df = _TABLE_CACHE.get(key)
+    if df is None:
+        spark.catalog.refreshByPath(path)
+        df = spark.read.parquet(path)
+        if post is not None:
+            df = post(df)
+        if len(_TABLE_CACHE) >= 256:
+            _TABLE_CACHE.clear()
+        _TABLE_CACHE[key] = df
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one corpus table. Parquet scan → vectorized columnar reader;
     filters/pruning push down from whatever the caller composes on top."""
     _pin_runtime_confs(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    key = (spark.sparkContext.applicationId, path, file_version(path))
-    df = _TABLE_CACHE.get(key)
-    if df is None:
-        spark.catalog.refreshByPath(path)
-        df = spark.read.parquet(path)
-        if name == "events":
-            df = normalize_events_ts(df)
-        if len(_TABLE_CACHE) >= 256:
-            _TABLE_CACHE.clear()
-        _TABLE_CACHE[key] = df
-    return df
+    post = normalize_events_ts if name == "events" else None
+    return read_parquet(spark, path, file_version(path), post)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

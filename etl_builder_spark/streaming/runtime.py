@@ -11,6 +11,7 @@ and the watermark bounds its size.
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 import uuid
@@ -27,16 +28,52 @@ def stream_events(spark: SparkSession, path: str, max_files_per_trigger: int | N
     same directory (one metadata read, no data scan) — this keeps the
     stream working across corpus generations where ts was TIMESTAMP
     (NANOS) (ns-long under nanosAsLong) vs TIMESTAMP(MICROS) (NTZ);
-    normalize_events_ts converts either to session-UTC TimestampType."""
-    from etl_builder_spark.session import _pin_runtime_confs, normalize_events_ts
+    normalize_events_ts converts either to session-UTC TimestampType.
+    The probe goes through the table memo keyed on the directory's
+    entries, so a replay of an unchanged directory does not repeat it."""
+    from etl_builder_spark.session import (
+        _pin_runtime_confs,
+        dir_version,
+        normalize_events_ts,
+        read_parquet,
+    )
 
     _pin_runtime_confs(spark)
-    schema = spark.read.parquet(path).schema
+    schema = read_parquet(spark, path, dir_version(path)).schema
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     df = reader.parquet(path)
     return normalize_events_ts(df)
+
+
+def state_partitions(input_bytes: int, advisory_bytes: int, shuffle_partitions: int) -> int:
+    """State partitions for a replay of ``input_bytes``: one per
+    ``advisory_bytes`` (AQE's target partition size), at least 1 and at
+    most the session's shuffle count."""
+    return max(1, min(shuffle_partitions, -(-input_bytes // advisory_bytes)))
+
+
+def _stream_input_bytes(sdf: DataFrame) -> int | None:
+    """Bytes under the ``path`` of every streaming leaf of ``sdf``'s
+    plan (the directories ``stream_events`` opened), or None when a
+    streaming leaf is not a local file source.  Batch leaves (the
+    static side of a stream-static join) hold no state and are
+    skipped."""
+    leaves = sdf._jdf.queryExecution().logical().collectLeaves().iterator()
+    total = 0
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if not leaf.isStreaming():
+            continue
+        if leaf.getClass().getSimpleName() != "StreamingRelation":
+            return None
+        path = leaf.dataSource().options().get("path")
+        if path.isEmpty() or not os.path.isdir(path.get()):
+            return None
+        for d, _, files in os.walk(path.get()):
+            total += sum(os.path.getsize(os.path.join(d, f)) for f in files)
+    return total
 
 
 def await_or_stop(q: StreamingQuery, timeout_s: float) -> None:
@@ -82,7 +119,6 @@ def run_to_memory_with_progress(
     spark = sdf.sparkSession
     name = f"mem_{uuid.uuid4().hex[:10]}"
     seen: dict[int, dict] = {}
-    terminated: list[str] = []
 
     class _Collect(StreamingQueryListener):
         def onQueryStarted(self, event):
@@ -97,30 +133,51 @@ def run_to_memory_with_progress(
             pass
 
         def onQueryTerminated(self, event):
-            terminated.append(str(event.id))
+            pass
 
+    # The replay owns its checkpoint, so it picks its own state
+    # partition count, sized from its input rather than from the
+    # session's shuffle count.  start() clones the session's confs and
+    # the checkpoint pins the count, so the session value is restored
+    # as soon as the query has started.
+    shuffle_key = "spark.sql.shuffle.partitions"
+    shuffle = spark.conf.get(shuffle_key)
+    input_bytes = _stream_input_bytes(sdf)
     ckpt = tempfile.mkdtemp(prefix="ckpt_")
     listener = _Collect()
     spark.streams.addListener(listener)
     try:
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
+        try:
+            if input_bytes is not None:
+                advisory = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+                    spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+                )
+                n = state_partitions(input_bytes, advisory, int(shuffle))
+                spark.conf.set(shuffle_key, str(n))
+            q = (
+                sdf.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(mode)
+                .trigger(availableNow=True)
+                .option("checkpointLocation", ckpt)
+                .start()
+            )
+        finally:
+            spark.conf.set(shuffle_key, shuffle)
         await_or_stop(q, timeout_s)
-        # Listener events are delivered on a separate thread; give it a
-        # bounded grace period to drain up to the termination event.
-        deadline = time.monotonic() + 10
-        qid = str(q.id)
-        while time.monotonic() < deadline and qid not in terminated:
-            time.sleep(0.05)
+        # Once the query has terminated, recentProgress holds its last
+        # batches; the listener, which delivers on its own thread, holds
+        # the earlier ones.  Wait (bounded) only while a batch id below
+        # the highest is still missing.
         for p in q.recentProgress:
             d = p if isinstance(p, dict) else json.loads(p.json)
             seen.setdefault(d["batchId"], d)
+        deadline = time.monotonic() + 10
+        while time.monotonic() < deadline:
+            ids = list(seen)
+            if len(ids) == max(ids, default=-1) + 1:
+                break
+            time.sleep(0.05)
         out = spark.table(name)
     finally:
         spark.streams.removeListener(listener)
@@ -252,8 +309,6 @@ def foreach_batch_merge_sink(
     key under MAX/GREATEST, so partial merge order can't change it.
 
     Returns the path of the newest snapshot."""
-    import os
-
     from pyspark.sql import functions as F
 
     def upsert(batch: DataFrame, batch_id: int) -> None:
@@ -279,8 +334,6 @@ def merge_snapshot_batch(batch: DataFrame, batch_id: int, target_dir: str) -> No
     output) is what makes redelivery idempotent: a batch replayed
     after a crash that already wrote v{batch_id} recomputes it from
     the same inputs and overwrites it identically."""
-    import os
-
     from pyspark.sql import functions as F
 
     # NULL-valued events count toward n_events but carry no decodable

@@ -794,3 +794,70 @@ def test_stateful_counters_crash_restart_from_checkpoint(spark, tmp_path):
     batch = load_table(spark, SF_DIR, "events").groupBy("user_id").count()
     want = {r["user_id"]: r["count"] for r in batch.collect()}
     assert got == want, "GroupState lost across restart: counters reset mid-stream"
+
+
+def test_replay_state_partitions_sized_from_input(spark, events_dir):
+    """A replay over a small directory runs its state on one partition,
+    whatever the session's shuffle count, and leaves that count as it
+    found it."""
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    assert int(before) > 1
+    ev = runtime.stream_events(spark, events_dir)
+    _, progress = runtime.run_to_memory_with_progress(
+        runtime.tumbling_counts(ev, watermark="100 days"), "complete"
+    )
+    ops = [op for p in progress for op in p["stateOperators"]]
+    assert ops and {op["numShufflePartitions"] for op in ops} == {1}, ops
+    assert spark.conf.get(key) == before
+
+
+def test_replay_restores_shuffle_count_when_start_raises(spark, events_dir):
+    """An append-mode aggregation without a watermark fails in
+    ``start()``; the session's shuffle count is restored all the same."""
+    from pyspark.errors import AnalysisException
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    ev = runtime.stream_events(spark, events_dir)
+    with pytest.raises(AnalysisException):
+        runtime.run_to_memory(ev.groupBy("event_type").count(), "append")
+    assert spark.conf.get(key) == before
+    assert spark.streams.active == []
+
+
+def test_state_partitions_rule():
+    """One state partition per advisory size of input, clamped to
+    [1, shuffle]: an input of shuffle x advisory bytes or more keeps
+    the global count."""
+    mb64 = 64 << 20
+    assert runtime.state_partitions(0, mb64, 8) == 1
+    assert runtime.state_partitions(100_000, mb64, 8) == 1
+    assert runtime.state_partitions(mb64 + 1, mb64, 8) == 2
+    assert runtime.state_partitions(8 * mb64, mb64, 8) == 8
+    assert runtime.state_partitions(100 * mb64, mb64, 8) == 8
+
+
+def test_stream_events_probes_footer_once_per_directory_version(spark, tmp_path, monkeypatch):
+    """Two replays of one directory read its parquet schema once; a file
+    added to the directory makes the next call read it again."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    d = tmp_path / "probe_once"
+    d.mkdir()
+    shutil.copy(EVENTS, d / "part_0.parquet")
+    probes = []
+    orig = DataFrameReader.parquet
+
+    def parquet(self, *paths, **kw):
+        probes.extend(p for p in paths if p == str(d))
+        return orig(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+    for _ in range(2):
+        runtime.stream_events(spark, str(d))
+    assert len(probes) == 1
+    shutil.copy(EVENTS, d / "part_1.parquet")
+    ev = runtime.stream_events(spark, str(d))
+    assert len(probes) == 2
+    assert runtime.run_to_memory(ev.groupBy().count(), "complete").collect()[0][0] == 2000
