@@ -79,11 +79,7 @@ def nan_to_null(col) -> Column:
     so order statistics pin NaN to the one unknown-value semantics
     both engines share: NULL, which every aggregate skips identically.
     NULL stays NULL; non-NaN values pass through — the identity on
-    NaN-free corpora.  SQL twin: :func:`nan_to_null_sql`."""
+    NaN-free corpora.  SQL twin:
+    ``CASE WHEN isnan(x) THEN NULL ELSE x END``."""
     c = col if isinstance(col, Column) else F.col(col)
     return F.when(~F.isnan(c), c)
-
-
-def nan_to_null_sql(expr: str) -> str:
-    """DuckDB twin of :func:`nan_to_null`."""
-    return f"(CASE WHEN isnan({expr}) THEN NULL ELSE {expr} END)"

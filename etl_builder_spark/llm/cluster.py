@@ -2,22 +2,18 @@
 edge set (SURVEY.md §4.2 row 3 — the step after MinHash-LSH turns
 pairwise matches into dedup groups).
 
-Two formulations, same contract ((src,dst) edges → (node, component)
-with component = min reachable node id):
-
-* ``connected_components_min_label`` — iterative min-label
-  propagation; O(diameter) rounds of one shuffle each. The right tool
-  for near-dup graphs, whose components are short dup chains
-  (diameter ≤ a few hops). Every round passes through
-  ``session.round_barrier``, so hundred-round graphs don't accumulate
-  an unbounded plan; non-convergence at ``max_iter`` RAISES by default
-  (silently returning partial labels was round-1 behavior — a trap
-  flagged in review).
-* ``connected_components_star`` — the large-star/small-star
-  alternation (Kiveris et al., "Connected Components in MapReduce and
-  Beyond"): O(log² n) rounds regardless of diameter, the scale path
-  for adversarial/high-diameter graphs (long chains, social graphs).
-  Property-tested against union-find and against min-label.
+``connected_components_min_label`` maps (src,dst) edges to (node,
+component) with component = min reachable node id, by iterative
+min-label propagation: O(diameter) rounds of one shuffle each. That
+fits near-dup graphs, whose components are short dup chains (diameter
+≤ a few hops). Every round passes through ``session.round_barrier``,
+so long loops don't accumulate an unbounded plan; non-convergence at
+``max_iter`` raises ``NonConvergedError`` rather than returning
+partial labels. A graph
+whose diameter can't be bounded (long chains, social graphs) needs a
+formulation with O(log² n) rounds, e.g. the large-star/small-star
+alternation (Kiveris et al., "Connected Components in MapReduce and
+Beyond"); no declared key needs one.
 
 The declared query proves the iterative algorithm against a
 DECLARATIVE oracle: planted two-hop dup chains (id ↔ id+10000 ↔
@@ -42,9 +38,7 @@ class NonConvergedError(RuntimeError):
     the returned labels would NOT be true components."""
 
 
-def connected_components_min_label(
-    edges: DataFrame, max_iter: int = 15, on_nonconverged: str = "raise"
-) -> DataFrame:
+def connected_components_min_label(edges: DataFrame, max_iter: int = 15) -> DataFrame:
     """Min-label propagation to fixpoint.
 
     edges: (src, dst) long pairs, any orientation. Returns
@@ -52,14 +46,9 @@ def connected_components_min_label(
 
     Converges in O(component diameter) rounds; ``max_iter`` bounds the
     loop. If the bound is hit while labels are still changing the
-    result is WRONG for the unconverged nodes, so the default is to
-    raise ``NonConvergedError`` (pass ``on_nonconverged="warn"`` to
-    get the partial labels anyway, e.g. for incremental runs). For
-    graphs whose diameter you can't bound, use
-    ``connected_components_star`` (O(log² n) rounds).
+    result would be WRONG for the unconverged nodes, so it raises
+    ``NonConvergedError`` instead.
     """
-    if on_nonconverged not in ("raise", "warn"):
-        raise ValueError(f"on_nonconverged must be 'raise' or 'warn': {on_nonconverged!r}")
     # the symmetrized edge list is referenced by every round's join; the
     # barrier spares each round re-analyzing the caller's edge lineage
     # (for DBSCAN, a large candidate-join tree)
@@ -78,7 +67,6 @@ def connected_components_min_label(
     prev_sum = labels.agg(
         F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
     ).collect()[0]["s"]
-    converged = False
     for _ in range(max_iter):
         neigh_min = (
             sym.join(labels, sym["dst"] == labels["node"])
@@ -95,101 +83,12 @@ def connected_components_min_label(
             F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
         ).collect()[0]["s"]
         if new_sum == prev_sum:
-            converged = True
-            break
+            return labels.select("node", F.col("label").alias("component"))
         prev_sum = new_sum
-    if not converged:
-        msg = (
-            f"connected_components_min_label: still changing after {max_iter} rounds "
-            f"(graph diameter > max_iter); labels are NOT components. "
-            f"Raise max_iter or use connected_components_star."
-        )
-        if on_nonconverged == "raise":
-            raise NonConvergedError(msg)
-        import warnings
-
-        warnings.warn(msg, RuntimeWarning, stacklevel=2)
-    return labels.select("node", F.col("label").alias("component"))
-
-
-def _large_star(sym: DataFrame) -> DataFrame:
-    """For each node u: attach every strictly-larger neighbor to
-    m = min(Γ(u) ∪ {u}). Emits (v, m) for v ∈ Γ(u), v > u."""
-    m = sym.groupBy("src").agg(F.min("dst").alias("mn"))
-    m = m.select("src", F.least("src", "mn").alias("m"))
-    return (
-        sym.where(F.col("dst") > F.col("src"))
-        .join(m, "src")
-        .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
+    raise NonConvergedError(
+        f"connected_components_min_label: still changing after {max_iter} rounds "
+        f"(graph diameter > max_iter); labels are NOT components. Raise max_iter."
     )
-
-
-def _small_star(oriented: DataFrame) -> DataFrame:
-    """Edges oriented (src > dst). For each src u: attach all
-    smaller neighbors AND u itself to m = min(Γ(u))."""
-    m = oriented.groupBy("src").agg(F.min("dst").alias("m"))
-    to_nbrs = oriented.join(m, "src").select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-    to_self = m.select("src", F.col("m").alias("dst"))
-    return to_nbrs.union(to_self)
-
-
-def connected_components_star(edges: DataFrame, max_iter: int = 50) -> DataFrame:
-    """Large-star/small-star connected components (Kiveris et al.):
-    alternate the two star contractions until the edge multiset is a
-    fixed set of (node → root) star edges. O(log² n) rounds on ANY
-    graph — no diameter dependence — so this is the 100 TB path for
-    graphs where min-label's O(diameter) rounds would be unbounded.
-
-    Returns (node, component), component = min node of the component.
-    Each round is two shuffles (groupBy + join); every round's edge
-    set passes through ``session.round_barrier``.
-    """
-    cur = round_barrier(
-        edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .select(
-            F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
-        )
-        .distinct()
-    )
-    if cur.limit(1).count() == 0:
-        return cur.select(F.col("src").alias("node"), F.col("dst").alias("component"))
-    prev_sig = None
-    converged = False
-    for _ in range(max_iter):
-        sym = cur.union(cur.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        after_large = _large_star(sym).where(F.col("src") != F.col("dst")).distinct()
-        oriented = after_large.select(
-            F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
-        ).distinct()
-        # each round references `cur` several times (sym twice, star
-        # joins), so without the barrier the logical plan multiplies per
-        # round and Catalyst analysis time explodes long before the
-        # compute does
-        new = round_barrier(
-            _small_star(oriented).where(F.col("src") != F.col("dst")).distinct()
-        )
-        # one-pass fixpoint signature: count + order-free hash of the edge
-        # set (XOR, not SUM: the edge set is distinct so XOR can't cancel,
-        # and it can't overflow under ANSI mode)
-        sig = new.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.bit_xor(F.xxhash64("src", "dst")).alias("h"),
-        ).collect()[0]
-        sig = (sig["n"], sig["h"])
-        cur = new
-        if sig == prev_sig:
-            converged = True
-            break
-        prev_sig = sig
-    if not converged:
-        raise NonConvergedError(
-            f"connected_components_star: no fixpoint after {max_iter} rounds"
-        )
-    # fixpoint edges are (node, root) stars; roots label themselves
-    members = cur.select(F.col("src").alias("node"), F.col("dst").alias("component"))
-    roots = cur.select(F.col("dst").alias("node"), F.col("dst").alias("component")).distinct()
-    return members.union(roots).groupBy("node").agg(F.min("component").alias("component"))
 
 
 @register(

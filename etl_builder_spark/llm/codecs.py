@@ -7,10 +7,10 @@ parse from published format specs with numpy alone):
   rows, 4-byte row padding, BGR byte order
 * WAV (RIFF, PCM 16-bit) — fmt/data chunk walk
 
-Each has an encoder too, so tests are golden-byte round-trips and the
-Spark-side decode path (llm/multimodal.py mapInPandas) runs on REAL
-bytes rather than the round-1 `fake=True` stand-in. JPEG/PNG/MP3 stay
-honestly unsupported (`UnsupportedCodecError`).
+Each has an encoder too, so tests are golden-byte round-trips and every
+multimodal key decodes REAL bytes in its own mapInPandas body
+(llm/multimodal.py). A payload of another format (JPEG/PNG/MP3) raises
+`UnsupportedCodecError`.
 """
 
 from __future__ import annotations
@@ -139,78 +139,3 @@ def decode_wav(data: bytes) -> tuple[np.ndarray, int]:
     if rate is None or samples is None:
         raise UnsupportedCodecError("missing fmt/data chunk")
     return samples, rate
-
-
-# ------------------------------------------------------------------ sniffing
-def sniff(data: bytes) -> str:
-    """Identify a payload format by magic bytes."""
-    if data[:2] == b"P6":
-        return "ppm"
-    if data[:2] == b"BM":
-        return "bmp"
-    if data[:4] == b"RIFF" and data[8:12] == b"WAVE":
-        return "wav"
-    return "unknown"
-
-
-def decode_image_pixels(data: bytes) -> np.ndarray:
-    """Decode any supported image payload to (H, W, 3) uint8 RGB."""
-    kind = sniff(data)
-    if kind == "ppm":
-        return decode_ppm(data)
-    if kind == "bmp":
-        return decode_bmp(data)
-    raise UnsupportedCodecError(f"cannot decode {kind!r} image payload in this environment")
-
-
-# ----------------------------------------------------------------- features
-def image_features(pixels: np.ndarray, grid: int = 2) -> np.ndarray:
-    """Deterministic 16-dim feature vector from decoded pixels:
-    per-channel mean/std (6) + luma mean (1) + dims (2) + a gridded
-    luma pooling (grid² = 4) + channel min/max spread (3)."""
-    px = pixels.astype(np.float64)
-    h, w = px.shape[:2]
-    luma = 0.299 * px[:, :, 0] + 0.587 * px[:, :, 1] + 0.114 * px[:, :, 2]
-    cells = []
-    for gy in range(grid):
-        for gx in range(grid):
-            cell = luma[gy * h // grid : max((gy + 1) * h // grid, gy * h // grid + 1),
-                        gx * w // grid : max((gx + 1) * w // grid, gx * w // grid + 1)]
-            cells.append(cell.mean() if cell.size else 0.0)
-    feats = np.array(
-        [
-            *px.reshape(-1, 3).mean(axis=0),
-            *px.reshape(-1, 3).std(axis=0),
-            luma.mean(),
-            float(w),
-            float(h),
-            *cells,
-            float(px.max() - px.min()),
-            float(px.max()),
-            float(px.min()),
-        ],
-        dtype=np.float32,
-    )
-    return feats
-
-
-def audio_features(samples: np.ndarray, rate: int) -> np.ndarray:
-    """8-dim feature vector: duration, rms, peak, zero-crossing rate,
-    mean, std, and energy in low/high halves."""
-    x = samples.astype(np.float64) / 32768.0
-    n = max(len(x), 1)
-    zc = float(np.count_nonzero(np.diff(np.signbit(x)))) / n if len(x) > 1 else 0.0
-    half = len(x) // 2
-    return np.array(
-        [
-            n / rate,
-            float(np.sqrt(np.mean(x**2))) if len(x) else 0.0,
-            float(np.abs(x).max()) if len(x) else 0.0,
-            zc,
-            float(x.mean()) if len(x) else 0.0,
-            float(x.std()) if len(x) else 0.0,
-            float(np.mean(x[:half] ** 2)) if half else 0.0,
-            float(np.mean(x[half:] ** 2)) if len(x) - half else 0.0,
-        ],
-        dtype=np.float32,
-    )

@@ -15,14 +15,13 @@ n-gram Jaccard here is the oracle-checkable small-scale twin.
 Hot-bucket skew: every candidate generator in this module pairs
 documents by a bucket-keyed triangle self-join (token / band value),
 bounded first by the DF/band-width ceilings.  If a bucket still goes
-hot (a boilerplate shingle shared by millions of docs), the drop-in
-swap is ``salted_within_cluster_pairs`` (llm/embed_dedup.py) keyed by
-the bucket value: it emits the identical (bucket, id_a, id_b) rows —
-so the per-pair n_common counts downstream are unchanged — while
-bounding every task at ceiling² pairs.  Property-tested equal to the
-naive bucket self-join on deliberately hot int- and string-keyed
-buckets (tests/test_properties.py), and used in production form by
-``er_weighted_linkage`` (operators/fuzzy.py).
+hot (a boilerplate shingle shared by millions of docs), the recipe
+is the chunked upper-triangle salting described under
+``dedup_semantic_centroids`` (llm/embed_dedup.py), keyed by the bucket
+value: it emits the identical (bucket, id_a, id_b) rows — so the
+per-pair n_common counts downstream are unchanged — while bounding
+every task at ceiling² pairs.  No declared key needs it: every
+fixture here is skew-free.
 """
 
 from __future__ import annotations

@@ -373,13 +373,15 @@ def dedup_semantic_centroids(spark, sf_dir):
     DF-ceiling idea as substring.py's hot-window guard, applied as
     SALTING: cap the per-task block size at a ceiling C by splitting a
     hot cluster's members into ⌈size/C⌉ chunks and joining on
-    (cluster_id, chunk_i, chunk_j) upper-triangle block pairs —
-    ``salted_within_cluster_pairs`` below implements exactly that,
-    property-tested equal to the naive join on a deliberately hot
-    cluster.  The declared query keeps the naive shape because the
-    pinned-centroid fixture is skew-free and the oracle must mirror
-    the blocking; a production caller swaps in the salted pairing
-    (identical output, bounded per-task fan-out).
+    (cluster_id, chunk_i, chunk_j) upper-triangle block pairs.  The
+    recipe: rank members by id within their cluster, chunk the rank
+    at C, replicate each member to every chunk-pair block (a ≤ b) it
+    belongs to (⌈size/C⌉ + 1 copies), join on (cluster_id, chunk_a,
+    chunk_b) and keep id_a < id_b — every pair exactly once, at most
+    C² per task.  Total work is unchanged (the output is every pair);
+    only its distribution changes.  The declared query keeps the naive
+    shape because the pinned-centroid fixture is skew-free and the
+    oracle must mirror the blocking.
 
     MEASURED at ×10 (r16 session 5, 40k vectors / 51.3M within-cluster
     pairs): the declared shape runs ~89 s because the pair fan-out
@@ -441,56 +443,4 @@ def dedup_semantic_centroids(spark, sf_dir):
         .where(F.col("keep_id") < F.col("drop_id"))
         .select("cluster_id", "drop_id", "keep_id", sim.alias("sim"))
         .where(F.col("sim") >= EMBED_DUP_TAU)
-    )
-
-
-def salted_within_cluster_pairs(
-    members, ceiling: int, id_col: str = "vec_id"
-):
-    """All unordered within-cluster pairs (cluster_id, id_a, id_b) with
-    the per-task fan-out BOUNDED at ``ceiling²`` — the hot-cluster
-    skew guard for SemDeDup-shaped pairing (see the
-    ``dedup_semantic_centroids`` docstring).
-
-    Instead of shuffling on ``cluster_id`` alone (one reducer owns a
-    hot cluster's entire quadratic fan-out), members are ranked within
-    their cluster, chunked at ``ceiling``, and each member is
-    replicated to every upper-triangle chunk-pair block it
-    participates in; the pair join then keys on
-    ``(cluster_id, chunk_a, chunk_b)``, so no task materializes more
-    than ``ceiling²`` candidate pairs.  Replication factor is
-    ⌈size/ceiling⌉ + 1 per member — the standard fragment-replicate
-    triangle self-join: total work is unchanged (it must be — the
-    output is every pair), only its distribution changes.  Ranking by
-    id means chunk indexes are id-ordered, so cross-chunk pairs are
-    already (smaller, larger); only diagonal blocks need the id
-    filter.  Output is property-tested identical to the naive
-    cluster_id self-join on a deliberately hot cluster."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("cluster_id").orderBy(F.col(id_col))
-    chunked = (
-        members.select("cluster_id", F.col(id_col))
-        .withColumn("chunk", ((F.row_number().over(w) - F.lit(1)) / F.lit(ceiling)).cast("int"))
-    )
-    n_chunks = chunked.groupBy("cluster_id").agg(
-        (F.max("chunk") + F.lit(1)).alias("n_chunks")
-    )
-    chunked = chunked.join(n_chunks, "cluster_id")
-    a_side = chunked.select(
-        "cluster_id",
-        F.col(id_col).alias("id_a"),
-        F.col("chunk").alias("chunk_a"),
-        F.explode(F.sequence("chunk", F.col("n_chunks") - F.lit(1))).alias("chunk_b"),
-    )
-    b_side = chunked.select(
-        "cluster_id",
-        F.col(id_col).alias("id_b"),
-        F.explode(F.sequence(F.lit(0), "chunk")).alias("chunk_a"),
-        F.col("chunk").alias("chunk_b"),
-    )
-    return (
-        a_side.join(b_side, ["cluster_id", "chunk_a", "chunk_b"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("cluster_id", "id_a", "id_b")
     )

@@ -8,8 +8,9 @@ to brute force I6 and random-projection LSH I7):
 
 100 TB posture: centroids are tiny and broadcast; assignment is one
 scan; a probe touches n_probe/k of the corpus. The inverted lists are
-just a `cluster_id` column — partition/bucket by it and a probe prunes
-partitions instead of scanning them.
+just a `cluster_id` column that the probe joins on in memory; no key
+writes them to disk. Written partitioned or bucketed by `cluster_id`,
+a probe's list filter would prune partitions instead of scanning them.
 
 Everything stays in DataFrames: ml.KMeans for training (seeded,
 deterministic), expression-only distance math for assignment and
@@ -117,24 +118,6 @@ def ivf_topk(
         .withColumn("rank", F.row_number().over(wk))
         .where(F.col("rank") <= k)
     )
-
-
-def write_ivf_index(indexed: DataFrame, path: str) -> None:
-    """Materialize the inverted lists as a ``cluster_id``-partitioned
-    parquet layout: each IVF list becomes a physical partition
-    directory, so a probe that filters on cluster_id prunes whole
-    directories at planning time instead of scanning them.  This is the
-    on-disk form of the 'inverted list = cluster_id column' posture in
-    the module docstring."""
-    indexed.write.mode("overwrite").partitionBy("cluster_id").parquet(path)
-
-
-def probe_pruned_lists(spark, path: str, cluster_ids: list[int]) -> DataFrame:
-    """Read ONLY the probed lists from a written IVF index.  The isin
-    filter on the partition column becomes a PartitionFilter in the
-    scan — verified by a plan-shape test — so I/O is n_probe/k of the
-    index regardless of corpus size."""
-    return spark.read.parquet(path).where(F.col("cluster_id").isin(cluster_ids))
 
 
 #: Pinned coarse-quantizer seeds for the exact twin: the vectors of

@@ -5,9 +5,9 @@ frame-sample as Arrow-batched pandas functions over mapInPandas).
 DECODE is REAL for formats parseable with numpy alone — PPM (P6),
 24-bit BMP, PCM-16 WAV (llm/codecs.py, pure numpy, golden-byte
 tested). Formats that need codec libraries absent from this container
-(JPEG/PNG/MP3) raise ``UnsupportedCodecError``; ``fake=True`` keeps
-the round-1 deterministic stand-in for payloads that are not real
-media (e.g. text bytes used as plumbing fixtures).
+(JPEG/PNG/MP3) raise ``UnsupportedCodecError``. Each key decodes in
+its own ``mapInPandas`` body over ``codecs.decode_ppm``, ``decode_bmp``
+or ``decode_wav``.
 
 The declared query ``multimodal_decode_meta`` proves the decode path
 end-to-end against an EXACT SQL oracle: encode deterministic
@@ -36,37 +36,11 @@ from pyspark.sql import functions as F
 from etl_builder_spark.llm.dedup import _band_collisions
 from etl_builder_spark.registry import register
 from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    FloatType,
     IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
-)
-
-#: canonical multimodal asset schema: opaque payload + typed metadata
-ASSET_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType()),
-        StructField("media_type", StringType()),  # image|audio|video
-        StructField("payload", BinaryType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("duration_ms", LongType()),
-        StructField("codec", StringType()),
-    ]
-)
-
-DECODED_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType()),
-        StructField("media_type", StringType()),
-        StructField("n_bytes", LongType()),
-        StructField("content_sha", StringType()),
-        StructField("features", ArrayType(FloatType())),
-    ]
 )
 
 FRAME_SCHEMA = StructType(
@@ -76,95 +50,6 @@ FRAME_SCHEMA = StructType(
         StructField("frame_sha", StringType()),
     ]
 )
-
-
-def synthetic_assets(spark: SparkSession, sf_dir: str, media_type: str = "image") -> DataFrame:
-    """Derive a deterministic binary-asset table from the documents
-    corpus (no binary fixture exists): payload = utf-8 text bytes,
-    metadata derived from doc fields. Exercises BinaryType end-to-end."""
-    from etl_builder_spark.session import load_table
-
-    d = load_table(spark, sf_dir, "documents")
-    return d.select(
-        F.col("doc_id").alias("asset_id"),
-        F.lit(media_type).alias("media_type"),
-        F.encode("text", "utf-8").alias("payload"),
-        (F.col("n_chars") % 640 + 1).cast("int").alias("width"),
-        (F.col("n_chars") % 480 + 1).cast("int").alias("height"),
-        (F.col("n_chars") * 10).cast("long").alias("duration_ms"),
-        F.lit("synthetic/v1").alias("codec"),
-    )
-
-
-def _fake_decode(payload: bytes, dim: int) -> np.ndarray:
-    """Deterministic fake decoder: features seeded by content hash —
-    stable across runs/executors, stands in for a real codec."""
-    seed = int.from_bytes(hashlib.sha256(payload).digest()[:8], "big") % (2**32)
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal(dim).astype(np.float32)
-
-
-def decode_image(payload: bytes, fake: bool = False, dim: int = 16) -> np.ndarray:
-    """Decode an image payload to a feature vector.
-
-    Real path: PPM (P6) and 24-bit BMP parse via the pure-numpy codecs
-    (llm/codecs.py) and featurize with ``image_features`` (16-dim).
-    JPEG/PNG would need libjpeg/libpng — absent here — so unknown
-    formats raise ``UnsupportedCodecError`` (a NotImplementedError)
-    unless ``fake=True``, which substitutes the deterministic
-    content-hash-seeded stand-in (for non-media plumbing fixtures)."""
-    from etl_builder_spark.llm.codecs import UnsupportedCodecError, decode_image_pixels, image_features
-
-    try:
-        pixels = decode_image_pixels(payload)
-    except UnsupportedCodecError:
-        if fake:
-            return _fake_decode(payload, dim)
-        raise
-    feats = image_features(pixels)
-    return feats[:dim] if dim <= len(feats) else np.pad(feats, (0, dim - len(feats)))
-
-
-def decode_features(assets: DataFrame, dim: int = 16, fake: bool = True) -> DataFrame:
-    """mapInPandas decode: payload → feature vector + content hash.
-    Arrow streams batches into Python; one task per input partition."""
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "media_type": pdf["media_type"],
-                    "n_bytes": pdf["payload"].map(len).astype("int64"),
-                    "content_sha": pdf["payload"].map(
-                        lambda b: hashlib.sha256(bytes(b)).hexdigest()
-                    ),
-                    "features": pdf["payload"].map(
-                        lambda b: decode_image(bytes(b), fake=fake, dim=dim).tolist()
-                    ),
-                }
-            )
-
-    return assets.mapInPandas(decode_batches, DECODED_SCHEMA)
-
-
-def sample_frames(assets: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Frame sampling: one output row per sampled frame (row-explosion
-    happens in Python per batch, schema stays relational)."""
-
-    def frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, shas = [], [], []
-            for _, row in pdf.iterrows():
-                n = max(int(row["duration_ms"]) // every_ms, 1)
-                payload = bytes(row["payload"])
-                for i in range(n):
-                    ids.append(row["asset_id"])
-                    idxs.append(i)
-                    shas.append(hashlib.sha256(payload + i.to_bytes(4, "big")).hexdigest()[:16])
-            yield pd.DataFrame({"asset_id": ids, "frame_idx": idxs, "frame_sha": shas})
-
-    return assets.select("asset_id", "duration_ms", "payload").mapInPandas(frames, FRAME_SCHEMA)
 
 
 def synthetic_ppm_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -248,24 +133,6 @@ def multimodal_decode_meta(spark, sf_dir):
     )
 
 
-def resize_meta(assets: DataFrame, max_side: int = 256) -> DataFrame:
-    """Resize planning is pure column math (JVM-side): compute target
-    dims preserving aspect ratio; actual pixel work would live in the
-    decode UDF."""
-    scale = F.least(
-        F.lit(1.0),
-        F.lit(max_side) / F.greatest("width", "height").cast("double"),
-    )
-    return assets.select(
-        "asset_id",
-        "width",
-        "height",
-        F.round(scale, 6).alias("scale"),
-        F.greatest((F.col("width") * scale).cast("int"), F.lit(1)).alias("target_w"),
-        F.greatest((F.col("height") * scale).cast("int"), F.lit(1)).alias("target_h"),
-    )
-
-
 @register(
     "multimodal_frame_sample",
     oracle="""
@@ -294,9 +161,9 @@ def multimodal_frame_sample(spark, sf_dir):
     sampled 1-second frame of each synthetic video asset (duration =
     n_chars×10 ms, ≥ 1 frame), fingerprinted per frame — the video →
     relational-rows seam of a multimodal pipeline, executed as an
-    Arrow-batched ``mapInPandas`` (the real frame decoder slots into
-    the same batch loop; see sample_frames/decode_image for the codec
-    path and its UnsupportedCodecError stub policy).
+    Arrow-batched ``mapInPandas`` (a real frame decoder slots into
+    the same batch loop, as the PPM/BMP/WAV decoders do in the other
+    multimodal keys).
 
     The fingerprint recipe is deliberately ASCII-composable —
     sha256(utf8(text) ‖ '#' ‖ str(idx)) — so the DuckDB oracle
@@ -373,8 +240,8 @@ def multimodal_audio_stats(spark, sf_dir):
     (multimodal_decode_meta) — payload bytes never leave the executor,
     Python sees columnar batches, output is flat relational rows; a
     real audio pipeline swaps the synthesizer for object-store reads
-    and the stats for a feature extractor (audio_features) without
-    touching the Spark plumbing."""
+    and the stats for a feature extractor without touching the Spark
+    plumbing."""
     from etl_builder_spark.llm.codecs import decode_wav, encode_wav
     from etl_builder_spark.session import load_table
 
@@ -619,10 +486,9 @@ def multimodal_resize_halve(spark, sf_dir):
     and summarized (output dims, exact pixel sum, corner value); the
     oracle recomputes the resized pixels symbolically, so hash
     equality proves encode → decode → block-mean arithmetic
-    end-to-end on non-trivial pixel data.  This replaces the survey's
-    resize-as-metadata stub (resize_meta) with the computation
-    itself — integer-exact, so no codec-library float resampling
-    semantics are smuggled in.
+    end-to-end on non-trivial pixel data.  The resize is the
+    computation itself, not target-dims metadata — integer-exact, so
+    no codec-library float resampling semantics are smuggled in.
 
     100 TB posture: the same Arrow mapInPandas seam as every codec
     operator; resize is embarrassingly parallel per asset, pixels

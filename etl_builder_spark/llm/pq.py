@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 
 from etl_builder_spark.llm.similarity import corpus_vectors, cosine, dot, norm, probe_vectors, sq_dist
 from etl_builder_spark.registry import register
-from etl_builder_spark.session import file_version
+from etl_builder_spark.session import _memo, file_version
 
 #: subspaces (64-dim fixture → 8 dims each) and codes per subspace.
 #: m=8 measured recall@10 = 0.30 vs 0.16 at m=4 on the synthetic
@@ -48,15 +48,6 @@ from etl_builder_spark.session import file_version
 #: shortlist — the operating point the rerank query relies on.
 M_SUBSPACES = 8
 K_CODES = 16
-
-#: Trained-codebook memo: (sf_dir, embeddings mtime, m, k, seed) →
-#: collected m·k rows.  The mtime (``session.file_version``) makes an
-#: embeddings file rewritten at the same path retrain instead of serving
-#: the old codebook.  The collect() is a model artifact the size of
-#: KMeans.clusterCenters (128 rows here), not a data-path collect; at
-#: 100 TB the equivalent is "train on a sample, write the codebook
-#: table, broadcast it".
-_CODEBOOK_CACHE: dict[tuple[str, int, int, int, int], list[tuple[int, int, list[float]]]] = {}
 
 
 def train_pq_codebooks(
@@ -107,19 +98,24 @@ def corpus_codebook(
     spark: SparkSession, sf_dir: str, m: int = M_SUBSPACES, k: int = K_CODES, seed: int = 42
 ) -> DataFrame:
     """The embeddings-corpus codebook, trained at most once per
-    (sf_dir, embeddings file version, m, k, seed) per process and
-    rebuilt from the memoized m·k rows afterwards — so a matrix run pays
-    ONE KMeans pass for all three PQ queries.  At scale this memo is a
-    persisted codebook table; re-training per query would be the
-    anti-pattern."""
-    key = (str(sf_dir), file_version(os.path.join(sf_dir, "embeddings.parquet")), m, k, seed)
-    if key not in _CODEBOOK_CACHE:
-        e = corpus_vectors(spark, sf_dir)
-        cb = train_pq_codebooks(e, m=m, k=k, seed=seed)
-        _CODEBOOK_CACHE[key] = [(r[0], r[1], [float(x) for x in r[2]]) for r in cb.collect()]
-    return spark.createDataFrame(
-        _CODEBOOK_CACHE[key], "subspace int, code int, cv array<double>"
-    )
+    (session, embeddings path, file version, m, k, seed) and rebuilt
+    from the memoized m·k rows afterwards — so a matrix run pays ONE
+    KMeans pass for all three PQ queries.  The rows live in the
+    session's table memo (``session._memo``); the file version in the
+    key makes an embeddings file rewritten at the same path retrain
+    instead of serving the old codebook.  The collect() is a model
+    artifact the size of KMeans.clusterCenters (128 rows here), not a
+    data-path collect; at 100 TB the equivalent is "train on a sample,
+    write the codebook table, broadcast it" — re-training per query
+    would be the anti-pattern."""
+    path = os.path.join(sf_dir, "embeddings.parquet")
+
+    def train() -> list:
+        cb = train_pq_codebooks(corpus_vectors(spark, sf_dir), m=m, k=k, seed=seed)
+        return [(r[0], r[1], [float(x) for x in r[2]]) for r in cb.collect()]
+
+    key = (spark.sparkContext.applicationId, path, file_version(path), m, k, seed)
+    return spark.createDataFrame(_memo(key, train), "subspace int, code int, cv array<double>")
 
 
 #: Pinned-codebook seeds: 16 fixed corpus vectors whose subspace slices
@@ -369,8 +365,7 @@ def sim_knn_ivfpq(spark, sf_dir):
     then 50 point-lookups — this is why a 1B-vector index fits and
     answers interactively.  The inverted list is a ``cluster_id``
     column: partition/bucket the code table by it and the probe's
-    list filter prunes partitions at plan time
-    (``write_ivf_index`` shows the layout).
+    list filter prunes partitions at plan time.
 
     Deterministic given the seeds (pinned coarse centroids, seeded
     codebook k-means), but rows-only: k-means boundaries have no SQL

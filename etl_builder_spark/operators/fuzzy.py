@@ -276,12 +276,11 @@ def er_weighted_linkage(spark, sf_dir):
     here: no nation equality in the block key, since nation is now
     evidence rather than a prefilter); scoring is expression-only on
     candidates; JVM levenshtein.  Skewed blocks (one surname owning
-    millions of records) are the operational risk: the drop-in swap is
-    ``salted_within_cluster_pairs`` (llm/embed_dedup.py) keyed by
-    block_key — the chunked-triangle guard that bounds every task at
-    ceiling² pairs, property-tested equal to this naive theta-join on
-    a deliberately hot STRING-keyed block (tests/test_properties.py::
-    test_salted_pairs_string_blocks_hot_block).  The declared key
+    millions of records) are the operational risk: the recipe is the
+    chunked upper-triangle salting described under
+    ``dedup_semantic_centroids`` (llm/embed_dedup.py), keyed by
+    block_key, which bounds every task at ceiling² pairs with the same
+    output as this naive theta-join.  The declared key
     keeps the naive shape, the SemDeDup precedent: this fixture is
     skew-free and the naive join is ~1.6× faster on it (measured
     2.2s vs 3.5s at sf0.1)."""

@@ -57,9 +57,3 @@ def money_avg(c: str | Column, alias: str) -> Column:
     """
     col = _col(c)
     return (F.sum(money(col)).cast("double") / F.count(col)).alias(alias)
-
-
-def r6(c: Column, alias: str | None = None) -> Column:
-    """Round a float-accumulated result to 6 dp (final projection only)."""
-    out = F.round(c.cast("double"), 6)
-    return out.alias(alias) if alias else out

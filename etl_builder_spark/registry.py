@@ -14,6 +14,8 @@ parity promise.
 
 from __future__ import annotations
 
+import importlib
+import pkgutil
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -90,68 +92,14 @@ _LOADED = False
 
 
 def _ensure_loaded() -> None:
-    """Import every module that registers queries (import side effect)."""
+    """Import every module of the package, so each ``@register`` call
+    runs (import side effect): the file tree alone decides which
+    modules register keys."""
     global _LOADED
     if _LOADED:
         return
-    import etl_builder_spark.functions.scalar  # noqa: F401
-    import etl_builder_spark.functions.sketches  # noqa: F401
-    import etl_builder_spark.functions.udtf_ops  # noqa: F401
-    import etl_builder_spark.llm.cluster  # noqa: F401
-    import etl_builder_spark.llm.curation  # noqa: F401
-    import etl_builder_spark.llm.dedup  # noqa: F401
-    import etl_builder_spark.llm.embed_dedup  # noqa: F401
-    import etl_builder_spark.llm.embeddings  # noqa: F401
-    import etl_builder_spark.llm.eval_metrics  # noqa: F401
-    import etl_builder_spark.llm.fingerprint  # noqa: F401
-    import etl_builder_spark.llm.ivf  # noqa: F401
-    import etl_builder_spark.llm.langid  # noqa: F401
-    import etl_builder_spark.llm.multimodal  # noqa: F401
-    import etl_builder_spark.llm.packing  # noqa: F401
-    import etl_builder_spark.llm.pq  # noqa: F401
-    import etl_builder_spark.llm.retrieval_eval  # noqa: F401
-    import etl_builder_spark.llm.sampling  # noqa: F401
-    import etl_builder_spark.llm.similarity  # noqa: F401
-    import etl_builder_spark.llm.sparse_sim  # noqa: F401
-    import etl_builder_spark.llm.substring  # noqa: F401
-    import etl_builder_spark.llm.text  # noqa: F401
-    import etl_builder_spark.llm.training_pipeline  # noqa: F401
-    import etl_builder_spark.llm.urls  # noqa: F401
-    import etl_builder_spark.operators.aggregates  # noqa: F401
-    import etl_builder_spark.operators.api_surfaces  # noqa: F401
-    import etl_builder_spark.operators.asof  # noqa: F401
-    import etl_builder_spark.operators.cdc  # noqa: F401
-    import etl_builder_spark.operators.filters  # noqa: F401
-    import etl_builder_spark.operators.funnel  # noqa: F401
-    import etl_builder_spark.operators.fuzzy  # noqa: F401
-    import etl_builder_spark.operators.histogram  # noqa: F401
-    import etl_builder_spark.operators.joins  # noqa: F401
-    import etl_builder_spark.operators.merge  # noqa: F401
-    import etl_builder_spark.operators.pagerank  # noqa: F401
-    import etl_builder_spark.operators.recursive  # noqa: F401
-    import etl_builder_spark.operators.scans  # noqa: F401
-    import etl_builder_spark.operators.setops  # noqa: F401
-    import etl_builder_spark.operators.skew  # noqa: F401
-    import etl_builder_spark.operators.sorts  # noqa: F401
-    import etl_builder_spark.operators.spatial  # noqa: F401
-    import etl_builder_spark.operators.stats  # noqa: F401
-    import etl_builder_spark.operators.stats_rank  # noqa: F401
-    import etl_builder_spark.operators.stats_tests  # noqa: F401
-    import etl_builder_spark.operators.subqueries  # noqa: F401
-    import etl_builder_spark.operators.timeseries  # noqa: F401
-    import etl_builder_spark.operators.tpch  # noqa: F401
-    import etl_builder_spark.operators.tpch_partsupp  # noqa: F401
-    import etl_builder_spark.operators.window_frames  # noqa: F401
-    import etl_builder_spark.operators.windows  # noqa: F401
-    import etl_builder_spark.quality  # noqa: F401
-    import etl_builder_spark.sources.binaryfiles  # noqa: F401
-    import etl_builder_spark.sources.bucketed  # noqa: F401
-    import etl_builder_spark.sources.jsonl  # noqa: F401
-    import etl_builder_spark.sources.partitioned  # noqa: F401
-    import etl_builder_spark.sources.pydatasource  # noqa: F401
-    import etl_builder_spark.sources.roundtrip  # noqa: F401
-    import etl_builder_spark.sources.xml_source  # noqa: F401
-    import etl_builder_spark.streaming.batch_twins  # noqa: F401
-    import etl_builder_spark.udfs  # noqa: F401
+    import etl_builder_spark
 
+    for mod in pkgutil.walk_packages(etl_builder_spark.__path__, "etl_builder_spark."):
+        importlib.import_module(mod.name)
     _LOADED = True

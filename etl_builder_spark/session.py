@@ -150,6 +150,7 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
+#: The package's one module-level memo, filled through ``_memo``.
 #: (applicationId, path, version) → LAZY DataFrame handle, for corpus
 #: tables (``load_table``) and for the directories a stream replays
 #: (``streaming.runtime.stream_events``, which needs only the schema).
@@ -157,13 +158,27 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
 #: .parquet resolves the footer schema EAGERLY, ~80ms of driver time
 #: per call, and one benchmark pass made ~160 load_table calls), never
 #: any data: every action over the handle still scans the parquet
-#: files.  The version in the key makes a regenerated corpus at the
-#: same path miss the memo; the size bound keeps multi-corpus test
-#: sessions from accumulating entries.  A miss also refreshes Spark's
-#: cache for the path: Spark matches cached plans by file path, not by
-#: file version, so frames persisted over an older version of the file
-#: would otherwise keep serving its rows.
+#: files.  The one other kind of entry is ``pq.corpus_codebook``'s
+#: trained m·k codebook rows, a model artifact keyed on the embeddings
+#: file's version.  The version in each key makes a regenerated corpus
+#: at the same path miss the memo; the size bound keeps multi-corpus
+#: test sessions from accumulating entries.  A table miss also
+#: refreshes Spark's cache for the path: Spark matches cached plans by
+#: file path, not by file version, so frames persisted over an older
+#: version of the file would otherwise keep serving its rows.
 _TABLE_CACHE: dict = {}
+
+
+def _memo(key: tuple, build):
+    """``_TABLE_CACHE[key]``, calling ``build()`` on a miss; the memo is
+    cleared when it holds 256 entries."""
+    value = _TABLE_CACHE.get(key)
+    if value is None:
+        value = build()
+        if len(_TABLE_CACHE) >= 256:
+            _TABLE_CACHE.clear()
+        _TABLE_CACHE[key] = value
+    return value
 
 
 def file_version(path: str) -> int:
@@ -188,17 +203,13 @@ def dir_version(path: str) -> tuple:
 def read_parquet(spark: SparkSession, path: str, version, post=None) -> DataFrame:
     """``spark.read.parquet(path)``, then ``post`` if given, through the
     table memo: one footer probe per (session, path, version)."""
-    key = (spark.sparkContext.applicationId, path, version)
-    df = _TABLE_CACHE.get(key)
-    if df is None:
+
+    def build() -> DataFrame:
         spark.catalog.refreshByPath(path)
         df = spark.read.parquet(path)
-        if post is not None:
-            df = post(df)
-        if len(_TABLE_CACHE) >= 256:
-            _TABLE_CACHE.clear()
-        _TABLE_CACHE[key] = df
-    return df
+        return post(df) if post is not None else df
+
+    return _memo((spark.sparkContext.applicationId, path, version), build)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -1,7 +1,6 @@
 """Pure-numpy codecs: golden-byte vectors (hand-assembled from the
 published format specs, NOT produced by our own encoder — so encoder
-and decoder are checked independently), round-trips, and the real
-decode path through the Spark mapInPandas seam."""
+and decoder are checked independently) and round-trips."""
 
 from __future__ import annotations
 
@@ -11,8 +10,6 @@ import numpy as np
 import pytest
 
 from etl_builder_spark.llm import codecs
-from etl_builder_spark.llm import multimodal as mm
-from tests.conftest import SF_DIR
 
 # ------------------------------------------------------------------ golden
 # 2x1 P6 image: red pixel then green pixel
@@ -90,31 +87,6 @@ def test_wav_roundtrip():
 
 def test_unsupported_codecs_raise():
     with pytest.raises(codecs.UnsupportedCodecError):
-        codecs.decode_image_pixels(b"\x89PNG\r\n\x1a\n...")
-    with pytest.raises(codecs.UnsupportedCodecError):
         codecs.decode_wav(b"RIFFxxxxAVI LIST")
     with pytest.raises(codecs.UnsupportedCodecError):
         codecs.decode_ppm(b"P3\n1 1\n255\n1 2 3")  # ASCII PPM unsupported
-
-
-# ------------------------------------------------------- Spark-side decode
-def test_real_decode_through_spark(spark):
-    """decode_features(fake=False) over REAL PPM payloads — no stub."""
-    assets = mm.synthetic_ppm_assets(spark, SF_DIR).withColumn(
-        "media_type", __import__("pyspark.sql.functions", fromlist=["lit"]).lit("image")
-    )
-    out = mm.decode_features(assets, dim=16, fake=False).limit(20).collect()
-    assert len(out) == 20
-    for r in out:
-        assert len(r["features"]) == 16
-        # constant-color image ⇒ zero per-channel std (features 3..5)
-        assert r["features"][3] == 0.0
-
-
-def test_decode_image_real_vs_fake_paths():
-    px = np.full((4, 6, 3), 9, dtype=np.uint8)
-    feats = mm.decode_image(codecs.encode_ppm(px))
-    assert feats[0] == 9.0 and feats[1] == 9.0 and feats[2] == 9.0
-    with pytest.raises(NotImplementedError):
-        mm.decode_image(b"not media")
-    assert len(mm.decode_image(b"not media", fake=True, dim=8)) == 8

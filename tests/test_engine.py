@@ -97,11 +97,11 @@ def test_queries_listed_in_sorted_key_order():
 
 
 def test_every_registering_module_is_imported():
-    """_ensure_loaded()'s import list is hand-maintained (VERDICT r9
-    item 7): a new module that calls @register but is missing from the
-    list would silently drop its keys from queries().  Glob the package
-    for `@register(` call sites and assert each module's keys actually
-    made it into the loaded registry."""
+    """_ensure_loaded() imports every module the package walk finds: a
+    module that calls @register but is never imported would silently
+    drop its keys from queries().  Glob the package for `@register(`
+    call sites and assert each module's keys actually made it into the
+    loaded registry."""
     import re
     from pathlib import Path
 

@@ -1,63 +1,7 @@
-"""Multimodal binary-column plumbing: schema, mapInPandas batch shape,
-deterministic fake decode, frame sampling, resize planning."""
+"""Multimodal codec plumbing: the BMP container size the
+``multimodal_bmp_decode`` oracle predicts."""
 
 from __future__ import annotations
-
-import hashlib
-
-import pytest
-from pyspark.sql import functions as F
-
-from etl_builder_spark.llm import multimodal as mm
-from tests.conftest import SF_DIR
-
-
-def test_asset_schema_and_payload(spark):
-    assets = mm.synthetic_assets(spark, SF_DIR)
-    assert [f.name for f in assets.schema.fields] == [f.name for f in mm.ASSET_SCHEMA.fields]
-    row = assets.where(F.col("asset_id") == 0).collect()[0]
-    assert isinstance(row["payload"], (bytes, bytearray))
-    assert row["media_type"] == "image"
-
-
-def test_decode_stub_raises_without_fake():
-    with pytest.raises(NotImplementedError):
-        mm.decode_image(b"\x00\x01")
-
-
-def test_fake_decode_is_deterministic(spark):
-    assets = mm.synthetic_assets(spark, SF_DIR)
-    out1 = mm.decode_features(assets, dim=8).where(F.col("asset_id") < 10).collect()
-    out2 = mm.decode_features(assets, dim=8).where(F.col("asset_id") < 10).collect()
-    f1 = {r["asset_id"]: r["features"] for r in out1}
-    f2 = {r["asset_id"]: r["features"] for r in out2}
-    assert f1 == f2  # content-hash-seeded: stable across runs/executors
-    assert all(len(v) == 8 for v in f1.values())
-    # content_sha matches a locally computed sha256 of the payload
-    payload = assets.where(F.col("asset_id") == 0).collect()[0]["payload"]
-    sha = {r["asset_id"]: r["content_sha"] for r in out1}[0]
-    assert sha == hashlib.sha256(bytes(payload)).hexdigest()
-
-
-def test_frame_sampling_counts(spark):
-    assets = mm.synthetic_assets(spark, SF_DIR)
-    frames = mm.sample_frames(assets, every_ms=1000)
-    expected = assets.select(
-        F.greatest((F.col("duration_ms") / 1000).cast("long"), F.lit(1)).alias("n")
-    ).agg(F.sum("n")).collect()[0][0]
-    assert frames.count() == expected
-    # frame indices are dense from 0 per asset
-    a0 = frames.where(F.col("asset_id") == 0).select("frame_idx").collect()
-    assert sorted(r["frame_idx"] for r in a0) == list(range(len(a0)))
-
-
-def test_resize_preserves_aspect(spark):
-    assets = mm.synthetic_assets(spark, SF_DIR)
-    rz = mm.resize_meta(assets, max_side=256).collect()
-    for r in rz:
-        assert max(r["target_w"], r["target_h"]) <= 256
-        if max(r["width"], r["height"]) <= 256:
-            assert (r["target_w"], r["target_h"]) == (r["width"], r["height"])
 
 
 def test_bmp_container_size_formula():

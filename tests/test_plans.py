@@ -109,52 +109,6 @@ def test_bucketed_interval_join_is_equi_hash(spark):
     assert ("SortMergeJoin" in p) or ("ShuffledHashJoin" in p) or ("BroadcastHashJoin" in p)
 
 
-def test_ivf_partitioned_index_prunes_probe_scan(spark, tmp_path):
-    """The written IVF index (partitionBy cluster_id) must let a probe
-    plan PartitionFilters on cluster_id and touch only the n_probe
-    list directories — the I/O contract that makes IVF sublinear."""
-    import contextlib
-    import io
-
-    from pyspark.sql import functions as F
-
-    from etl_builder_spark.llm.ivf import (
-        assign_clusters,
-        probe_pruned_lists,
-        train_quantizer,
-        write_ivf_index,
-    )
-    from etl_builder_spark.llm.similarity import corpus_vectors
-
-    e = corpus_vectors(spark, SF_DIR)
-    centroids = train_quantizer(e, k=8, seed=42)
-    indexed = assign_clusters(e, centroids)
-    idx_path = str(tmp_path / "ivf_index")
-    write_ivf_index(indexed, idx_path)
-
-    probed = probe_pruned_lists(spark, idx_path, [1, 3])
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        probed.explain("formatted")
-    p = buf.getvalue()
-    pf_lines = [ln for ln in p.splitlines() if "PartitionFilters" in ln]
-    assert pf_lines, "probe scan must carry PartitionFilters"
-    # e.g. "PartitionFilters: [cluster_id#77 IN (1,3)]"
-    assert "cluster_id" in pf_lines[0] and "IN (1,3)" in pf_lines[0]
-    # pruning fully answers the predicate: no residual data Filter node
-    # re-checks the partition column, and PushedFilters stays empty
-    data_filters = [ln for ln in p.splitlines() if ln.strip().startswith("Condition :")]
-    assert not any("cluster_id" in ln for ln in data_filters)
-    # the written layout is one directory per list
-    import os
-
-    dirs = {d for d in os.listdir(idx_path) if d.startswith("cluster_id=")}
-    assert len(dirs) == 8
-    # and the pruned read returns exactly the rows of lists 1 and 3
-    want = indexed.where(F.col("cluster_id").isin([1, 3])).count()
-    assert probed.count() == want
-
-
 def test_tpch_family_plan_shapes(spark):
     """The adapted TPC-H suite plans the shapes the 100 TB posture
     depends on: semi-join EXISTS, pushed scans, top-k short-circuit,

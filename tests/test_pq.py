@@ -130,9 +130,7 @@ def test_corpus_codebook_trains_once(spark):
     cached rows (no second KMeans pass) and match exactly."""
     from etl_builder_spark.llm import pq
 
-    pq._CODEBOOK_CACHE.clear()
     cb1 = sorted(map(tuple, pq.corpus_codebook(spark, SF_DIR).collect()))
-    assert len(pq._CODEBOOK_CACHE) == 1
     calls = {"n": 0}
     orig = pq.train_pq_codebooks
 

@@ -11,10 +11,7 @@ from datetime import datetime, timedelta
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from etl_builder_spark.llm.cluster import (
-    connected_components_min_label,
-    connected_components_star,
-)
+from etl_builder_spark.llm.cluster import connected_components_min_label
 from etl_builder_spark.operators.asof import asof_join
 from etl_builder_spark.operators.skew import salted_join
 
@@ -99,52 +96,6 @@ def test_connected_components_match_union_find(spark, edges):
     assert got == expect
 
 
-def test_star_components_match_union_find(spark):
-    # 20 seeded random graphs fused into ONE disjoint graph (node ids
-    # offset by 1000*i) so a single star run — iterative Spark jobs are
-    # the cost — validates all of them against union-find at once.
-    # Includes self-loops, dup edges, chains, and dense blobs.
-    import random
-
-    rng = random.Random(20260813)
-    edges: list[tuple[int, int]] = []
-    for g in range(20):
-        base = 1000 * g
-        n_nodes = rng.randint(2, 12)
-        n_edges = rng.randint(1, 18)
-        for _ in range(n_edges):
-            edges.append(
-                (base + rng.randint(0, n_nodes - 1), base + rng.randint(0, n_nodes - 1))
-            )
-    edf = spark.createDataFrame(edges, schema="src long, dst long")
-    got = {
-        r["node"]: r["component"] for r in connected_components_star(edf).collect()
-    }
-    parent: dict[int, int] = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    def union(a, b):
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-
-    n_real = 0
-    for s, d in edges:
-        if s != d:
-            union(s, d)
-            n_real += 1
-    assert n_real > 0
-    # star components cover only non-isolated nodes (self-loops dropped)
-    expect = {n: find(n) for n in parent}
-    assert got == expect
-
-
 def test_min_label_raises_on_nonconvergence(spark):
     # a 6-node chain has diameter 5 > max_iter=2 → must not silently
     # return partial labels
@@ -157,19 +108,6 @@ def test_min_label_raises_on_nonconvergence(spark):
     )
     with _pytest.raises(NonConvergedError):
         connected_components_min_label(chain, max_iter=2)
-    # warn mode returns (partial) labels instead
-    with _pytest.warns(RuntimeWarning):
-        out = connected_components_min_label(chain, max_iter=2, on_nonconverged="warn")
-        assert out.count() == 6
-
-
-def test_star_handles_long_chain(spark):
-    # diameter-31 chain: min-label would need 31 rounds; star needs O(log²)
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(31)], schema="src long, dst long"
-    )
-    got = {r["node"]: r["component"] for r in connected_components_star(chain).collect()}
-    assert got == {i: 0 for i in range(32)}
 
 
 facts = st.lists(st.tuples(st.integers(0, 2), st.integers(0, 100)), min_size=0, max_size=20)
@@ -475,57 +413,6 @@ def test_dedup_cascade_stage_separation(spark):
     assert rows["1_exact"]["n_dropped"] >= 50
     assert rows["2_minhash"]["n_dropped"] >= 50
     assert rows["3_semantic"]["n_dropped"] >= 40
-
-
-def test_salted_cluster_pairs_equal_naive_on_hot_cluster(spark):
-    """The hot-cluster skew guard must be a pure re-distribution: on a
-    deliberately skewed assignment (one cluster holding 60% of all
-    members — the '10% of the corpus on one centroid' failure mode,
-    exaggerated), salted_within_cluster_pairs at a small ceiling must
-    produce EXACTLY the naive cluster_id self-join's pair set, while
-    bounding every chunk block at ceiling²."""
-    from pyspark.sql import functions as F
-
-    from etl_builder_spark.llm.embed_dedup import salted_within_cluster_pairs
-
-    # 100 members: cluster 0 is hot (60), clusters 1..4 get 10 each
-    rows = [(i, 0 if i < 60 else 1 + (i - 60) // 10) for i in range(100)]
-    n_small = 4
-    members = spark.createDataFrame(rows, "vec_id int, cluster_id int")
-
-    naive = (
-        members.alias("a")
-        .join(members.alias("b"), "cluster_id")
-        .where(F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(
-            "cluster_id",
-            F.col("a.vec_id").alias("id_a"),
-            F.col("b.vec_id").alias("id_b"),
-        )
-    )
-    want = sorted(map(tuple, naive.collect()))
-    assert len(want) == (60 * 59) // 2 + n_small * (10 * 9) // 2
-
-    for ceiling in (7, 16, 64):
-        got_df = salted_within_cluster_pairs(members, ceiling=ceiling)
-        got = sorted(map(tuple, got_df.collect()))
-        assert got == want, f"ceiling={ceiling}: pair set diverged"
-
-    # the guard's bound: no (cluster, chunk_a, chunk_b) block exceeds
-    # ceiling² pairs — the per-task fan-out cap that kills the skew
-    ceiling = 7
-    chunk_of = {}
-    for cid in range(5):
-        ids = sorted(r for r, c in rows if c == cid)
-        for rank, vid in enumerate(ids):
-            chunk_of[vid] = rank // ceiling
-    from collections import Counter
-
-    per_block = Counter(
-        (c, chunk_of[a], chunk_of[b])
-        for c, a, b in want
-    )
-    assert max(per_block.values()) <= ceiling * ceiling
 
 
 def test_containment_catches_excerpts_jaccard_misses(spark):
@@ -1120,43 +1007,6 @@ def test_kmeans_lloyd_exact_matches_numpy_trajectory(spark):
     for c in expect:
         assert got[c][0] == expect[c][0], (c, got[c], expect[c])
         assert abs(got[c][1] - expect[c][1]) < 1e-5, (c, got[c], expect[c])
-
-
-def test_salted_pairs_string_blocks_hot_block(spark):
-    """The linkage family keys the chunked-triangle guard by STRING
-    block keys (name substrings — operators/fuzzy.py), unlike
-    SemDeDup's int cluster ids.  On a deliberately hot block (one
-    8-char key owning 70% of all records, the 'common surname' failure
-    mode) the guard must still produce EXACTLY the naive block
-    theta-join's pair set at any ceiling."""
-    from pyspark.sql import functions as F
-
-    from etl_builder_spark.llm.embed_dedup import salted_within_cluster_pairs
-
-    rows = [
-        ("AAAAAAAA" if i < 70 else f"BLOCK{i % 5:03d}", i) for i in range(100)
-    ]
-    members = spark.createDataFrame(rows, "cluster_id string, c_custkey int")
-
-    naive = (
-        members.alias("a")
-        .join(members.alias("b"), "cluster_id")
-        .where(F.col("a.c_custkey") < F.col("b.c_custkey"))
-        .select(
-            "cluster_id",
-            F.col("a.c_custkey").alias("id_a"),
-            F.col("b.c_custkey").alias("id_b"),
-        )
-    )
-    want = sorted(map(tuple, naive.collect()))
-    assert len(want) == (70 * 69) // 2 + 5 * (6 * 5) // 2
-
-    for ceiling in (7, 64):
-        got_df = salted_within_cluster_pairs(
-            members, ceiling=ceiling, id_col="c_custkey"
-        )
-        got = sorted(map(tuple, got_df.collect()))
-        assert got == want, f"ceiling={ceiling}: pair set diverged"
 
 
 banded_rows = st.lists(
